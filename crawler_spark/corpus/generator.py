@@ -222,7 +222,9 @@ def make_corpus(
 
 
 def write_corpus(outdir: str, **kwargs) -> dict[str, str]:
-    """Write corpus tables as parquet; returns {table: path}."""
+    """Write corpus tables as parquet; returns {table: path}. Timestamps are
+    written in microseconds: pyarrow's default for pandas input is
+    TIMESTAMP(NANOS), which Spark's parquet reader rejects."""
     import os
 
     import pyarrow as pa
@@ -233,6 +235,8 @@ def write_corpus(outdir: str, **kwargs) -> dict[str, str]:
     paths = {}
     for name, df in tables.items():
         path = os.path.join(outdir, f"{name}.parquet")
-        pq.write_table(pa.Table.from_pandas(df, preserve_index=False), path)
+        pq.write_table(
+            pa.Table.from_pandas(df, preserve_index=False), path, coerce_timestamps="us"
+        )
         paths[name] = path
     return paths

@@ -265,6 +265,8 @@ class CuckooState:
     accept either; adds :meth:`delete` for recrawl expiry.
     """
 
+    schema = CUCKOO_SCHEMA
+
     def __init__(self, n_buckets: int = 32, table_buckets: int = 1 << 14):
         assert table_buckets & (table_buckets - 1) == 0, "power of two"
         self.n_buckets = n_buckets

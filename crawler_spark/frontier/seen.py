@@ -96,6 +96,8 @@ def bloom_test_expr(url_hash: F.Column, bitmap: F.Column, n_bits: int) -> F.Colu
 class BloomState:
     """Partitioned Bloom filter over ``url_hash`` keyed by host bucket."""
 
+    schema = BLOOM_SCHEMA
+
     def __init__(self, n_buckets: int = 32, bits_per_bucket: int = 1 << 16):
         assert bits_per_bucket % 64 == 0
         self.n_buckets = n_buckets

@@ -1069,10 +1069,11 @@ def frame_sample(data: bytes, every_n: int = 10, allow_stub: bool = False) -> li
 
 
 def resize_image(data: bytes, width: int, height: int, allow_stub: bool = False) -> bytes:
-    """Resize an image to width×height. BMP and PNG input take the REAL
-    path — :func:`decode_pixels` → :func:`resize_nearest` → re-encode in
-    the source format on actual pixels. Remaining compressed formats
-    (JPEG/WebP) would need PIL/opencv, absent here — stubbed behind
+    """Resize an image to width×height. BMP, PNG and baseline JPEG input
+    take the REAL path — decode → :func:`resize_nearest` → re-encode in
+    the source format on actual pixels (JPEG through this module's own
+    :func:`jpeg_decode` / :func:`jpeg_encode`). Remaining compressed formats
+    (WebP/AVIF) would need PIL/opencv, absent here — stubbed behind
     ``allow_stub`` with the same (bytes,w,h)→bytes contract."""
     if data[:2] == b"BM":
         return bmp_encode(resize_nearest(bmp_decode(data), width, height))

@@ -34,7 +34,6 @@ Scale notes (10^10-URL frontier):
 from __future__ import annotations
 
 import json
-import logging
 import os
 from dataclasses import dataclass, field
 
@@ -82,6 +81,15 @@ SEEN_SCHEMA = StructType(
     ]
 )
 
+SCHEDULE_DDL = "round int, url string, host string, priority int, seq long, fetched boolean"
+METRICS_DDL = (
+    "round int, bucket int, scheduled long, fetch_ok long, admitted long, url_sketch binary"
+)
+
+# rows per part file of a state snapshot whose row count the driver knows
+# (see _snapshot): a round of a few hundred frontier rows writes one file
+SNAPSHOT_ROWS_PER_PART = 2048
+
 
 @dataclass
 class CrawlConfig:
@@ -99,16 +107,18 @@ class CrawlConfig:
     seen_filter: str = "bloom"
     cuckoo_table_buckets: int = 1 << 12
     state_partitions: int = 0  # 0 → n_buckets
-    # fetch-as-join strategy. "broadcast": collect+broadcast the scheduled
-    # set, probe the corpus map-side — right when rounds are budget-bounded
-    # SMALL (the driver-side broadcast build is serial, so it must not grow
-    # with frontier size). "bucketed": the corpus is persisted
-    # hash-partitioned by url_canon (the local stand-in for an Iceberg
-    # table stored with a bucket(url_canon, N) transform — bucketing is
-    # paid once at write time, reused every round) and the fetch is a
-    # co-partitioned shuffled-hash join where ONLY the scheduled keys move;
-    # nothing serial scales with the round, which is what keeps N→4N
-    # efficiency at 10^6+-scheduled rounds (see BENCH.md).
+    # fetch-as-join strategy. Both arms join against the same canonical
+    # corpus, canonicalized and persisted once per crawl (_canonical_corpus).
+    # "broadcast": collect+broadcast the scheduled set, probe the corpus
+    # map-side — right when rounds are budget-bounded SMALL (the driver-side
+    # broadcast build is serial, so it must not grow with frontier size).
+    # "bucketed": the corpus is hash-partitioned by url_canon before it is
+    # persisted (the local stand-in for an Iceberg table stored with a
+    # bucket(url_canon, N) transform — bucketing is paid once at write time,
+    # reused every round) and the fetch is a co-partitioned shuffled-hash
+    # join where ONLY the scheduled keys move; nothing serial scales with
+    # the round, which is what keeps N→4N efficiency at 10^6+-scheduled
+    # rounds (see BENCH.md).
     fetch_join: str = "broadcast"
     corpus_buckets: int = 128
     # compact the append-only seen delta log whenever it reaches this many
@@ -235,10 +245,14 @@ def _assign_seq(allowed: DataFrame, seq_offset: int, round_added: int) -> DataFr
     ).sortWithinPartitions("first_occ_a", "first_occ_b")
     ranged = ranged.withColumn("_pid", F.spark_partition_id())
     ranged.persist()
-    sizes = {
-        r["_pid"]: r["n"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
+    try:
+        sizes = {
+            r["_pid"]: r["n"]
+            for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
+        }
+    except BaseException:
+        ranged.unpersist()
+        raise
     offsets, acc = {}, seq_offset
     for pid in sorted(sizes):
         offsets[pid] = acc
@@ -267,6 +281,69 @@ def _assign_seq(allowed: DataFrame, seq_offset: int, round_added: int) -> DataFr
     return out
 
 
+def _canonical_corpus(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """The fetch side of every round: ``pages`` projected to ``(url_canon,
+    html)``, canonicalized ONCE per crawl and persisted (at scale this is the
+    Iceberg pages table, already stored canonical). Left lazy, every round's
+    fetch join would re-run the ``canon_expr`` UDF over the whole corpus.
+    ``fetch_join="bucketed"`` also hash-partitions it by ``url_canon``
+    before persisting (see ``CrawlConfig.fetch_join``).
+
+    The round's frontier-size arithmetic relies on the pages-table contract
+    that ``url_canon`` is unique; the job that materializes the cache checks
+    it and raises ``ValueError`` naming a duplicate key. The caller owns the
+    cache and unpersists it when the crawl ends."""
+    corpus = pages.select(
+        canon_expr(F.col("url")).alias("url_canon"), F.col("html").cast("string").alias("html")
+    )
+    if cfg.fetch_join == "bucketed":
+        corpus = corpus.repartition(cfg.corpus_buckets, "url_canon")
+    corpus.persist()
+    try:
+        # one global row (the smallest duplicate key, or null): no incremental
+        # limit scans over the partitions
+        dup = (
+            corpus.groupBy("url_canon")
+            .agg(F.count("*").alias("n"))
+            .filter(F.col("n") > 1)
+            .agg(F.min(F.struct("url_canon", "n")).alias("dup"))
+            .collect()[0]["dup"]
+        )
+        if dup is not None:
+            raise ValueError(
+                f"pages corpus breaks the unique-url_canon contract: {dup['url_canon']!r} "
+                f"is the canonical url of {dup['n']} pages"
+            )
+    except BaseException:
+        corpus.unpersist()
+        raise
+    return corpus
+
+
+def _fetch_join(corpus: DataFrame, scheduled: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """Fetch-as-join: the scheduled rows whose page is in the corpus, with
+    its html.
+
+    ``"broadcast"``: the scheduled set is budget-bounded (≤ hosts ×
+    max_fetches_per_round), so broadcast it and probe the html-bearing
+    corpus MAP-SIDE — the corpus, whose rows carry the page bodies, is
+    never shuffled (a sort-merge join here ships the whole corpus through
+    the shuffle every round). At warehouse scale the broadcast doubles as a
+    runtime filter pruning the Iceberg scan. ``"bucketed"``: a
+    co-partitioned shuffled-hash join against the bucketed corpus — only
+    the scheduled keys shuffle, the html side joins in place."""
+    if cfg.fetch_join == "bucketed":
+        sched_b = scheduled.repartition(cfg.corpus_buckets, "url_canon")
+        return corpus.join(sched_b.hint("shuffle_hash"), "url_canon", "inner")
+    return corpus.join(F.broadcast(scheduled), "url_canon", "inner")
+
+
+def _release(caches: list[DataFrame]) -> None:
+    for df in caches:
+        df.unpersist()
+    caches.clear()
+
+
 def crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -277,9 +354,9 @@ def crawl(
     resume: bool = False,
 ) -> CrawlResult:
     """Run the BSP crawl. ``pages(url, html, …)`` is the corpus (fetch =
-    equi-join on canonical url); ``seeds(url, priority, seq)``;
-    ``robots(host, disallow_prefixes)``; ``politeness(host,
-    max_fetches_per_round)``."""
+    equi-join on canonical url; ``ValueError`` if two pages share one);
+    ``seeds(url, priority, seq)``; ``robots(host, disallow_prefixes)``;
+    ``politeness(host, max_fetches_per_round)``."""
     nparts = cfg.state_partitions or cfg.n_buckets
     if not cfg.use_bloom:
         bloom_state = None
@@ -288,328 +365,293 @@ def crawl(
     else:
         bloom_state = BloomState(cfg.n_buckets, cfg.bits_per_bucket)
 
-    # corpus keyed by canonical url — computed once; at scale this is the
-    # Iceberg pages table, already stored canonical.
-    corpus = pages.withColumn("url_canon", canon_expr(F.col("url"))).select(
-        "url_canon", F.col("html").cast("string").alias("html")
-    )
-    if cfg.fetch_join == "bucketed":
-        # stored-bucketed table stand-in: partition once, reuse every round
-        corpus = corpus.repartition(cfg.corpus_buckets, "url_canon").persist()
-
     empty_robots = robots is None
     if politeness is None:
         politeness = spark.createDataFrame(
             [], "host string, max_fetches_per_round int"
         )
 
-    manifest = read_manifest(cfg.checkpoint_dir) if resume else None
-    if manifest is not None:
-        start_round = manifest["next_round"]
-        seq_offset = manifest["seq_offset"]
-        frontier = spark.read.parquet(manifest["frontier_path"])
-        # pre-change manifests lack frontier_size → one count at resume only
-        frontier_size = manifest.get("frontier_size")
-        if frontier_size is None:
-            frontier_size = frontier.count()
-        seen_paths = manifest.get("seen_paths") or [manifest["seen_path"]]
-        seen = spark.read.parquet(*seen_paths)
-        bloom = (
-            spark.read.parquet(manifest["bloom_path"])
-            if cfg.use_bloom and manifest.get("bloom_path")
-            else (bloom_state.empty(spark) if bloom_state else None)
-        )
-    else:
-        start_round = 0
-        seeds_c = _prepare_seeds(spark, seeds, cfg)
-        if not empty_robots:
-            allowed = robots_allowed(seeds_c, robots)
+    corpus = _canonical_corpus(pages, cfg)
+    # the caches the crawl holds at any moment besides the corpus; released
+    # at the end of each round, and on the way out if a round raises
+    caches: list[DataFrame] = []
+    try:
+        manifest = read_manifest(cfg.checkpoint_dir) if resume else None
+        if manifest is not None:
+            start_round = manifest["next_round"]
+            seq_offset = manifest["seq_offset"]
+            frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(manifest["frontier_path"])
+            # pre-change manifests lack frontier_size → one count at resume only
+            frontier_size = manifest.get("frontier_size")
+            if frontier_size is None:
+                frontier_size = frontier.count()
+            seen_paths = manifest.get("seen_paths") or [manifest["seen_path"]]
+            seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths)
+            bloom = (
+                spark.read.schema(bloom_state.schema).parquet(manifest["bloom_path"])
+                if cfg.use_bloom and manifest.get("bloom_path")
+                else (bloom_state.empty(spark) if bloom_state else None)
+            )
         else:
-            allowed = seeds_c
-        frontier = _assign_seq(allowed, 0, 0)
-        # free by-product of _assign_seq's offsets collect — no count() job
-        seq_offset = frontier._assign_seq_total
-        seed_cache = getattr(frontier, "_assign_seq_cache", None)
-        seen = seeds_c.select("url_hash", "bucket", "url_canon")
-        bloom = bloom_state.empty(spark) if bloom_state else None
-        if bloom_state is not None:
-            bloom = bloom_state.merge(bloom, seen.select("bucket", "url_hash"))
-        # round-0 checkpoint of initial state
-        frontier = _snapshot(spark, frontier, _ckpt(cfg, -1, "frontier"), nparts)
-        if seed_cache is not None:
-            seed_cache.unpersist()
-        # seen is an append-only DELTA LOG: each round writes only its newly
-        # admitted urls; the live table is a multi-path read. A full-table
-        # rewrite per round would be O(|seen-so-far|) — the dominant write at
-        # 10^10 URLs — where the delta is O(|new this round|). With Iceberg
-        # the delta write is writeTo(seen).append() on the same snapshot.
-        seen = _snapshot(spark, seen, _ckpt(cfg, -1, "seen"), nparts)
-        seen_paths = [_ckpt(cfg, -1, "seen")]
-        if bloom is not None:
-            bloom = _snapshot(spark, bloom, _ckpt(cfg, -1, "bloom"), 1)
-        frontier_size = seq_offset  # every admitted seed is a frontier row
-        _write_manifest(
-            cfg,
-            {
-                "next_round": 0,
-                "seq_offset": seq_offset,
-                "frontier_size": frontier_size,
-                "frontier_path": _ckpt(cfg, -1, "frontier"),
-                "seen_paths": seen_paths,
-                "bloom_path": _ckpt(cfg, -1, "bloom") if bloom is not None else None,
-            },
-        )
+            start_round = 0
+            seeds_c = _prepare_seeds(spark, seeds, cfg)
+            if not empty_robots:
+                allowed = robots_allowed(seeds_c, robots)
+            else:
+                allowed = seeds_c
+            frontier = _assign_seq(allowed, 0, 0)
+            caches.append(frontier._assign_seq_cache)
+            # free by-product of _assign_seq's offsets collect — no count() job
+            seq_offset = frontier._assign_seq_total
+            seen = seeds_c.select("url_hash", "bucket", "url_canon")
+            bloom = bloom_state.empty(spark) if bloom_state else None
+            if bloom_state is not None:
+                bloom = bloom_state.merge(bloom, seen.select("bucket", "url_hash"))
+            # round-0 checkpoint of initial state
+            frontier = _snapshot(spark, frontier, _ckpt(cfg, -1, "frontier"), nparts, rows=seq_offset)
+            _release(caches)
+            # seen is an append-only DELTA LOG: each round writes only its newly
+            # admitted urls; the live table is a multi-path read. A full-table
+            # rewrite per round would be O(|seen-so-far|) — the dominant write at
+            # 10^10 URLs — where the delta is O(|new this round|). With Iceberg
+            # the delta write is writeTo(seen).append() on the same snapshot.
+            # Sized by the admitted seeds: robots-blocked seeds are seen too, so
+            # this undercounts by at most the blocked ones.
+            seen = _snapshot(spark, seen, _ckpt(cfg, -1, "seen"), nparts, rows=seq_offset)
+            seen_paths = [_ckpt(cfg, -1, "seen")]
+            if bloom is not None:
+                bloom = _snapshot(spark, bloom, _ckpt(cfg, -1, "bloom"), 1)
+            frontier_size = seq_offset  # every admitted seed is a frontier row
+            _write_manifest(
+                cfg,
+                {
+                    "next_round": 0,
+                    "seq_offset": seq_offset,
+                    "frontier_size": frontier_size,
+                    "frontier_path": _ckpt(cfg, -1, "frontier"),
+                    "seen_paths": seen_paths,
+                    "bloom_path": _ckpt(cfg, -1, "bloom") if bloom is not None else None,
+                },
+            )
 
-    # static per crawl — computing it inside the loop would add a driver
-    # collect job per round (pure flat cost against N→4N efficiency)
-    cap = politeness_cap(politeness, cfg.default_budget)
+        # static per crawl — computing it inside the loop would add a driver
+        # collect job per round (pure flat cost against N→4N efficiency)
+        cap = politeness_cap(politeness, cfg.default_budget)
 
-    rnd = start_round
-    while rnd < cfg.max_rounds:
-        # emptiness by driver arithmetic, not a per-round probe job:
-        # |frontier_next| = |frontier| − |scheduled| + |admitted|, all three
-        # maintained from collects the round already pays for (the
-        # _assign_seq offsets collect and the metrics snapshot read)
-        # <= not ==: the arithmetic assumes the corpus is unique per
-        # url_canon (the pages-table contract); a violating corpus would
-        # overcount n_scheduled and drift the size negative — degrade to
-        # stopping rather than spinning empty rounds until max_rounds
-        if frontier_size <= 0:
-            if frontier_size < 0:
-                # impossible under the contract — a duplicate-url_canon
-                # corpus double-counted n_scheduled. Stop (don't spin empty
-                # rounds), but leave an operator-visible trail: without this
-                # a truncated crawl is indistinguishable from a completed one.
-                logging.getLogger(__name__).warning(
-                    "frontier_size=%d went negative at round %d — the pages "
-                    "corpus violates the unique-url_canon contract "
-                    "(duplicate rows inflate n_scheduled); stopping early",
-                    frontier_size,
-                    rnd,
-                )
-                man = read_manifest(cfg.checkpoint_dir) or {}
-                man["frontier_size_negative"] = frontier_size
-                man["frontier_size_negative_round"] = rnd
-                _write_manifest(cfg, man)
-            break
+        rnd = start_round
+        while rnd < cfg.max_rounds:
+            # emptiness by driver arithmetic, not a per-round probe job:
+            # |frontier_next| = |frontier| − |scheduled| + |admitted|, all three
+            # maintained from collects the round already pays for (the
+            # _assign_seq offsets collect and the metrics observation). Exact
+            # because the corpus is unique per url_canon (_canonical_corpus).
+            if frontier_size <= 0:
+                break
 
-        scheduled, deferred = apply_politeness_budget(
-            frontier, politeness, cfg.default_budget, cap=cap
-        )
-        # reused by the fetch join, the miss anti-join, AND deferred's
-        # frontier∖scheduled anti-join — cache the window output once
-        scheduled.persist()
+            scheduled, deferred = apply_politeness_budget(
+                frontier, politeness, cfg.default_budget, cap=cap
+            )
+            # reused by the fetch join, the miss anti-join, AND deferred's
+            # frontier∖scheduled anti-join — cache the window output once
+            scheduled.persist()
+            caches.append(scheduled)
 
-        # Fetch-as-join. The scheduled set is budget-bounded (≤ hosts ×
-        # max_fetches_per_round), so broadcast it and probe the html-bearing
-        # corpus MAP-SIDE — the corpus, whose rows carry the page bodies, is
-        # never shuffled (a sort-merge join here ships the whole corpus
-        # through the shuffle every round). At warehouse scale the broadcast
-        # doubles as a runtime filter pruning the Iceberg scan. Left-outer
-        # semantics (miss = fetch failure) are recovered with a cheap
-        # anti-join of the two small sides.
-        if cfg.fetch_join == "bucketed":
-            # co-partitioned shuffled-hash join against the stored-bucketed
-            # corpus: only the scheduled keys shuffle, the html side joins
-            # in place (see CrawlConfig.fetch_join). miss derives from the
+            # Left-outer semantics (miss = fetch failure) are recovered with a
+            # cheap anti-join of the two small sides; miss derives from the
             # PERSISTED ok so the anti-join reads the cache, not a re-join.
-            sched_b = scheduled.repartition(cfg.corpus_buckets, "url_canon")
-            ok = corpus.join(
-                sched_b.hint("shuffle_hash"), "url_canon", "inner"
-            ).withColumn("fetched", F.lit(True))
+            ok = _fetch_join(corpus, scheduled, cfg).withColumn("fetched", F.lit(True))
             ok.persist()
-            miss_src = sched_b.join(
-                ok.select("url_canon").hint("shuffle_hash"), "url_canon", "left_anti"
+            caches.append(ok)
+            if cfg.fetch_join == "bucketed":
+                miss_src = scheduled.repartition(cfg.corpus_buckets, "url_canon").join(
+                    ok.select("url_canon").hint("shuffle_hash"), "url_canon", "left_anti"
+                )
+            else:
+                miss_src = scheduled.join(
+                    F.broadcast(ok.select("url_canon")), "url_canon", "left_anti"
+                )
+            miss = (
+                miss_src
+                .withColumn("html", F.lit(None).cast("string"))
+                .withColumn("fetched", F.lit(False))
             )
-        else:
-            ok = corpus.join(F.broadcast(scheduled), "url_canon", "inner").withColumn(
-                "fetched", F.lit(True)
-            )
-            ok.persist()
-            miss_src = scheduled.join(
-                F.broadcast(ok.select("url_canon")), "url_canon", "left_anti"
-            )
-        miss = (
-            miss_src
-            .withColumn("html", F.lit(None).cast("string"))
-            .withColumn("fetched", F.lit(False))
-        )
-        fetched = ok.unionByName(miss.select(*ok.columns))
-        fetched.persist()
+            fetched = ok.unionByName(miss.select(*ok.columns))
+            fetched.persist()
+            caches.append(fetched)
 
-        schedule_log = fetched.select(
-            F.lit(rnd).alias("round"),
-            F.col("url_canon").alias("url"),
-            "host",
-            "priority",
-            "seq",
-            "fetched",
-        )
-        _write_state(schedule_log, _ckpt(cfg, rnd, "schedule"))
-
-        # outlink expansion: order key = (parent rank in schedule, position).
-        # Repartition before the Arrow UDF: outlink parsing is priced per
-        # row (Python regex/pandas), not per byte, so AQE's byte-targeted coalescing
-        # under-parallelizes it on small rounds; the round's parent set is
-        # bounded by the fetch budget, so this shuffle is cheap at any scale.
-        parents = fetched.filter(F.col("fetched")).select(
-            F.col("priority").alias("parent_priority"),
-            F.col("seq").alias("parent_seq"),
-            "url_canon",
-            "html",
-        ).repartition(spark.sparkContext.defaultParallelism)
-        # flat mapInPandas expansion: href scan stays JVM-side, no per-page
-        # list rebuild + re-explode (see frontier.canon.flat_outlinks)
-        links = flat_outlinks(parents, ["parent_priority", "parent_seq"])
-        # first-occurrence order across the batch follows the schedule order
-        # (parent_priority, parent_seq), then in-page position — encode the
-        # pair (priority, seq) into one sortable long: seq is globally unique
-        # and priority orders before seq in scheduling, so keep both columns.
-        cands = links.select(
-            F.col("child_url").alias("url_canon"),
-            F.lit(0).alias("priority"),
-            (F.col("parent_priority").cast("long") * F.lit(1 << 40) + F.col("parent_seq"))
-            .alias("first_occ_a"),
-            F.col("pos").cast("long").alias("first_occ_b"),
-        )
-        # host/bucket/url_hash derived post-dedup inside _dedup_candidates —
-        # the admission exchange carries only (url_canon, priority, occ)
-        cands = _dedup_candidates(cands, cfg.n_buckets)
-
-        fresh = filter_unseen(cands, seen, bloom, bloom_state)
-        fresh.persist()
-        if not empty_robots:
-            admitted = robots_allowed(fresh, robots)
-        else:
-            admitted = fresh
-        new_entries = _assign_seq(admitted, seq_offset, rnd + 1)
-
-        # --- metrics (per-partition lineage counters) -----------------------
-        m_sched = fetched.groupBy("bucket").agg(
-            F.count("*").alias("scheduled"),
-            F.sum(F.col("fetched").cast("long")).alias("fetch_ok"),
-        )
-        # url_sketch: per-bucket HLL of admitted URLs — mergeable lineage
-        # (hll_union_agg across any rounds/buckets → distinct-URL estimate
-        # with no rescan of any round's frontier; see frontier/seen.py)
-        m_new = new_entries.groupBy("bucket").agg(
-            F.count("*").alias("admitted"),
-            F.hll_sketch_agg(F.col("url_canon"), F.lit(12)).alias("url_sketch"),
-        )
-        metrics = (
-            m_sched.join(m_new, "bucket", "full")
-            .select(
+            schedule_log = fetched.select(
                 F.lit(rnd).alias("round"),
-                "bucket",
-                F.coalesce("scheduled", F.lit(0)).alias("scheduled"),
-                F.coalesce("fetch_ok", F.lit(0)).alias("fetch_ok"),
-                F.coalesce("admitted", F.lit(0)).alias("admitted"),
-                "url_sketch",
+                F.col("url_canon").alias("url"),
+                "host",
+                "priority",
+                "seq",
+                "fetched",
             )
-        )
-        # per-round scheduled total rides the metrics WRITE job as an
-        # observation (CollectMetrics) — feeds the driver-side frontier-size
-        # arithmetic that replaced the per-round limit(1).count() emptiness
-        # probe, with zero extra jobs (previously a re-read+agg of the
-        # just-written snapshot was one more tiny job per round).
-        obs = Observation(f"round_{rnd}_metrics")
-        metrics = metrics.observe(obs, F.sum("scheduled").alias("n_scheduled"))
-        _write_state(metrics, _ckpt(cfg, rnd, "metrics"))
-        n_scheduled = obs.get["n_scheduled"] or 0
+            _write_state(schedule_log, _ckpt(cfg, rnd, "schedule"))
 
-        # --- next-round state -----------------------------------------------
-        new_seen = fresh.select("url_hash", "bucket", "url_canon")
-        frontier_next = deferred.select(*[f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
-            new_entries.select(*[f.name for f in FRONTIER_SCHEMA.fields])
-        )
-        if bloom_state is not None:
-            bloom_next = bloom_state.merge(bloom, new_seen.select("bucket", "url_hash"))
-        else:
-            bloom_next = None
-
-        frontier = _snapshot(spark, frontier_next, _ckpt(cfg, rnd, "frontier"), nparts)
-        # append-only seen delta: write THIS round's admissions, re-read the
-        # whole log (see init comment — O(new) write, not O(total))
-        _snapshot(spark, new_seen, _ckpt(cfg, rnd, "seen"), nparts)
-        seen_paths = seen_paths + [_ckpt(cfg, rnd, "seen")]
-        if len(seen_paths) >= cfg.seen_compact_every:
-            # delta-log compaction: one bucketed snapshot replaces the log
-            seen = _snapshot(
-                spark, spark.read.parquet(*seen_paths), _ckpt(cfg, rnd, "seen_compacted"), nparts
+            # outlink expansion: order key = (parent rank in schedule, position).
+            # Repartition before the Arrow UDF: outlink parsing is priced per
+            # row (Python regex/pandas), not per byte, so AQE's byte-targeted coalescing
+            # under-parallelizes it on small rounds; the round's parent set is
+            # bounded by the fetch budget, so this shuffle is cheap at any scale.
+            parents = fetched.filter(F.col("fetched")).select(
+                F.col("priority").alias("parent_priority"),
+                F.col("seq").alias("parent_seq"),
+                "url_canon",
+                "html",
+            ).repartition(spark.sparkContext.defaultParallelism)
+            # flat mapInPandas expansion: href scan stays JVM-side, no per-page
+            # list rebuild + re-explode (see frontier.canon.flat_outlinks)
+            links = flat_outlinks(parents, ["parent_priority", "parent_seq"])
+            # first-occurrence order across the batch follows the schedule order
+            # (parent_priority, parent_seq), then in-page position — encode the
+            # pair (priority, seq) into one sortable long: seq is globally unique
+            # and priority orders before seq in scheduling, so keep both columns.
+            cands = links.select(
+                F.col("child_url").alias("url_canon"),
+                F.lit(0).alias("priority"),
+                (F.col("parent_priority").cast("long") * F.lit(1 << 40) + F.col("parent_seq"))
+                .alias("first_occ_a"),
+                F.col("pos").cast("long").alias("first_occ_b"),
             )
-            seen_paths = [_ckpt(cfg, rnd, "seen_compacted")]
-        else:
-            seen = spark.read.parquet(*seen_paths)
-        if bloom_next is not None:
-            bloom = _snapshot(spark, bloom_next, _ckpt(cfg, rnd, "bloom"), 1)
-        n_admitted = new_entries._assign_seq_total  # from the offsets collect
-        seq_offset += n_admitted
-        frontier_size = frontier_size - n_scheduled + n_admitted
-        fetched.unpersist()
-        ok.unpersist()
-        fresh.unpersist()
-        scheduled.unpersist()
-        cache = getattr(new_entries, "_assign_seq_cache", None)
-        if cache is not None:
-            cache.unpersist()
+            # host/bucket/url_hash derived post-dedup inside _dedup_candidates —
+            # the admission exchange carries only (url_canon, priority, occ)
+            cands = _dedup_candidates(cands, cfg.n_buckets)
 
-        _write_manifest(
-            cfg,
-            {
-                "next_round": rnd + 1,
-                "seq_offset": seq_offset,
-                "frontier_size": frontier_size,
-                "frontier_path": _ckpt(cfg, rnd, "frontier"),
-                "seen_paths": seen_paths,
-                "bloom_path": _ckpt(cfg, rnd, "bloom") if bloom_next is not None else None,
-            },
-        )
-        rnd += 1
+            fresh = filter_unseen(cands, seen, bloom, bloom_state)
+            fresh.persist()
+            caches.append(fresh)
+            if not empty_robots:
+                admitted = robots_allowed(fresh, robots)
+            else:
+                admitted = fresh
+            new_entries = _assign_seq(admitted, seq_offset, rnd + 1)
+            caches.append(new_entries._assign_seq_cache)
+            n_admitted = new_entries._assign_seq_total  # from the offsets collect
 
-    if cfg.fetch_join == "bucketed":
+            # --- metrics (per-partition lineage counters) -----------------------
+            m_sched = fetched.groupBy("bucket").agg(
+                F.count("*").alias("scheduled"),
+                F.sum(F.col("fetched").cast("long")).alias("fetch_ok"),
+            )
+            # url_sketch: per-bucket HLL of admitted URLs — mergeable lineage
+            # (hll_union_agg across any rounds/buckets → distinct-URL estimate
+            # with no rescan of any round's frontier; see frontier/seen.py)
+            m_new = new_entries.groupBy("bucket").agg(
+                F.count("*").alias("admitted"),
+                F.hll_sketch_agg(F.col("url_canon"), F.lit(12)).alias("url_sketch"),
+            )
+            metrics = (
+                m_sched.join(m_new, "bucket", "full")
+                .select(
+                    F.lit(rnd).alias("round"),
+                    "bucket",
+                    F.coalesce("scheduled", F.lit(0)).alias("scheduled"),
+                    F.coalesce("fetch_ok", F.lit(0)).alias("fetch_ok"),
+                    F.coalesce("admitted", F.lit(0)).alias("admitted"),
+                    "url_sketch",
+                )
+            )
+            # per-round scheduled total rides the metrics WRITE job as an
+            # observation (CollectMetrics) — feeds the driver-side frontier-size
+            # arithmetic that replaced the per-round limit(1).count() emptiness
+            # probe, with zero extra jobs (previously a re-read+agg of the
+            # just-written snapshot was one more tiny job per round).
+            obs = Observation(f"round_{rnd}_metrics")
+            metrics = metrics.observe(obs, F.sum("scheduled").alias("n_scheduled"))
+            _write_state(metrics, _ckpt(cfg, rnd, "metrics"))
+            n_scheduled = obs.get["n_scheduled"] or 0
+            frontier_size = frontier_size - n_scheduled + n_admitted
+
+            # --- next-round state -----------------------------------------------
+            new_seen = fresh.select("url_hash", "bucket", "url_canon")
+            frontier_next = deferred.select(*[f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
+                new_entries.select(*[f.name for f in FRONTIER_SCHEMA.fields])
+            )
+            if bloom_state is not None:
+                bloom_next = bloom_state.merge(bloom, new_seen.select("bucket", "url_hash"))
+            else:
+                bloom_next = None
+
+            frontier = _snapshot(
+                spark, frontier_next, _ckpt(cfg, rnd, "frontier"), nparts, rows=frontier_size
+            )
+            # append-only seen delta: write THIS round's admissions (see init
+            # comment — O(new) write, not O(total)); sized like the seed delta
+            _snapshot(spark, new_seen, _ckpt(cfg, rnd, "seen"), nparts, rows=n_admitted)
+            seen_paths = seen_paths + [_ckpt(cfg, rnd, "seen")]
+            if len(seen_paths) >= cfg.seen_compact_every:
+                # delta-log compaction: one bucketed snapshot replaces the log
+                seen = _snapshot(
+                    spark,
+                    spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths),
+                    _ckpt(cfg, rnd, "seen_compacted"),
+                    nparts,
+                )
+                seen_paths = [_ckpt(cfg, rnd, "seen_compacted")]
+            else:
+                seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths)
+            if bloom_next is not None:
+                bloom = _snapshot(spark, bloom_next, _ckpt(cfg, rnd, "bloom"), 1)
+            seq_offset += n_admitted
+            _release(caches)
+
+            _write_manifest(
+                cfg,
+                {
+                    "next_round": rnd + 1,
+                    "seq_offset": seq_offset,
+                    "frontier_size": frontier_size,
+                    "frontier_path": _ckpt(cfg, rnd, "frontier"),
+                    "seen_paths": seen_paths,
+                    "bloom_path": _ckpt(cfg, rnd, "bloom") if bloom_next is not None else None,
+                },
+            )
+            rnd += 1
+    finally:
+        _release(caches)
         corpus.unpersist()
-    schedule = spark.read.parquet(
-        *[
-            _ckpt(cfg, r, "schedule")
-            for r in range(rnd)
-            if os.path.exists(_ckpt(cfg, r, "schedule"))
-        ]
-    ) if rnd > 0 else spark.createDataFrame(
-        [], "round int, url string, host string, priority int, seq long, fetched boolean"
+
+    def read_rounds(name: str, ddl: str) -> DataFrame:
+        paths = [_ckpt(cfg, r, name) for r in range(rnd) if os.path.exists(_ckpt(cfg, r, name))]
+        return spark.read.schema(ddl).parquet(*paths) if paths else spark.createDataFrame([], ddl)
+
+    return CrawlResult(
+        schedule=read_rounds("schedule", SCHEDULE_DDL),
+        seen=seen,
+        metrics=read_rounds("metrics", METRICS_DDL),
+        rounds=rnd,
     )
-    metrics = spark.read.parquet(
-        *[
-            _ckpt(cfg, r, "metrics")
-            for r in range(rnd)
-            if os.path.exists(_ckpt(cfg, r, "metrics"))
-        ]
-    ) if rnd > 0 else spark.createDataFrame(
-        [],
-        "round int, bucket int, scheduled long, fetch_ok long, admitted long, "
-        "url_sketch binary",
-    )
-    return CrawlResult(schedule=schedule, seen=seen, metrics=metrics, rounds=rnd)
 
 
 def _snapshot(
-    spark: SparkSession, df: DataFrame, path: str, nparts: int
+    spark: SparkSession, df: DataFrame, path: str, nparts: int, rows: int | None = None
 ) -> DataFrame:
     """Write a state snapshot partitioned by host-bucket and read it back —
     truncates lineage (the BSP barrier) and doubles as the checkpoint.
     With Iceberg this becomes ``writeTo(...).createOrReplace()`` + snapshot
-    id in the manifest.
+    id in the manifest. The read-back carries ``df``'s schema, so it plans
+    without a schema-inference job.
 
     Skew kill (SURVEY §2.5): bucket = pmod(xxhash64(host), n) — a mega-host
     occupies ONE bucket, so partitioning state by bucket alone would write
     that host's whole frontier through one task. Salting with the row's own
     ``url_hash`` spreads a hot bucket across tasks while keeping rows of a
     bucket addressable (the salt is a function of columns already in the
-    row, so any reader can re-derive the layout)."""
+    row, so any reader can re-derive the layout).
+
+    ``rows``, when the driver knows the snapshot's row count (or a close
+    lower bound), sizes the write: ``min(nparts, ceil(rows /
+    SNAPSHOT_ROWS_PER_PART))`` partitions, so a small round writes one part
+    file instead of ``nparts`` near-empty ones. The (bucket, salt) layout is
+    kept at any count — a slot never spans part files."""
+    if rows is not None:
+        nparts = max(1, min(nparts, -(-rows // SNAPSHOT_ROWS_PER_PART)))
     cols = df.columns
-    if "bucket" in cols and nparts > 1:
+    if "bucket" in cols and (nparts > 1 or rows is not None):
         if "url_hash" in cols:
             df = df.repartition(nparts, "bucket", F.pmod("url_hash", F.lit(16)))
         else:
             df = df.repartition(nparts, "bucket")
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)

@@ -285,3 +285,126 @@ def test_checkpoint_layout_iceberg_migration_contract(spark, corpus, tmp_path_fa
         .count()
     )
     assert spans == 0
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_duplicate_url_canon_corpus_fails_loudly(spark, corpus, tmp_path_factory):
+    """Two pages with one canonical url break the fetch join's contract
+    (each scheduled url fetches at most one page): crawl init and resume
+    both raise, naming the key, and leave no cache behind."""
+    _, seeds, robots, politeness = _spark_inputs(spark, corpus)
+    dup = spark.createDataFrame(
+        [
+            ("https://Host1.example/p/1", "<html>a</html>"),
+            ("https://host1.example/p/1#top", "<html>b</html>"),
+        ],
+        "url string, html string",
+    )
+    before = _persisted(spark)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_dup"))
+    cfg = CrawlConfig(checkpoint_dir=ckpt, max_rounds=2, default_budget=16, n_buckets=8)
+    with pytest.raises(ValueError, match="'https://host1.example/p/1'"):
+        crawl(spark, dup, seeds, robots, politeness, cfg)
+    assert not os.path.exists(os.path.join(ckpt, "manifest.json"))
+
+    # a checkpoint written over a valid corpus, resumed over a broken one
+    pages = spark.createDataFrame(corpus["pages"])
+    crawl(spark, pages, seeds, robots, politeness, cfg)
+    with pytest.raises(ValueError, match="'https://host1.example/p/1'"):
+        crawl(spark, pages.select("url", "html").unionByName(dup), seeds, robots,
+              politeness, cfg, resume=True)
+    assert _persisted(spark) == before
+
+
+def test_failed_round_releases_caches(spark, corpus, tmp_path_factory, monkeypatch):
+    """A round that raises mid-way must not strand the crawl's caches
+    (corpus, scheduled, ok, fetched, fresh, the seq-assignment cache)."""
+    import crawler_spark.scheduler as sch
+
+    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
+    write_state = sch._write_state
+
+    def failing_write(df, path, *a, **k):
+        if f"{os.sep}round=1{os.sep}" in path:
+            raise RuntimeError("injected round-1 write failure")
+        return write_state(df, path, *a, **k)
+
+    monkeypatch.setattr(sch, "_write_state", failing_write)
+    before = _persisted(spark)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_fail"))
+    cfg = CrawlConfig(checkpoint_dir=ckpt, max_rounds=4, default_budget=16, n_buckets=8)
+    with pytest.raises(RuntimeError, match="injected"):
+        crawl(spark, pages, seeds, robots, politeness, cfg)
+    assert _persisted(spark) == before
+
+
+# Spark jobs of one steady round on this corpus (local[8], 8 shuffle
+# partitions): the budget this round shape was measured at.
+STEADY_ROUND_JOBS = 32
+
+
+def test_steady_round_job_budget(spark, corpus, tmp_path_factory):
+    """A steady round's job count, as the job-group difference between a
+    3-round and a 2-round crawl, stays within the pinned budget."""
+    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
+    sc = spark.sparkContext
+
+    def jobs(rounds):
+        group = f"steady-round-budget-{rounds}"
+        cfg = CrawlConfig(
+            checkpoint_dir=str(tmp_path_factory.mktemp(f"ckpt_jobs{rounds}")),
+            max_rounds=rounds, default_budget=16, n_buckets=8,
+        )
+        sc.setJobGroup(group, "steady-round job budget")
+        try:
+            assert crawl(spark, pages, seeds, robots, politeness, cfg).rounds == rounds
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    steady = jobs(3) - jobs(2)
+    assert 0 < steady <= STEADY_ROUND_JOBS, steady
+
+
+def _plan_nodes(plan):
+    """Node names of a plan tree, NOT descending into cached relations
+    (their plans ran when the cache was built)."""
+    names = [plan.nodeName()]
+    kids = plan.children()
+    for i in range(kids.size()):
+        names += _plan_nodes(kids.apply(i))
+    return names
+
+
+@pytest.mark.parametrize("fetch_join", ["broadcast", "bucketed"])
+def test_steady_round_fetch_reads_canonical_corpus_cache(
+    spark, corpus, tmp_path_factory, monkeypatch, fetch_join
+):
+    """The corpus is canonicalized once per crawl: a steady round's fetch
+    join reads it from the cache and evaluates no Python UDF
+    (ArrowEvalPython) on the corpus side."""
+    import crawler_spark.scheduler as sch
+
+    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
+    fetch_join_fn = sch._fetch_join
+    plans = []
+
+    def recording(corpus_df, scheduled, cfg):
+        ok = fetch_join_fn(corpus_df, scheduled, cfg)
+        plans.append(_plan_nodes(ok._jdf.queryExecution().optimizedPlan()))
+        return ok
+
+    monkeypatch.setattr(sch, "_fetch_join", recording)
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path_factory.mktemp(f"ckpt_fetchplan_{fetch_join}")),
+        max_rounds=3, default_budget=16, n_buckets=8,
+        fetch_join=fetch_join, corpus_buckets=16,
+    )
+    crawl(spark, pages, seeds, robots, politeness, cfg)
+    assert len(plans) == 3
+    steady = plans[2]
+    assert "ArrowEvalPython" not in steady, steady
+    assert "InMemoryRelation" in steady, steady

@@ -151,6 +151,20 @@ def test_state_snapshot_salting_spreads_hot_host(spark, tmp_path):
     assert max(sizes) < 4000, sizes
 
 
+def test_small_state_snapshot_writes_one_part_file(spark, tmp_path):
+    """A snapshot whose row count the driver passes in is sized by it: a
+    round of a few hundred rows writes one part file, not one per state
+    partition, and still reads back whole."""
+    import glob
+
+    from crawler_spark.scheduler import _snapshot
+
+    path = str(tmp_path / "state")
+    snap = _snapshot(spark, _frontier_df(spark), path, 8, rows=200)
+    assert len(glob.glob(f"{path}/part-*.parquet")) == 1
+    assert snap.count() == 200
+
+
 def test_bloom_probe_is_jvm_and_reuses_admission_exchange(spark):
     """The broadcast Bloom probe must stay PURE JVM (r3): an Arrow/pandas
     probe node hides the child's hash partitioning from the planner, which
