@@ -25,6 +25,14 @@ lxml is not available in this environment, so this module implements:
   (vendor/.../xmlpath/parser.go:45-60); first match = smallest document
   order (vendor/.../xmlpath/path.go:41-47).
 
+A path is compiled once per path string (:func:`compile_xpath`, cached):
+each step becomes a selection closure plus predicate closures, with every
+predicate operand compiled in turn, and evaluation runs only that compiled
+form — so a rule's path is tokenized once per process, not once per
+document and candidate node. A malformed path raises :class:`XPathError`
+(whether or not earlier steps match); a malformed predicate operand is an
+empty operand.
+
 Comment and processing-instruction nodes are kept in the tree and matched
 by ``comment()`` / ``processing-instruction([name])`` node tests ("all node
 types, except for namespace nodes", doc.go:17); their string-values follow
@@ -33,7 +41,9 @@ XPath §5.6-5.7 (the node's own content).
 
 from __future__ import annotations
 
+import functools
 import re
+from collections.abc import Callable
 from html.parser import HTMLParser
 
 VOID_ELEMENTS = frozenset(
@@ -297,7 +307,7 @@ def _ancestors(node: Node) -> list[Node]:
 
 def _axis_pool(ctx, axis: str) -> list:
     """Nodes on ``axis`` from ``ctx``, in AXIS order (reverse axes nearest
-    first so positional predicates count per spec; :func:`_evaluate`'s final
+    first so positional predicates count per spec; :func:`_run`'s final
     sort restores document order)."""
     if isinstance(ctx, AttrNode):
         # XPath: an attribute's parent is its owner element; it has no
@@ -368,90 +378,84 @@ _PI_TEST_RE = re.compile(
 )
 
 
-def _apply_test(pool: list, test: str) -> list:
-    """Filter an axis pool by a node test (principal node type = element).
-    Covers all node types but namespace, like the vendored engine
-    (vendor/.../xmlpath/doc.go:17): text(), comment(),
-    processing-instruction([name]), node(), *, and name tests."""
+def _compile_test(test: str) -> Callable[[list], list]:
+    """Compile a node test into a filter over an axis pool (principal node
+    type = element). Covers all node types but namespace, like the vendored
+    engine (vendor/.../xmlpath/doc.go:17): text(), comment(),
+    processing-instruction([name]), node(), *, and name tests. Attribute
+    pseudo-nodes (kind 3) match none of the typed tests."""
     if test == "text()":
-        return [n for n in pool if not isinstance(n, AttrNode) and n.kind == TEXT]
+        return lambda pool: [n for n in pool if n.kind == TEXT]
     if test == "comment()":
-        return [n for n in pool if not isinstance(n, AttrNode) and n.kind == COMMENT]
+        return lambda pool: [n for n in pool if n.kind == COMMENT]
     m = _PI_TEST_RE.match(test)
     if m:
         name = m.group(1)[1:-1] if m.group(1) else None
-        return [
-            n
-            for n in pool
-            if not isinstance(n, AttrNode)
-            and n.kind == PI
-            and (name is None or n.tag == name)
+        return lambda pool: [
+            n for n in pool if n.kind == PI and (name is None or n.tag == name)
         ]
     if test == "node()":
-        return list(pool)
+        return list
     if test == "*":
-        return [n for n in pool if not isinstance(n, AttrNode) and n.kind == ELEMENT]
-    return [
-        n for n in pool if not isinstance(n, AttrNode) and n.kind == ELEMENT and n.tag == test
-    ]
+        return lambda pool: [n for n in pool if n.kind == ELEMENT]
+    return lambda pool: [n for n in pool if n.kind == ELEMENT and n.tag == test]
 
 
-def _node_test(nodes: list[Node], axis: str | None, test: str, desc: bool) -> list[list[Node]]:
-    """Apply a node test per context node; returns per-context result lists
-    (grouping is required for positional predicates)."""
-    out: list[list[Node]] = []
-    for ctx in nodes:
-        if axis is not None:
-            # explicit axis step; under ``//`` the context first expands to
-            # descendant-or-self (flattened into the ctx's one group, doc
-            # order, matching the abbreviated ``//`` grouping below)
+def _attributes(bases: list, name: str) -> list:
+    """Attribute pseudo-nodes named ``name`` (``*`` = all) of the elements
+    in ``bases``."""
+    sel = []
+    for b in bases:
+        if b.kind == ELEMENT:
+            if name == "*":
+                sel.extend(AttrNode(b, k) for k in b.attrs)
+            elif name in b.attrs:
+                sel.append(AttrNode(b, name))
+    return sel
+
+
+def _abbrev_pools(ctx, desc: bool) -> tuple[list, list]:
+    """(pool with self, pool) of an abbreviated step: ``//x`` ≡
+    descendant-or-self::node()/child::x → all strict descendants, and
+    attributes additionally cover self."""
+    if desc:
+        with_self = list(ctx.iter_descendants())
+        return with_self, with_self[1:]
+    return [ctx], ctx.children
+
+
+def _compile_select(axis: str | None, test: str, desc: bool) -> Callable[[object], list]:
+    """Compile one step's axis + node test into ``ctx -> nodes``: the
+    per-context group that positional predicates count in."""
+    if axis == "attribute":
+        # under ``//`` the context first expands to descendant-or-self
+        # (flattened into the ctx's one group, doc order, matching the
+        # abbreviated ``//`` grouping below)
+        return lambda ctx: _attributes(list(ctx.iter_descendants()) if desc else [ctx], test)
+    if axis is not None:
+        node_test = _compile_test(test)
+
+        def select(ctx):
             bases = list(ctx.iter_descendants()) if desc else [ctx]
-            if axis == "attribute":
-                sel = []
-                for b in bases:
-                    if not isinstance(b, AttrNode) and b.kind == ELEMENT:
-                        if test == "*":
-                            sel.extend(AttrNode(b, k) for k in b.attrs)
-                        elif test in b.attrs:
-                            sel.append(AttrNode(b, test))
-            else:
-                sel = []
-                seen_ids: set[int] = set()
-                for b in bases:
-                    for n in _apply_test(_axis_pool(b, axis), test):
-                        if id(n) not in seen_ids:
-                            seen_ids.add(id(n))
-                            sel.append(n)
-            out.append(sel)
-            continue
-        if test == ".":
-            out.append([ctx])
-            continue
-        if test == "..":
-            out.append([ctx.parent] if ctx.parent is not None else [])
-            continue
-        if desc:
-            # ``//x`` ≡ descendant-or-self::node()/child::x → all strict
-            # descendants; attributes additionally cover self (see below).
-            pool_with_self = list(ctx.iter_descendants())
-            pool = pool_with_self[1:]
-        else:
-            pool_with_self = [ctx]
-            pool = ctx.children
-        if test.startswith("@"):
-            # attribute pseudo-nodes represented as (element, attrname) via AttrNode
-            name = test[1:]
             sel = []
-            for n in pool_with_self:
-                if n.kind == ELEMENT:
-                    if name == "*":
-                        sel.extend(AttrNode(n, k) for k in n.attrs)
-                    elif name in n.attrs:
-                        sel.append(AttrNode(n, name))
-        else:
-            sel = _apply_test(pool, test)
-        out.append(sel)
-    return out
+            seen_ids: set[int] = set()
+            for b in bases:
+                for n in node_test(_axis_pool(b, axis)):
+                    if id(n) not in seen_ids:
+                        seen_ids.add(id(n))
+                        sel.append(n)
+            return sel
+
+        return select
+    if test == ".":
+        return lambda ctx: [ctx]
+    if test == "..":
+        return lambda ctx: [ctx.parent] if ctx.parent is not None else []
+    if test.startswith("@"):
+        name = test[1:]
+        return lambda ctx: _attributes(_abbrev_pools(ctx, desc)[0], name)
+    node_test = _compile_test(test)
+    return lambda ctx: node_test(_abbrev_pools(ctx, desc)[1])
 
 
 class AttrNode:
@@ -530,76 +534,101 @@ def _strippable_parens(pred: str) -> bool:
     return False
 
 
-def _operand_values(node: Node, expr: str) -> list[str]:
-    """Evaluate a predicate operand (relative path / @attr / text()) to the
-    string-values of its result set."""
+def _compile_operand(expr: str) -> Callable[[Node], list]:
+    """Compile a predicate operand (relative path / @attr / text()) into
+    ``node -> result nodes``; a malformed operand is an empty one."""
     try:
-        res = _evaluate(_split_steps(expr), [node])
+        steps = _compile_path(expr)
     except XPathError:
-        return []
-    return [n.string_value() for n in res]
+        return lambda node: []
+    return lambda node: _run(steps, [node])
 
 
-def _eval_predicate(pred: str, node: Node, pos: int, size: int) -> bool:
+_Predicate = Callable[[object, int, int], bool]  # (node, position, size)
+
+
+def _compile_predicate(pred: str) -> _Predicate:
     pred = pred.strip()
     # boolean grammar: or_expr := and_expr (' or ' and_expr)*;
     # and_expr := unary (' and ' unary)*; unary := '(' expr ')' | not(...) | atom
     for op, fn in ((" or ", any), (" and ", all)):
         parts = _split_top(pred, op)
         if len(parts) > 1:
-            return fn(_eval_predicate(p, node, pos, size) for p in parts)
+            subs = [_compile_predicate(p) for p in parts]
+            return lambda n, pos, size: fn(s(n, pos, size) for s in subs)
     if _strippable_parens(pred):
-        return _eval_predicate(pred[1:-1], node, pos, size)
+        return _compile_predicate(pred[1:-1])
     m = _NOT_RE.match(pred)
     if m:
-        return not _eval_predicate(m.group(1), node, pos, size)
+        sub = _compile_predicate(m.group(1))
+        return lambda n, pos, size: not sub(n, pos, size)
     if pred.isdigit():
-        return pos == int(pred)
+        k = int(pred)
+        return lambda n, pos, size: pos == k
     if pred == "last()":
-        return pos == size
+        return lambda n, pos, size: pos == size
     m = _POSITION_RE.match(pred)
     if m:
-        return pos == int(m.group(1))
+        k = int(m.group(1))
+        return lambda n, pos, size: pos == k
     m = _CONTAINS_RE.match(pred)
     if m:
-        needle = m.group(2)[1:-1]
-        return any(needle in v for v in _operand_values(node, m.group(1)))
+        operand, needle = _compile_operand(m.group(1)), m.group(2)[1:-1]
+        return lambda n, pos, size: any(needle in v.string_value() for v in operand(n))
     m = _CMP_RE.match(pred)
     if m:
-        lit = m.group(2)[1:-1]
-        return any(v == lit for v in _operand_values(node, m.group(1).strip()))
+        operand, lit = _compile_operand(m.group(1).strip()), m.group(2)[1:-1]
+        return lambda n, pos, size: any(v.string_value() == lit for v in operand(n))
     # existence test: @attr or relative path
-    return bool(_operand_values(node, pred))
+    operand = _compile_operand(pred)
+    return lambda n, pos, size: bool(operand(n))
 
 
-def _evaluate(steps: list[tuple[bool, str]], context: list) -> list:
-    nodes = context
-    for desc, step in steps:
+_Step = tuple[Callable[[object], list], tuple[_Predicate, ...]]
+
+
+def _compile_path(path: str) -> tuple[_Step, ...]:
+    """Path → steps of (select, predicates); raises XPathError when malformed."""
+    steps = []
+    for desc, step in _split_steps(path):
         axis, test, preds = _parse_step(step)
-        grouped = _node_test(nodes, axis, test, desc)
+        steps.append((_compile_select(axis, test, desc), tuple(map(_compile_predicate, preds))))
+    return tuple(steps)
+
+
+#: One compiled form per path string: a rule's path is tokenized once, not
+#: once per document (and its predicates not once per candidate node).
+compile_xpath = functools.lru_cache(maxsize=1024)(_compile_path)
+
+
+def _run(steps: tuple[_Step, ...], context: list) -> list:
+    nodes = context
+    for select, preds in steps:
         nxt = []
-        for group in grouped:
-            sel = group
+        for ctx in nodes:
+            sel = select(ctx)
             for pred in preds:
                 size = len(sel)
-                sel = [n for i, n in enumerate(sel, 1) if _eval_predicate(pred, n, i, size)]
+                sel = [n for i, n in enumerate(sel, 1) if pred(n, i, size)]
             nxt.extend(sel)
-        # document-order dedup
-        seen_ids = set()
-        ordered = []
-        for n in sorted(nxt, key=lambda x: x.ord):
-            if id(n) not in seen_ids:
-                seen_ids.add(id(n))
-                ordered.append(n)
-        nodes = ordered
-        if not nodes:
+        if not nxt:
             return []
+        if len(nxt) > 1:
+            # document-order dedup
+            seen_ids = set()
+            ordered = []
+            for n in sorted(nxt, key=lambda x: x.ord):
+                if id(n) not in seen_ids:
+                    seen_ids.add(id(n))
+                    ordered.append(n)
+            nxt = ordered
+        nodes = nxt
     return nodes
 
 
 def xpath_all(root: Node, path: str) -> list:
-    """All matching nodes in document order."""
-    return _evaluate(_split_steps(path), [root])
+    """All matching nodes in document order; XPathError on a malformed path."""
+    return _run(compile_xpath(path), [root])
 
 
 def html_xpath_first(content: str, path: str) -> str | None:

@@ -8,9 +8,13 @@ file:line citations) and exposes BOTH:
 * the Spark path: ``first_expr(col)`` / ``array_expr(col, distinct)`` —
   Column expressions. Built-in (JVM / whole-stage-codegen) expressions are
   used whenever the reference semantics are exactly reproducible
-  (const/noop/regex and cut-GetFirst); the cut-Get recursion quirk and the
-  XPath engine run as Arrow-vectorized pandas UDFs (never per-row Python
-  UDFs — north_star).
+  (const/noop/regex and cut-GetFirst); the cut-Get recursion quirk, the
+  XPath engine and Python-only transforms run as Arrow-vectorized pandas
+  UDFs (never per-row Python UDFs — north_star). ``udf_first`` says which
+  ``first_expr`` needs Python; :func:`xpath_struct_expr` evaluates all such
+  rules over one input column in ONE pandas UDF (one Arrow round trip, one
+  HTML parse shared by its XPath rules), which is how the collector runs
+  them.
 
 Transforms: the reference's ``transStringFunc`` is an arbitrary
 ``str -> str``. A :class:`Trans` carries the mandatory Python form (oracle +
@@ -93,6 +97,12 @@ class Rule:
         raise NotImplementedError
 
     # spark -----------------------------------------------------------------
+    @property
+    def udf_first(self) -> bool:
+        """True when ``first_expr`` runs in Python (a pandas UDF), so the
+        rule can instead ride one :func:`xpath_struct_expr` per input."""
+        return True
+
     def first_expr(self, c: Column) -> Column:
         return _scalar_udf(self.get_first)(c)
 
@@ -113,6 +123,8 @@ class ConstRule(Rule):
     def get(self, content: str, distinct: bool = False) -> list[str]:
         return core.const_get(self.value, distinct, _py_trans(self.trans))
 
+    udf_first = False
+
     def first_expr(self, c: Column) -> Column:
         return F.lit(self.get_first(""))
 
@@ -132,10 +144,14 @@ class NoopRule(Rule):
     def get(self, content: str, distinct: bool = False) -> list[str]:
         return core.noop_get(content, distinct, _py_trans(self.trans))
 
+    @property
+    def udf_first(self) -> bool:
+        return not _has_col_trans(self.trans)
+
     def first_expr(self, c: Column) -> Column:
-        if _has_col_trans(self.trans):
-            return _apply_col_trans(self.trans, as_text(c))
-        return _scalar_udf(self.get_first)(c)
+        if self.udf_first:
+            return _scalar_udf(self.get_first)(c)
+        return _apply_col_trans(self.trans, as_text(c))
 
     def array_expr(self, c: Column, distinct: bool = False) -> Column:
         return F.array(self.first_expr(c))
@@ -161,8 +177,12 @@ class CutRule(Rule):
     def get(self, content: str, distinct: bool = False) -> list[str]:
         return core.cut_get(content, self.start, self.end, distinct, _py_trans(self.trans))
 
+    @property
+    def udf_first(self) -> bool:
+        return not _has_col_trans(self.trans)
+
     def first_expr(self, c: Column) -> Column:
-        if not _has_col_trans(self.trans):
+        if self.udf_first:
             return _scalar_udf(self.get_first)(c)
         c = as_text(c)
         s = F.locate(self.start, c)  # 1-based, 0 when absent
@@ -197,14 +217,18 @@ class RegexRule(Rule):
     def get(self, content: str, distinct: bool = False) -> list[str]:
         return core.regex_get(content, self.pattern, distinct, _py_trans(self.trans))
 
+    @property
+    def udf_first(self) -> bool:
+        return not (self.java_safe and _has_col_trans(self.trans))
+
     def first_expr(self, c: Column) -> Column:
-        if not (self.java_safe and _has_col_trans(self.trans)):
+        if self.udf_first:
             return _scalar_udf(self.get_first)(c)
         # "" on no match == Go FindString; transform applied even to ""
         return _apply_col_trans(self.trans, F.regexp_extract(as_text(c), self.pattern, 0))
 
     def array_expr(self, c: Column, distinct: bool = False) -> Column:
-        if not (self.java_safe and _has_col_trans(self.trans)):
+        if self.udf_first:
             return _array_udf(lambda s: self.get(s, distinct))(c)
         arr = F.regexp_extract_all(as_text(c), F.lit(self.pattern), 0)
         if distinct:
@@ -235,40 +259,43 @@ class XPathRule(Rule):
         return core.xpath_get(content, self.path, distinct, _py_trans(self.trans))
 
 
-def xpath_struct_expr(html_col: Column, paths: dict[str, XPathRule]) -> Column:
-    """Evaluate MANY XPath rules with ONE parse per document.
+def xpath_struct_expr(content_col: Column, rules: dict[str, Rule]) -> Column:
+    """Evaluate MANY rules over one input column in ONE Python pass.
 
-    The reference parses (twice!) per document PER FIELD
-    (ruler/xpath_node.go:35-48); batching all xpath fields of a collector
-    into a single pandas UDF makes it one parse per document total —
-    output-identical, ~2×N_fields cheaper.
+    Returns a struct with one string field per name, each equal to
+    ``rule.get_first(content)``. The reference parses (twice!) per document
+    PER FIELD (ruler/xpath_node.go:35-48); here every XPath rule shares one
+    parse per document, and every other rule calls its ``get_first`` on the
+    same row — one pandas UDF, one Arrow round trip, output-identical.
     """
     from crawler_spark.rules.htmlpath import parse_html, xpath_all
 
-    names = list(paths)
-    rules = [paths[n] for n in names]
+    names = list(rules)
+    items = [rules[n] for n in names]
+    needs_parse = any(isinstance(r, XPathRule) for r in items)
     out_type = StructType([StructField(n, StringType()) for n in names])
+
+    def xpath_first(root, r: XPathRule) -> str:
+        if root is None:
+            return ""
+        try:
+            nodes = xpath_all(root, r.path)
+        except Exception:
+            return ""
+        if not nodes:
+            return ""
+        return core.apply_trans(_py_trans(r.trans), nodes[0].string_value())
 
     @pandas_udf(out_type)
     def udf(s: pd.Series) -> pd.DataFrame:
         rows = []
         for content in s:
             content = content if content is not None else ""
-            root = parse_html(content)
-            vals = []
-            for r in rules:
-                v = ""
-                if root is not None:
-                    try:
-                        nodes = xpath_all(root, r.path)
-                    except Exception:
-                        nodes = []
-                    if nodes:
-                        v = nodes[0].string_value()
-                        if r.trans is not None:
-                            v = r.trans.py(v)
-                vals.append(v)
-            rows.append(vals)
+            root = parse_html(content) if needs_parse else None
+            rows.append([
+                xpath_first(root, r) if isinstance(r, XPathRule) else r.get_first(content)
+                for r in items
+            ])
         return pd.DataFrame(rows, columns=names)
 
-    return udf(as_text(html_col))
+    return udf(as_text(content_col))

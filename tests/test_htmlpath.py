@@ -1,7 +1,12 @@
 """HTML parser + XPath-subset engine tests (crawler_spark.rules.htmlpath)."""
 
-from crawler_spark.rules import core
+import pytest
+from pyspark.sql import functions as F
+
+from crawler_spark.rules import XPathRule, core, xpath_struct_expr
 from crawler_spark.rules.htmlpath import (
+    XPathError,
+    compile_xpath,
     html_visible_text,
     html_xpath_first,
     parse_html,
@@ -260,3 +265,38 @@ def test_processing_instruction_whitespace_target_split():
                             "//processing-instruction('render')") == "mode=fast"
     assert html_xpath_first("<body><?render\nmode=fast?></body>",
                             "//processing-instruction()") == "mode=fast"
+
+
+# ---------------------------------------------------------------------------
+# compiled paths: one compile per path string, not per document or node
+# ---------------------------------------------------------------------------
+
+
+def test_path_compiled_once_across_documents():
+    path = "//ul/li[@class='compiled-once' and not(@hidden)]"
+    docs = [f"<ul><li class='compiled-once'>{i}</li><li>x</li></ul>" for i in range(25)]
+    before = compile_xpath.cache_info()
+    got = [html_xpath_first(d, path) for d in docs]
+    after = compile_xpath.cache_info()
+    assert got == [str(i) for i in range(25)]
+    assert after.misses - before.misses == 1
+    assert after.hits - before.hits == len(docs) - 1
+
+
+def test_malformed_operand_is_an_empty_operand():
+    # an unknown axis inside a predicate is an empty operand: no match, no error
+    assert xpath_all(parse_html(DOC), "//li[bogus::x]") == []
+    assert html_xpath_first(DOC, "//li[bogus::x]") is None
+    assert html_xpath_first(DOC, "//li[not(bogus::x)]") == "one"
+
+
+def test_malformed_path_fails_at_top_level(spark):
+    with pytest.raises(XPathError):
+        xpath_all(parse_html(DOC), "//bogus::div")
+    # compiled whole: a later bad step fails even when nothing reaches it
+    with pytest.raises(XPathError):
+        xpath_all(parse_html(DOC), "//nosuch/bogus::div")
+    assert html_xpath_first(DOC, "//bogus::div") is None
+    df = spark.createDataFrame([(DOC,)], ["html"])
+    struct = xpath_struct_expr(F.col("html"), {"b": XPathRule("//bogus::div")})
+    assert df.select(struct.alias("s")).first()["s"]["b"] == ""

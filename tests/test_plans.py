@@ -165,6 +165,27 @@ def test_small_state_snapshot_writes_one_part_file(spark, tmp_path):
     assert snap.count() == 200
 
 
+def test_jd_extraction_plan_is_fused(spark):
+    """The jd collector's Python work is two Arrow evaluations: one struct
+    UDF over the detail html (beside the single follow-up canonicalization)
+    and one over the joined funder page. Both follow-up fields fetch the
+    same page, so the corpus is joined once and the url canonicalized once."""
+    import re
+
+    from crawler_spark.collector import extract_fields
+    from crawler_spark.corpus import make_corpus
+    from crawler_spark.examples.jd import jd_fields
+
+    pages = spark.createDataFrame(
+        make_corpus(seed=42, n_hosts=4, pages_per_host=5)["pages"]
+    ).select(F.col("url").alias("url_canon"), "html")
+    detail = pages.filter(F.col("url_canon").contains("/project/details/"))
+    plan = _plan(extract_fields(detail, jd_fields("charity"), corpus=pages))
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 2, plan
+    assert len(re.findall(r"^\(\d+\) \w*Join", plan, re.M)) == 1, plan
+    assert plan.count("_canon_udf(") == 1, plan
+
+
 def test_bloom_probe_is_jvm_and_reuses_admission_exchange(spark):
     """The broadcast Bloom probe must stay PURE JVM (r3): an Arrow/pandas
     probe node hides the child's hash partitioning from the planner, which
