@@ -8,7 +8,10 @@ local[$SPARK_GRAFT_CPUS] and one frontier-round kernel at scale
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Extra keys carry the north-rule metric (URLs-scheduled/sec + round
-wall-time). Each query is forced end-to-end with a noop-format write (full
+wall-time). The kernel is synthetic inputs run through the scheduler's
+production stages (admit with robots and seq, fetch_round, expand), so its
+numbers are not comparable with BENCH_r0[1-5].json, which timed an earlier
+hand-wired round without the robots and seq steps. Each query is forced end-to-end with a noop-format write (full
 computation, no driver collect, no disk).
 
 Env knobs:

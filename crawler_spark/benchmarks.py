@@ -6,14 +6,14 @@ sandbox has no multi-node cluster, so (per BASELINE.md) the scaling
 criterion is evidenced by running the SAME kernel on the SAME input at two
 parallelism levels (local[8] vs local[32]) and comparing throughput.
 
-The kernel below is one full frontier round over a Spark-generated
-synthetic frontier — every stage of the real scheduler
-(crawler_spark.scheduler.crawl) in its per-round dataflow:
+The kernel below is one frontier round over Spark-generated synthetic
+inputs, run through the production stages of the scheduler
+(crawler_spark.scheduler.admit / fetch_round / expand):
 
-    generate urls -> canonicalize (Arrow UDF) -> host/bucket/xxhash64
-      -> first-occurrence dedup -> Bloom probe + exact anti-join vs seen
-      -> per-host politeness window -> fetch-as-join against pages
-      -> outlink extraction (Arrow UDF) + posexplode
+    generate urls -> canonicalize (Arrow UDF) -> admit: first-occurrence
+      dedup -> Bloom probe + exact anti-join vs seen -> robots -> seq
+      -> fetch: per-host politeness window -> bucketed fetch-as-join
+      -> expand: outlink extraction (mapInArrow)
 
 Input is generated *distributed* (spark.range + column exprs, no
 driver-side pandas) so the kernel scales to arbitrary n_urls; it is a pure
@@ -29,18 +29,16 @@ import tempfile
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from crawler_spark.frontier.canon import (
     canon_expr,
-    flat_outlinks,
     host_bucket_expr,
     host_expr,
     url_hash_expr,
 )
-from crawler_spark.frontier.politeness import apply_politeness_budget
-from crawler_spark.frontier.seen import BloomState, filter_unseen
-from crawler_spark.scheduler import _dedup_candidates
+from crawler_spark.frontier.seen import BloomState
+from crawler_spark.scheduler import CrawlConfig, _release, admit, expand, fetch_round
 
 # deterministic pseudo-uniform in [0, 1): Knuth multiplicative hash mod a
 # prime — same value for a given id at any parallelism.
@@ -138,52 +136,67 @@ def io_probe_sec() -> float:
         shutil.rmtree(d, ignore_errors=True)
 
 
+# The kernel's fixed round shape: per-host budget, state buckets, one url in
+# SEEN_EVERY pre-marked seen (a realistic revisit rate for the Bloom probe +
+# exact anti-join), page richness (real pages carry tens of links in KBs of
+# html), and one host in ROBOTS_EVERY disallowing the /p/1 prefix.
+BUDGET = 512
+N_BUCKETS = 32
+SEEN_EVERY = 3
+LINKS_PER_PAGE = 12
+FILLER_WORDS = 60
+ROBOTS_EVERY = 4
+
+
 def frontier_round_kernel(
     spark: SparkSession,
     n_urls: int = 1_000_000,
     n_hosts: int = 2_000,
-    seen_every: int = 3,
-    budget: int = 512,
-    n_buckets: int = 32,
-    use_bloom: bool = True,
-    links_per_page: int = 12,
-    filler_words: int = 60,
-    obs_scheduled: bool = True,
 ) -> dict:
     """One frontier round at scale; returns timings + throughput.
 
-    ``seen_every``: every k-th generated URL is pre-marked seen (exercises
-    the Bloom prefilter + exact anti-join on a realistic revisit rate).
-    ``links_per_page``/``filler_words`` control page richness (real pages
-    carry tens of links in KBs of html).
+    Synthetic inputs (set up untimed): ``n_urls`` raw candidate urls over
+    ``n_hosts`` hosts, a seen table and Bloom filter holding every
+    ``SEEN_EVERY``-th url, a robots table, and the bucketed corpus. The
+    timed round is the scheduler's own stages: admit → fetch_round (the
+    ``"bucketed"`` fetch join) → expand.
     """
+    cfg = CrawlConfig(
+        checkpoint_dir="",
+        default_budget=BUDGET,
+        n_buckets=N_BUCKETS,
+        fetch_join="bucketed",
+        corpus_buckets=FETCH_BUCKETS,
+    )
     raw = synth_frontier(spark, n_urls, n_hosts)
     # The corpus is persisted hash-partitioned by url_canon — the local-mode
     # stand-in for an Iceberg table STORED with a bucket(url_canon, 128)
     # layout: bucketing is paid once at write time and reused by every
     # round, so it belongs to setup, not to the timed round.
     pages = synth_pages(
-        raw, links_per_page=links_per_page, filler_words=filler_words
+        raw, links_per_page=LINKS_PER_PAGE, filler_words=FILLER_WORDS
     ).repartition(FETCH_BUCKETS, "url_canon")
 
     # pre-seen state: every k-th URL, already canonical
     seen = (
-        raw.filter(F.pmod("id", F.lit(seen_every)) == 0)
+        raw.filter(F.pmod("id", F.lit(SEEN_EVERY)) == 0)
         .select(F.lower(F.regexp_replace("url", ":443", "")).alias("url_canon"))
         .withColumn("host", host_expr(F.col("url_canon")))
-        .withColumn("bucket", host_bucket_expr(F.col("host"), n_buckets))
+        .withColumn("bucket", host_bucket_expr(F.col("host"), N_BUCKETS))
         .withColumn("url_hash", url_hash_expr(F.col("url_canon")))
         .select("url_hash", "bucket", "url_canon")
     )
-    bloom_state = BloomState(n_buckets, 1 << 22) if use_bloom else None
-    if bloom_state is not None:
-        bloom = bloom_state.merge(bloom_state.empty(spark), seen.select("bucket", "url_hash"))
-        bloom.persist()
-        bloom.count()
-    else:
-        bloom = None
+    bloom_state = BloomState(N_BUCKETS, 1 << 22)
+    bloom = bloom_state.merge(bloom_state.empty(spark), seen.select("bucket", "url_hash"))
+    bloom.persist()
+    bloom.count()
     seen.persist()
     seen.count()
+    robots = spark.range(0, n_hosts, ROBOTS_EVERY).select(
+        F.format_string("h%d.example.com", F.col("id")).alias("host"),
+        F.array(F.lit("/p/1")).alias("disallow_prefixes"),
+    )
+    politeness = spark.createDataFrame([], "host string, max_fetches_per_round int")
     # DISK_ONLY (→ spark.local.dir, lz4 via spark.rdd.compress), NOT the
     # default deserialized MEMORY_AND_DISK: the corpus as raw JVM strings is
     # ~2 KiB/page (UTF-16 + object headers) — at 24M pages that is ~50 GB
@@ -221,78 +234,21 @@ def frontier_round_kernel(
         F.col("id").alias("first_occ_a"),
         F.lit(0).cast("long").alias("first_occ_b"),
     )
-    # host/bucket/url_hash derived post-dedup inside _dedup_candidates —
-    # the admission exchange carries only (url_canon, priority, occ)
-    cands = _dedup_candidates(cands, n_buckets)
-    fresh = filter_unseen(cands, seen, bloom, bloom_state)
-    frontier = fresh.select(
-        "url_canon",
-        "host",
-        "bucket",
-        "url_hash",
-        "priority",
-        F.lit(0).alias("round_added"),
-        F.col("first_occ_a").alias("seq"),
-    )
-    scheduled, _deferred = apply_politeness_budget(
-        frontier,
-        spark.createDataFrame([], "host string, max_fetches_per_round int"),
-        budget,
-        cap=budget,  # dim is static per crawl — precomputed, no per-round collect
-    )
-    # n_scheduled rides the outlinks job as an Observation (r4): the old
-    # form persisted `scheduled` and paid a separate count() job; even
-    # served from cache that is one more job in the round's flat cost c
-    # (PROFILE.md) — and with the count folded in, the persist itself is
-    # dead (scheduled has exactly one consumer) — so both go.
-    # obs_scheduled=False keeps the pre-r4 persist+count form as the A/B
-    # arm (profile_variants.py countjob).
-    sched_obs = None
-    if obs_scheduled:
-        sched_obs = Observation()  # unnamed → unique per call (kernel re-runs in-session)
-        scheduled = scheduled.observe(sched_obs, F.count(F.lit(1)).alias("n"))
-    else:
-        scheduled.persist()
-    # Fetch-as-join, co-partitioned form: the corpus is stored bucketed by
-    # url_canon (setup above), so the semi join plans as a shuffled-hash
-    # join where ONLY the scheduled keys move — the html-bearing side joins
-    # in place with zero exchange, and nothing serial scales with the
-    # scheduled count. (The previous broadcast form collected the whole
-    # scheduled set on the driver — a single-threaded build that grows with
-    # frontier size: Amdahl's law caps measured N→4N efficiency exactly
-    # where the north rule measures it. Broadcast remains right only when
-    # the scheduled side is small; the scheduler keeps it as the small-round
-    # strategy.) The shuffle_hash hint keeps Catalyst from picking
-    # sort-merge, which would sort the page bodies inside every bucket.
-    fetched = pages.join(
-        scheduled.select("url_canon")
-        .repartition(FETCH_BUCKETS, "url_canon")
-        .hint("shuffle_hash"),
-        "url_canon",
-        "left_semi",
-    )
-    outlinks = flat_outlinks(fetched.select("url_canon", "html"), ["url_canon"])
-    n_outlinks = outlinks.count()
-    if sched_obs is not None:
-        n_scheduled = int(sched_obs.get["n"] or 0)  # rode the count job above
-        # CollectMetrics on a JOIN INPUT only dedupes retried result-stage
-        # tasks: speculative execution or shuffle-map retries could double-
-        # count rows (ADVICE r4). Local bench sessions run with speculation
-        # off (Spark default), and the politeness budget bounds the true
-        # count at n_hosts × budget — an observed value above that bound is
-        # impossible, so fall back to the exact count() rather than report
-        # an inflated urls_scheduled_per_sec.
-        if n_scheduled > n_hosts * budget:
-            n_scheduled = scheduled.count()
-    else:
-        n_scheduled = scheduled.count()  # served from cache, no recompute
-    wall = time.monotonic() - t0
-
-    if sched_obs is None:
-        scheduled.unpersist()
-    seen.unpersist()
-    pages.unpersist()
-    if bloom is not None:
+    caches = []
+    try:
+        fresh, frontier = admit(
+            cands, seen, bloom, bloom_state, robots, N_BUCKETS, 0, 0
+        )
+        caches += [fresh, frontier._assign_seq_cache]
+        fetched, _deferred = fetch_round(frontier, pages, politeness, BUDGET, cfg)
+        caches += fetched._fetch_round_caches
+        n_outlinks = expand(fetched, F.col("seq")).count()
+        n_scheduled = fetched.count()  # served from the stage's cache
+        wall = time.monotonic() - t0
+    finally:
+        _release(caches)
+        seen.unpersist()
+        pages.unpersist()
         bloom.unpersist()
     return {
         "n_urls": n_urls,

@@ -3,7 +3,6 @@ from crawler_spark.frontier.canon import (  # noqa: F401
     canonicalize_url,
     extract_outlinks,
     host_expr,
-    outlinks_expr,
     url_hash_expr,
 )
 from crawler_spark.frontier.cuckoo import CuckooState  # noqa: F401

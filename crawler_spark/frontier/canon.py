@@ -16,7 +16,7 @@ from urllib.parse import urljoin, urlsplit, urlunsplit
 import pandas as pd
 from pyspark.sql import Column, Window, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
@@ -190,46 +190,6 @@ def _resolve_arrow(b, h):
     return out_pa
 
 
-def _resolve_batch(base: pd.Series, href: pd.Series) -> pd.Series:
-    """Pandas wrapper of :func:`_resolve_arrow` (pandas-UDF entry point)."""
-    import pyarrow as pa
-
-    out = _resolve_arrow(
-        pa.Array.from_pandas(base.astype(object)),
-        pa.Array.from_pandas(href.astype(object)),
-    )
-    return out.to_pandas().set_axis(href.index)
-
-
-def _outlinks_batch(base: pd.Series, html: pd.Series) -> pd.Series:
-    """Vectorized :func:`extract_outlinks` over a batch: extractall for the
-    href scan, batch resolve + canonicalize, per-page first-occurrence
-    dedup — document order preserved by the (row, match) index."""
-    base = base.fillna("")
-    html = html.fillna("")
-    empty: pd.Series = pd.Series([[] for _ in range(len(base))], index=base.index)
-    hits = html.str.extractall(_HREF_RE)
-    if len(hits) == 0:
-        return empty
-    href = hits[0].str.strip()
-    row_idx = hits.index.get_level_values(0)
-    keep = (href != "") & ~href.str.startswith(("#", "javascript:", "mailto:"))
-    href, row_idx = href[keep], row_idx[keep.to_numpy()]
-    if len(href) == 0:
-        return empty
-    resolved = _resolve_batch(base.loc[row_idx].set_axis(href.index), href)
-    canon = _canon_batch(resolved)
-    keep2 = canon.str.startswith(("http://", "https://"))
-    flat = pd.DataFrame(
-        {"row": row_idx[keep2.to_numpy()], "url": canon[keep2].to_numpy()}
-    )
-    flat = flat.drop_duplicates(subset=["row", "url"], keep="first")
-    grouped = flat.groupby("row", sort=False)["url"].agg(list)
-    out = empty.copy()
-    out.update(grouped)
-    return out
-
-
 # --- Spark expressions -------------------------------------------------------
 
 @pandas_udf(StringType())
@@ -257,59 +217,16 @@ def host_bucket_expr(host_col: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(host_col), F.lit(n_buckets)).cast("int")
 
 
-@pandas_udf(ArrayType(StringType()))
-def _outlinks_udf(base: pd.Series, html: pd.Series) -> pd.Series:
-    return _outlinks_batch(base, html)
-
-
-def _links_from_hrefs_batch(base: pd.Series, hrefs: pd.Series) -> pd.Series:
-    """Resolve + canonicalize already-scanned href lists (per-page order
-    preserved, first-occurrence dedup) — the Python half of outlinks_expr.
-    Byte-equal to :func:`extract_outlinks` given the same href scan."""
-    import numpy as np
-
-    base = base.fillna("").reset_index(drop=True)
-    hrefs = hrefs.reset_index(drop=True)
-    empty: pd.Series = pd.Series([[] for _ in range(len(base))], dtype=object)
-    counts = hrefs.map(lambda a: 0 if a is None else len(a)).to_numpy()
-    if counts.sum() == 0:
-        return empty
-    row_pos = np.repeat(np.arange(len(base)), counts)
-    flat = np.concatenate(
-        [np.asarray(a, dtype=object) for a in hrefs if a is not None and len(a)]
-    )
-    href = pd.Series(flat, dtype=object).str.strip()
-    keep = (href != "") & ~href.str.startswith(("#", "javascript:", "mailto:"))
-    href, row_pos = href[keep], row_pos[keep.to_numpy()]
-    if len(href) == 0:
-        return empty
-    resolved = _resolve_batch(base.iloc[row_pos].set_axis(href.index), href)
-    canon = _canon_batch(resolved)
-    keep2 = canon.str.startswith(("http://", "https://"))
-    out_flat = pd.DataFrame(
-        {"row": row_pos[keep2.to_numpy()], "url": canon[keep2].to_numpy()}
-    ).drop_duplicates(subset=["row", "url"], keep="first")
-    grouped = out_flat.groupby("row", sort=False)["url"].agg(list)
-    out = empty.copy()
-    out.iloc[grouped.index] = grouped.to_numpy()
-    return out
-
-
-@pandas_udf(ArrayType(StringType()))
-def _links_from_hrefs_udf(base: pd.Series, hrefs: pd.Series) -> pd.Series:
-    return _links_from_hrefs_batch(base, hrefs)
-
-
 def flat_outlinks(df, carry_cols: list[str], url_col: str = "url_canon", html_col: str = "html"):
     """Flat outlink expansion: ``(carry…, url, html)`` → ``(carry…, pos,
     child_url)`` rows, one per extracted outlink, per-page order preserved
     and per-page first-occurrence deduped.
 
-    Same semantics as ``posexplode(outlinks_expr(url, html))`` but without
-    rebuilding per-page Python lists only for the JVM to explode them again:
-    the href scan runs JVM-side (``regexp_extract_all`` in codegen, html
-    never crosses Arrow), and one ``mapInArrow`` resolves + canonicalizes
-    the flat href stream and emits flat rows directly.
+    The same rows as ``posexplode`` over :func:`extract_outlinks` per page,
+    without per-page Python lists: the href scan runs JVM-side
+    (``regexp_extract_all`` in codegen, html never crosses Arrow), and one
+    ``mapInArrow`` resolves + canonicalizes the flat href stream and emits
+    flat rows directly.
 
     Arrow end-to-end: strings never leave contiguous Arrow buffers — the
     per-row PyObject materialization of a pandas object column (one Python
@@ -401,22 +318,6 @@ def flat_outlinks(df, carry_cols: list[str], url_col: str = "url_canon", html_co
             )
 
     return scanned.mapInArrow(emit, out_schema)
-
-
-def outlinks_expr(url_col: Column, html_col: Column) -> Column:
-    """Per-page canonical outlink array (order-preserving, deduped within
-    the page).
-
-    Split execution: the href *scan* — the byte-heavy part, priced per page
-    byte — runs JVM-side in whole-stage codegen (``regexp_extract_all``
-    with the Java twin of the Python spec regex), so the full html column
-    never crosses the Arrow boundary; only the small href arrays reach
-    Python, where relative-URL resolution (urljoin semantics) +
-    canonicalization + per-page dedup run vectorized. ~50× fewer bytes
-    through Arrow than scanning in the UDF, and the scan scales with JVM
-    codegen instead of Python memory bandwidth."""
-    hrefs = F.regexp_extract_all(html_col.cast("string"), F.lit(HREF_PATTERN_JAVA), 1)
-    return _links_from_hrefs_udf(url_col, hrefs)
 
 
 def resolve_redirects(

@@ -265,7 +265,7 @@ def filter_unseen(
     # above the probe (the admission-dedup aggregate + the probe UDF's
     # Arrow round-trip) once per branch — Spark reuses exchanges across
     # union arms, not post-shuffle operator work — which measured ~15% of
-    # the 6M-URL round's wall (scripts/profile_variants.py, paired A/B).
+    # the 6M-URL round's wall (paired A/B on the round-2 kernel, BENCH.md).
     seen_keys = seen.select(*key)
     return probed.join(
         seen_keys,

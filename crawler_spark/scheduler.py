@@ -37,7 +37,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window, functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -170,17 +170,15 @@ def read_manifest(checkpoint_dir: str) -> dict | None:
         return json.load(f)
 
 
-def _prepare_seeds(spark: SparkSession, seeds: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """seeds(url, priority, seq) → frontier candidate rows in seed-seq order."""
-    s = seeds.select(
+def seed_candidates(seeds: DataFrame) -> DataFrame:
+    """seeds(url, priority, seq) → admission candidates ``(url_canon,
+    priority, first_occ_a, first_occ_b)``: canonicalized, keyed by seed seq."""
+    return seeds.select(
         canon_expr(F.col("url")).alias("url_canon"),
         F.col("priority").cast("int").alias("priority"),
         F.col("seq").cast("long").alias("first_occ_a"),
         F.lit(0).cast("long").alias("first_occ_b"),
     )
-    # within-batch first-occurrence dedup (keep smallest seed seq);
-    # host/bucket/url_hash derived post-dedup inside _dedup_candidates
-    return _dedup_candidates(s, cfg.n_buckets)
 
 
 def _dedup_candidates(cands: DataFrame, n_buckets: int) -> DataFrame:
@@ -344,6 +342,119 @@ def _release(caches: list[DataFrame]) -> None:
     caches.clear()
 
 
+# --- round stages --------------------------------------------------------------
+#
+# One implementation of each stage of a crawl round. crawl() runs them as
+# fetch → expand → admit (admission closes a round), the streaming crawl as
+# admit → fetch → expand (admission opens a micro-batch), and the benchmark
+# kernel as admit → fetch → expand over synthetic inputs.
+
+
+def admit(
+    cands: DataFrame,
+    seen: DataFrame | None,
+    bloom: DataFrame | None,
+    bloom_state,
+    robots: DataFrame | None,
+    n_buckets: int,
+    seq_offset: int,
+    round_added: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Admission: candidate rows ``(url_canon, priority, first_occ_a,
+    first_occ_b)`` → first-occurrence dedup → unseen filter against ``seen``
+    (skipped when ``seen`` is None) → robots → seq.
+
+    Returns ``(fresh, new_entries)``. ``fresh`` is the deduped unseen set
+    before robots — the seen delta: a disallowed url is remembered so it is
+    never reconsidered, but never admitted. When filtered it is persisted,
+    and the caller releases it. ``new_entries`` are the admitted frontier
+    rows from :func:`_assign_seq` (seq from ``seq_offset`` in admission
+    order); the caller releases ``new_entries._assign_seq_cache``."""
+    fresh = _dedup_candidates(cands, n_buckets)
+    if seen is not None:
+        # the seen delta, the Bloom merge and the seq stage all read the
+        # filtered set: cache it so the anti-join runs once
+        fresh = filter_unseen(fresh, seen, bloom, bloom_state)
+        fresh.persist()
+    try:
+        allowed = robots_allowed(fresh, robots) if robots is not None else fresh
+        new_entries = _assign_seq(allowed, seq_offset, round_added)
+    except BaseException:
+        fresh.unpersist()
+        raise
+    return fresh, new_entries
+
+
+def fetch_round(
+    frontier: DataFrame,
+    corpus: DataFrame,
+    politeness: DataFrame,
+    cap: int,
+    cfg: CrawlConfig,
+) -> tuple[DataFrame, DataFrame]:
+    """Fetch: politeness window over ``frontier`` → fetch-as-join against the
+    canonical ``corpus`` (:func:`_canonical_corpus`) → misses.
+
+    Returns ``(fetched, deferred)``: ``fetched`` = the scheduled rows with
+    ``html`` and a ``fetched`` flag (ok ∪ miss; a miss, the reference's
+    failed fetch, carries null html), ``deferred`` = the frontier rows over
+    their host's budget. ``fetched._fetch_round_caches`` lists what this
+    stage persisted; the caller releases it."""
+    scheduled, deferred = apply_politeness_budget(
+        frontier, politeness, cfg.default_budget, cap=cap
+    )
+    # reused by the fetch join, the miss anti-join, AND deferred's
+    # frontier∖scheduled anti-join — cache the window output once
+    scheduled.persist()
+
+    # Left-outer semantics (miss = fetch failure) are recovered with a
+    # cheap anti-join of the two small sides; miss derives from the
+    # PERSISTED ok so the anti-join reads the cache, not a re-join.
+    ok = _fetch_join(corpus, scheduled, cfg).withColumn("fetched", F.lit(True))
+    ok.persist()
+    if cfg.fetch_join == "bucketed":
+        miss_src = scheduled.repartition(cfg.corpus_buckets, "url_canon").join(
+            ok.select("url_canon").hint("shuffle_hash"), "url_canon", "left_anti"
+        )
+    else:
+        miss_src = scheduled.join(
+            F.broadcast(ok.select("url_canon")), "url_canon", "left_anti"
+        )
+    miss = (
+        miss_src
+        .withColumn("html", F.lit(None).cast("string"))
+        .withColumn("fetched", F.lit(False))
+    )
+    fetched = ok.unionByName(miss.select(*ok.columns))
+    fetched.persist()
+    fetched._fetch_round_caches = [scheduled, ok, fetched]
+    return fetched, deferred
+
+
+def expand(fetched: DataFrame, occ_a: Column) -> DataFrame:
+    """Outlink expansion: the outlinks of ``fetched``'s fetched pages as
+    admission candidates ``(url_canon, priority=0, first_occ_a,
+    first_occ_b)``, already canonical. ``occ_a``, a column over the parent
+    row, is the parent's term of the child's admission key; the in-page
+    position is the second term.
+
+    Repartition before the Arrow UDF: outlink parsing is priced per row
+    (Python regex/pandas), not per byte, so AQE's byte-targeted coalescing
+    under-parallelizes it on small rounds; the round's parent set is
+    bounded by the fetch budget, so this shuffle is cheap at any scale. The
+    flat ``mapInArrow`` expansion keeps the href scan JVM-side (see
+    :func:`crawler_spark.frontier.canon.flat_outlinks`)."""
+    parents = fetched.filter(F.col("fetched")).select(
+        occ_a.cast("long").alias("first_occ_a"), "url_canon", "html"
+    ).repartition(fetched.sparkSession.sparkContext.defaultParallelism)
+    return flat_outlinks(parents, ["first_occ_a"]).select(
+        F.col("child_url").alias("url_canon"),
+        F.lit(0).alias("priority"),
+        "first_occ_a",
+        F.col("pos").cast("long").alias("first_occ_b"),
+    )
+
+
 def crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -365,7 +476,6 @@ def crawl(
     else:
         bloom_state = BloomState(cfg.n_buckets, cfg.bits_per_bucket)
 
-    empty_robots = robots is None
     if politeness is None:
         politeness = spark.createDataFrame(
             [], "host string, max_fetches_per_round int"
@@ -394,13 +504,11 @@ def crawl(
             )
         else:
             start_round = 0
-            seeds_c = _prepare_seeds(spark, seeds, cfg)
-            if not empty_robots:
-                allowed = robots_allowed(seeds_c, robots)
-            else:
-                allowed = seeds_c
-            frontier = _assign_seq(allowed, 0, 0)
-            caches.append(frontier._assign_seq_cache)
+            # within-batch first-occurrence dedup keeps the smallest seed seq
+            seeds_c, frontier = admit(
+                seed_candidates(seeds), None, None, None, robots, cfg.n_buckets, 0, 0
+            )
+            caches += [seeds_c, frontier._assign_seq_cache]
             # free by-product of _assign_seq's offsets collect — no count() job
             seq_offset = frontier._assign_seq_total
             seen = seeds_c.select("url_hash", "bucket", "url_canon")
@@ -448,36 +556,8 @@ def crawl(
             if frontier_size <= 0:
                 break
 
-            scheduled, deferred = apply_politeness_budget(
-                frontier, politeness, cfg.default_budget, cap=cap
-            )
-            # reused by the fetch join, the miss anti-join, AND deferred's
-            # frontier∖scheduled anti-join — cache the window output once
-            scheduled.persist()
-            caches.append(scheduled)
-
-            # Left-outer semantics (miss = fetch failure) are recovered with a
-            # cheap anti-join of the two small sides; miss derives from the
-            # PERSISTED ok so the anti-join reads the cache, not a re-join.
-            ok = _fetch_join(corpus, scheduled, cfg).withColumn("fetched", F.lit(True))
-            ok.persist()
-            caches.append(ok)
-            if cfg.fetch_join == "bucketed":
-                miss_src = scheduled.repartition(cfg.corpus_buckets, "url_canon").join(
-                    ok.select("url_canon").hint("shuffle_hash"), "url_canon", "left_anti"
-                )
-            else:
-                miss_src = scheduled.join(
-                    F.broadcast(ok.select("url_canon")), "url_canon", "left_anti"
-                )
-            miss = (
-                miss_src
-                .withColumn("html", F.lit(None).cast("string"))
-                .withColumn("fetched", F.lit(False))
-            )
-            fetched = ok.unionByName(miss.select(*ok.columns))
-            fetched.persist()
-            caches.append(fetched)
+            fetched, deferred = fetch_round(frontier, corpus, politeness, cap, cfg)
+            caches += fetched._fetch_round_caches
 
             schedule_log = fetched.select(
                 F.lit(rnd).alias("round"),
@@ -489,44 +569,16 @@ def crawl(
             )
             _write_state(schedule_log, _ckpt(cfg, rnd, "schedule"))
 
-            # outlink expansion: order key = (parent rank in schedule, position).
-            # Repartition before the Arrow UDF: outlink parsing is priced per
-            # row (Python regex/pandas), not per byte, so AQE's byte-targeted coalescing
-            # under-parallelizes it on small rounds; the round's parent set is
-            # bounded by the fetch budget, so this shuffle is cheap at any scale.
-            parents = fetched.filter(F.col("fetched")).select(
-                F.col("priority").alias("parent_priority"),
-                F.col("seq").alias("parent_seq"),
-                "url_canon",
-                "html",
-            ).repartition(spark.sparkContext.defaultParallelism)
-            # flat mapInPandas expansion: href scan stays JVM-side, no per-page
-            # list rebuild + re-explode (see frontier.canon.flat_outlinks)
-            links = flat_outlinks(parents, ["parent_priority", "parent_seq"])
-            # first-occurrence order across the batch follows the schedule order
-            # (parent_priority, parent_seq), then in-page position — encode the
-            # pair (priority, seq) into one sortable long: seq is globally unique
-            # and priority orders before seq in scheduling, so keep both columns.
-            cands = links.select(
-                F.col("child_url").alias("url_canon"),
-                F.lit(0).alias("priority"),
-                (F.col("parent_priority").cast("long") * F.lit(1 << 40) + F.col("parent_seq"))
-                .alias("first_occ_a"),
-                F.col("pos").cast("long").alias("first_occ_b"),
+            # child admission key: (parent rank in schedule, in-page position).
+            # The schedule orders by (priority, seq); seq is globally unique,
+            # so priority·2^40 + seq encodes that order in one sortable long.
+            cands = expand(
+                fetched, F.col("priority").cast("long") * F.lit(1 << 40) + F.col("seq")
             )
-            # host/bucket/url_hash derived post-dedup inside _dedup_candidates —
-            # the admission exchange carries only (url_canon, priority, occ)
-            cands = _dedup_candidates(cands, cfg.n_buckets)
-
-            fresh = filter_unseen(cands, seen, bloom, bloom_state)
-            fresh.persist()
-            caches.append(fresh)
-            if not empty_robots:
-                admitted = robots_allowed(fresh, robots)
-            else:
-                admitted = fresh
-            new_entries = _assign_seq(admitted, seq_offset, rnd + 1)
-            caches.append(new_entries._assign_seq_cache)
+            fresh, new_entries = admit(
+                cands, seen, bloom, bloom_state, robots, cfg.n_buckets, seq_offset, rnd + 1
+            )
+            caches += [fresh, new_entries._assign_seq_cache]
             n_admitted = new_entries._assign_seq_total  # from the offsets collect
 
             # --- metrics (per-partition lineage counters) -----------------------

@@ -34,12 +34,14 @@ New candidates travel with ``seq = round_added = null`` and earn a
 replay-stable ``seq = batch_id << 32 | within-batch admission rank`` (no
 mutable cross-batch counter — a counter would break idempotent replay).
 
-Scale: identical to the batch scheduler per round — the corpus is never
+Scale: one round of the batch scheduler's own stages
+(``scheduler.admit``, ``fetch_round`` and ``expand``), run admission
+first — the corpus is canonicalized and persisted once per stream and never
 shuffled (broadcast fetch join on the budget-bounded scheduled set), seen
 is an append-only delta log, and the watched directory only ever holds
-narrow url rows. Reference semantics preserved: per-page order-preserving
-outlink extraction (/root/reference/collector-url.go:31), silent drop of
-failed fetches (/root/reference/collector.go:88-90).
+narrow canonical url rows. Reference semantics preserved: per-page
+order-preserving outlink extraction (the reference's collector-url.go:31),
+silent drop of failed fetches (its collector.go:88-90).
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -57,38 +59,32 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from crawler_spark.frontier.canon import (
-    canon_expr,
-    flat_outlinks,
-    host_bucket_expr,
-    host_expr,
-    url_hash_expr,
-)
-from crawler_spark.frontier.politeness import (
-    apply_politeness_budget,
-    politeness_cap,
-    robots_allowed,
+from crawler_spark.frontier.canon import host_bucket_expr, host_expr, url_hash_expr
+from crawler_spark.frontier.politeness import politeness_cap
+from crawler_spark.scheduler import (
+    SEEN_SCHEMA,
+    CrawlConfig,
+    _canonical_corpus,
+    _release,
+    admit,
+    expand,
+    fetch_round,
+    seed_candidates,
 )
 
-# rows flowing through the watched directory: url + admission key; seq and
-# round_added are null for NEW candidates, set for deferred carry-overs
+# rows flowing through the watched directory: canonical url + admission key;
+# seq and round_added are null for NEW candidates, set for deferred
+# carry-overs (whose admission key is then unused, and null)
 CAND_SCHEMA = StructType(
     [
-        StructField("url", StringType()),
+        StructField("url_canon", StringType()),
         StructField("priority", IntegerType()),
-        StructField("occ_a", LongType()),
-        StructField("occ_b", LongType()),
+        StructField("first_occ_a", LongType()),
+        StructField("first_occ_b", LongType()),
         StructField("seq", LongType()),
         StructField("round_added", IntegerType()),
     ]
 )
-
-SEEN_SCHEMA = "url_hash long, bucket int, url_canon string"
-
-_FRONTIER_COLS = [
-    "url_canon", "host", "bucket", "url_hash",
-    "priority", "occ_a", "occ_b", "seq", "round_added",
-]
 
 
 @dataclass
@@ -132,10 +128,10 @@ def _publish(
     docstring.
 
     The row count rides the write job as an ``Observation`` (CollectMetrics
-    — the scheduler.py:512 pattern) and is returned; with ``skip_if_empty``
-    an empty frame is staged but never moved into the watched dir, so
-    publication is suppressed WITHOUT the separate persist+count() job the
-    pre-r4 caller paid (empty batches must not publish: each would enqueue
+    — the pattern of ``scheduler.crawl``'s metrics write) and is returned;
+    with ``skip_if_empty`` an empty frame is staged but never moved into the
+    watched dir, so publication is suppressed WITHOUT the separate
+    persist+count() job the pre-r4 caller paid (empty batches must not publish: each would enqueue
     under a fresh batch id and chain empty batches forever). A suppressed
     stage is deleted on the spot (r5, ADVICE r4) so drain-terminating
     rounds stop leaving dead from_batch=N dirs behind."""
@@ -158,26 +154,12 @@ def _publish(
     return n
 
 
-def _keyed_new(cands: DataFrame) -> DataFrame:
-    """New candidates: canonicalize + first-occurrence dedup within the
-    batch (keep the smallest admission key — the batch scheduler's
-    _dedup_candidates semantics), then derive host/bucket/hash."""
-    c = cands.select(
-        canon_expr(F.col("url")).alias("url_canon"),
-        F.col("priority").cast("int").alias("priority"),
-        F.col("occ_a").cast("long").alias("occ_a"),
-        F.col("occ_b").cast("long").alias("occ_b"),
-    )
-    return (
-        c.groupBy("url_canon")
-        .agg(F.min(F.struct("occ_a", "occ_b", "priority")).alias("f"))
-        .select(
-            "url_canon",
-            F.col("f.priority").alias("priority"),
-            F.col("f.occ_a").alias("occ_a"),
-            F.col("f.occ_b").alias("occ_b"),
-        )
-        .withColumn("host", host_expr(F.col("url_canon")))
+def _round_config(cfg: StreamCrawlConfig) -> CrawlConfig:
+    """The scheduler stages' settings for a stream: its budget and buckets,
+    and the broadcast fetch join (the scheduled set of a batch is
+    budget-bounded)."""
+    return CrawlConfig(
+        checkpoint_dir=cfg.work_dir, default_budget=cfg.default_budget, n_buckets=cfg.n_buckets
     )
 
 
@@ -188,128 +170,86 @@ def _round_fn(
     politeness: DataFrame | None,
     cfg: StreamCrawlConfig,
 ):
-    """Build the foreachBatch body. All writes are keyed by batch_id and
-    overwritten — see module docstring (idempotent replay)."""
+    """Build the foreachBatch body: one round of the scheduler's stages,
+    admission first. All writes are keyed by batch_id and overwritten — see
+    module docstring (idempotent replay)."""
     if politeness is None:
         politeness = spark.createDataFrame([], "host string, max_fetches_per_round int")
     cap = politeness_cap(politeness, cfg.default_budget)  # once, not per batch
+    round_cfg = _round_config(cfg)
 
     def run_round(batch: DataFrame, batch_id: int) -> None:
         batch = batch.persist()
-
-        # deferred carry-overs: already seen + robots-vetted; keep identity
-        carried = batch.filter(F.col("seq").isNotNull()).select(
-            canon_expr(F.col("url")).alias("url_canon"),
-            "priority", "occ_a", "occ_b", "seq", "round_added",
-        ).withColumn("host", host_expr(F.col("url_canon")))
-
-        # new candidates: dedup-in-batch → seen anti-join → robots → seq
-        fresh_c = _keyed_new(batch.filter(F.col("seq").isNull()))
-        seen_deltas = [
-            os.path.join(cfg.seen_dir, d)
-            for d in sorted(os.listdir(cfg.seen_dir))
-            if os.path.isdir(os.path.join(cfg.seen_dir, d)) and d != f"batch={batch_id}"
-        ] if os.path.isdir(cfg.seen_dir) else []
-        if seen_deltas:
-            seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_deltas)
-            fresh_c = fresh_c.join(seen, "url_canon", "left_anti")
-        fresh_c = fresh_c.persist()
-
-        # seen delta = this batch's fresh DISCOVERIES, pre-robots — the
-        # batch scheduler's semantics (a disallowed url is remembered so it
-        # is never re-considered, but never admitted to the frontier)
-        fresh_c.select(
-            url_hash_expr(F.col("url_canon")).alias("url_hash"),
-            host_bucket_expr(F.col("host"), cfg.n_buckets).alias("bucket"),
-            "url_canon",
-        ).write.mode("overwrite").parquet(
-            os.path.join(cfg.seen_dir, f"batch={batch_id}")
-        )
-
-        admitted = robots_allowed(fresh_c, robots) if robots is not None else fresh_c
-
-        # replay-stable seq for the batch's new urls. One global window is
-        # fine HERE: the admitted set is bounded by budget × fan-out per
-        # batch, not the whole frontier (the batch scheduler's two-phase
-        # rank covers the unbounded case).
-        w = Window.orderBy("occ_a", "occ_b")
-        admitted = admitted.select(
-            "url_canon", "host", "priority", "occ_a", "occ_b",
-            (
-                (F.lit(int(batch_id)).cast("long") * F.lit(1 << 32))
-                + F.row_number().over(w).cast("long")
-            ).alias("seq"),
-            F.lit(int(batch_id)).cast("int").alias("round_added"),
-        ).persist()
-
-        frontier = admitted.unionByName(carried).select(
-            "url_canon", "host", "priority", "occ_a", "occ_b", "seq", "round_added",
-        ).withColumn(
-            "bucket", host_bucket_expr(F.col("host"), cfg.n_buckets)
-        ).withColumn("url_hash", url_hash_expr(F.col("url_canon")))
-
-        scheduled, deferred = apply_politeness_budget(
-            frontier, politeness, cfg.default_budget, cap=cap
-        )
-        scheduled = scheduled.persist()
-
-        # fetch-as-join: budget-bounded scheduled set broadcast against the
-        # html corpus (never shuffles the corpus); misses = silent drops
-        ok = corpus.join(F.broadcast(scheduled), "url_canon", "inner").persist()
-        miss = scheduled.join(
-            F.broadcast(ok.select("url_canon")), "url_canon", "left_anti"
-        )
-
-        schedule_log = ok.select(
-            F.col("url_canon").alias("url"), "host", "priority", "seq",
-            F.lit(True).alias("fetched"),
-        ).unionByName(
-            miss.select(
-                F.col("url_canon").alias("url"), "host", "priority", "seq",
-                F.lit(False).alias("fetched"),
+        caches = [batch]
+        try:
+            # deferred carry-overs: already seen + robots-vetted; keep identity
+            carried = batch.filter(F.col("seq").isNotNull()).withColumn(
+                "host", host_expr(F.col("url_canon"))
+            ).select(
+                "url_canon", "host",
+                host_bucket_expr(F.col("host"), cfg.n_buckets).alias("bucket"),
+                url_hash_expr(F.col("url_canon")).alias("url_hash"),
+                "priority", "round_added", "seq",
             )
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        schedule_log.write.mode("overwrite").parquet(
-            os.path.join(cfg.schedule_dir, f"batch={batch_id}")
-        )
 
-        # feed the stream: outlinks of fetched pages (new candidates) +
-        # deferred urls (carry-overs) into the watched directory; one
-        # subdir per batch → overwrite on replay. Child admission key =
-        # (parent seq, in-page position).
-        parents = ok.select(
-            F.col("seq").alias("parent_seq"), "url_canon", "html"
-        ).repartition(spark.sparkContext.defaultParallelism)
-        links = flat_outlinks(parents, ["parent_seq"])
-        children = links.select(
-            F.col("child_url").alias("url"),
-            F.lit(0).alias("priority"),
-            F.col("parent_seq").cast("long").alias("occ_a"),
-            F.col("pos").cast("long").alias("occ_b"),
-            F.lit(None).cast("long").alias("seq"),
-            F.lit(None).cast("int").alias("round_added"),
-        )
-        feedback = children.unionByName(
-            deferred.select(
-                F.col("url_canon").alias("url"), "priority",
-                "occ_a", "occ_b", "seq", "round_added",
+            # new candidates: the seen log of every OTHER batch (a replayed
+            # batch must not see its own delta) is the unseen filter's state
+            seen_deltas = [
+                os.path.join(cfg.seen_dir, d)
+                for d in sorted(os.listdir(cfg.seen_dir))
+                if os.path.isdir(os.path.join(cfg.seen_dir, d)) and d != f"batch={batch_id}"
+            ]
+            seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_deltas) if seen_deltas else None
+            # replay-stable seq = batch_id·2^32 + 1-based admission rank
+            fresh, admitted = admit(
+                batch.filter(F.col("seq").isNull()).select(
+                    "url_canon", "priority", "first_occ_a", "first_occ_b"
+                ),
+                seen, None, None, robots, cfg.n_buckets, (batch_id << 32) + 1, batch_id,
             )
-        )
-        # empty-feedback suppression + count now ride the publish write
-        # itself (Observation in _publish) — one job, no persist; no file
-        # ⇒ the next pass sees no input and the drain loop terminates.
-        _publish(
-            feedback,
-            os.path.join(cfg.stage_dir, f"from_batch={batch_id}"),
-            cfg.frontier_in,
-            f"b{batch_id}",
-            skip_if_empty=True,
-        )
-        ok.unpersist()
-        scheduled.unpersist()
-        admitted.unpersist()
-        fresh_c.unpersist()
-        batch.unpersist()
+            caches += [fresh, admitted._assign_seq_cache]
+            fresh.select("url_hash", "bucket", "url_canon").write.mode("overwrite").parquet(
+                os.path.join(cfg.seen_dir, f"batch={batch_id}")
+            )
+
+            fetched, deferred = fetch_round(
+                admitted.unionByName(carried), corpus, politeness, cap, round_cfg
+            )
+            caches += fetched._fetch_round_caches
+            fetched.select(
+                F.col("url_canon").alias("url"), "host", "priority", "seq", "fetched",
+                F.lit(int(batch_id)).cast("long").alias("batch_id"),
+            ).write.mode("overwrite").parquet(
+                os.path.join(cfg.schedule_dir, f"batch={batch_id}")
+            )
+
+            # feed the stream: outlinks of fetched pages (new candidates,
+            # child admission key = (parent seq, in-page position)) +
+            # deferred urls (carry-overs) into the watched directory
+            feedback = expand(fetched, F.col("seq")).select(
+                "url_canon", "priority", "first_occ_a", "first_occ_b",
+                F.lit(None).cast("long").alias("seq"),
+                F.lit(None).cast("int").alias("round_added"),
+            ).unionByName(
+                deferred.select(
+                    "url_canon", "priority",
+                    F.lit(None).cast("long").alias("first_occ_a"),
+                    F.lit(None).cast("long").alias("first_occ_b"),
+                    "seq", "round_added",
+                )
+            )
+            # empty-feedback suppression + count ride the publish write
+            # itself (Observation in _publish) — one job, no persist; no file
+            # ⇒ the next pass sees no input and the drain loop terminates.
+            _publish(
+                feedback,
+                os.path.join(cfg.stage_dir, f"from_batch={batch_id}"),
+                cfg.frontier_in,
+                f"b{batch_id}",
+                skip_if_empty=True,
+            )
+        finally:
+            _release(caches)
 
     return run_round
 
@@ -334,44 +274,42 @@ def stream_crawl(
     and replays only uncommitted batches, whose idempotent batch-id-keyed
     writes make the replay invisible.
     """
-    os.makedirs(cfg.frontier_in, exist_ok=True)
-    os.makedirs(cfg.schedule_dir, exist_ok=True)
-    os.makedirs(cfg.seen_dir, exist_ok=True)
-    os.makedirs(cfg.stage_dir, exist_ok=True)
+    # canonicalized once per stream and persisted; a duplicate url_canon
+    # raises here, before anything is published
+    corpus = _canonical_corpus(pages, _round_config(cfg))
+    try:
+        for d in (cfg.frontier_in, cfg.schedule_dir, cfg.seen_dir, cfg.stage_dir):
+            os.makedirs(d, exist_ok=True)
 
-    _publish(
-        seeds.select(
-            F.col("url"),
-            F.col("priority").cast("int").alias("priority"),
-            F.col("seq").cast("long").alias("occ_a"),
-            F.lit(0).cast("long").alias("occ_b"),
-            F.lit(None).cast("long").alias("seq"),
-            F.lit(None).cast("int").alias("round_added"),
-        ),
-        os.path.join(cfg.stage_dir, "seeds"),
-        cfg.frontier_in,
-        "seeds",
-    )
-
-    corpus = pages.withColumn("url_canon", canon_expr(F.col("url"))).select(
-        "url_canon", F.col("html").cast("string").alias("html")
-    )
-    round_fn = _round_fn(spark, corpus, robots, politeness, cfg)
-
-    passes = 0
-    for _ in range(cfg.max_passes):
-        src = spark.readStream.schema(CAND_SCHEMA).parquet(cfg.frontier_in)
-        q = (
-            src.writeStream.foreachBatch(round_fn)
-            .option("checkpointLocation", cfg.checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        # seeds are canonicalized once, here; outlinks leave expand canonical
+        _publish(
+            seed_candidates(seeds).select(
+                "*",
+                F.lit(None).cast("long").alias("seq"),
+                F.lit(None).cast("int").alias("round_added"),
+            ),
+            os.path.join(cfg.stage_dir, "seeds"),
+            cfg.frontier_in,
+            "seeds",
         )
-        q.awaitTermination()
-        passes += 1
-        n_in = sum(p["numInputRows"] for p in q.recentProgress)
-        if n_in == 0:
-            break
+
+        round_fn = _round_fn(spark, corpus, robots, politeness, cfg)
+        passes = 0
+        for _ in range(cfg.max_passes):
+            src = spark.readStream.schema(CAND_SCHEMA).parquet(cfg.frontier_in)
+            q = (
+                src.writeStream.foreachBatch(round_fn)
+                .option("checkpointLocation", cfg.checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            passes += 1
+            n_in = sum(p["numInputRows"] for p in q.recentProgress)
+            if n_in == 0:
+                break
+    finally:
+        corpus.unpersist()
 
     schedule = (
         spark.read.parquet(

@@ -7,8 +7,8 @@ from crawler_spark.frontier.canon import (
     canon_expr,
     canonicalize_url,
     extract_outlinks,
+    flat_outlinks,
     host_expr,
-    outlinks_expr,
 )
 from crawler_spark.frontier.politeness import apply_politeness_budget, robots_allowed
 from crawler_spark.frontier.seen import BloomState, filter_unseen
@@ -39,19 +39,26 @@ def test_extract_outlinks_order_and_perpage_distinct():
     ]
 
 
+def _outlink_lists(df):
+    """flat_outlinks rows of ``df(url, html)`` regrouped into one list per
+    page in position order (positions must run 0..n-1)."""
+    by_page = {}
+    for r in flat_outlinks(df, ["url"], url_col="url").collect():
+        by_page.setdefault(r["url"], {})[r["pos"]] = r["child_url"]
+    return {u: [pos[i] for i in range(len(pos))] for u, pos in by_page.items()}
+
+
 def test_canon_and_outlinks_spark_match_kernel(spark):
     rows = [
         ("HTTPS://Host0.EXAMPLE:443/p/1#frag", '<a href="/x">x</a><a href="/x">d</a>'),
         ("https://h.example/a/b", '<a href="c">rel</a><a href="mailto:x@y">m</a>'),
     ]
     df = spark.createDataFrame(rows, ["url", "html"])
-    got = df.select(
-        canon_expr(F.col("url")).alias("c"),
-        outlinks_expr(F.col("url"), F.col("html")).alias("links"),
-    ).collect()
+    got = df.select(canon_expr(F.col("url")).alias("c")).collect()
+    links = _outlink_lists(df)
     for (url, html), r in zip(rows, got):
         assert r["c"] == canonicalize_url(url)
-        assert r["links"] == extract_outlinks(url, html)
+        assert links.get(url, []) == extract_outlinks(url, html)
     # host from canonical url via JVM parse_url
     hosts = df.select(host_expr(canon_expr(F.col("url"))).alias("h")).collect()
     assert hosts[0]["h"] == "host0.example"
@@ -263,11 +270,7 @@ def test_canon_batch_matches_kernel():
     assert got == want
 
 
-def test_outlinks_batch_matches_kernel():
-    import pandas as pd
-
-    from crawler_spark.frontier.canon import _outlinks_batch
-
+def test_outlinks_batch_matches_kernel(spark):
     pages = [
         ("https://a.example/root", '<a href="/b">1</a><a href="https://o.example/z">2</a>'
          '<a href="/b">dup</a><a href="#f">s</a><a href="HTTPS://A.EXAMPLE/c">3</a>'),
@@ -277,9 +280,8 @@ def test_outlinks_batch_matches_kernel():
         ("https://n.example/", "<p>no links</p>"),
         ("https://q.example/x?y=1", '<a href="/only">one</a>'),
     ]
-    base = pd.Series([p[0] for p in pages])
-    html = pd.Series([p[1] for p in pages])
-    got = _outlinks_batch(base, html).tolist()
+    links = _outlink_lists(spark.createDataFrame(pages, ["url", "html"]))
+    got = [links.get(b, []) for b, _ in pages]
     want = [extract_outlinks(b, h) for b, h in pages]
     assert got == want
 
@@ -341,23 +343,17 @@ def test_canon_expr_matches_kernel_adversarial(spark):
 
 
 def test_outlinks_expr_matches_kernel_mixed(spark):
-    """outlinks_expr: JVM array fast path on all-fast pages, Arrow kernel on
-    pages with any slow href — equal to the Python kernel either way."""
-    from crawler_spark.frontier.canon import outlinks_expr
-
+    """flat_outlinks on pages with all-fast hrefs and pages with a slow
+    href (path-relative, non-http) — equal to the Python kernel either
+    way."""
     pages = [
         ("https://a.example/root", '<a href="/x">1</a><a href="https://b.example/Y">2</a><a href="/x">d</a>'),
         ("https://c.example/d/e", '<a href="rel/page">r</a><a href="/abs">a</a>'),
         ("https://e.example/", "<p>none</p>"),
         ("https://f.example/", '<a href="ftp://files.example/f">non-http kept out</a><a href="/ok">k</a>'),
     ]
-    df = spark.createDataFrame(pages, ["url", "html"])
-    got = [
-        r["links"]
-        for r in df.select(
-            outlinks_expr(F.col("url"), F.col("html")).alias("links")
-        ).collect()
-    ]
+    links = _outlink_lists(spark.createDataFrame(pages, ["url", "html"]))
+    got = [links.get(u, []) for u, _ in pages]
     want = [extract_outlinks(u, h) for u, h in pages]
     assert got == want
 

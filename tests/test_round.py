@@ -1,0 +1,98 @@
+"""The crawl round's stages (scheduler.admit / fetch_round / expand) as the
+streaming crawl and the benchmark kernel run them."""
+
+import os
+
+import pytest
+
+from crawler_spark.benchmarks import frontier_round_kernel
+from crawler_spark.corpus import make_corpus
+from crawler_spark.streaming import StreamCrawlConfig, stream_crawl
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_stream_rejects_duplicate_url_canon_corpus(spark, tmp_path_factory):
+    """Two pages with one canonical url break the fetch join's contract:
+    the stream raises the batch crawl's ValueError, naming the key, before
+    it publishes anything, and leaves no cache behind."""
+    pages = spark.createDataFrame(
+        [
+            ("https://h.example/p/0", '<a href="/p/1">a</a>'),
+            ("HTTPS://H.example:443/p/0", '<a href="/p/2">b</a>'),
+            ("https://h.example/p/1", "<p>leaf</p>"),
+            ("https://h.example/p/2", "<p>leaf</p>"),
+        ],
+        "url string, html string",
+    )
+    seeds = spark.createDataFrame(
+        [("https://h.example/p/0", 0, 0)], "url string, priority int, seq long"
+    )
+    cfg = StreamCrawlConfig(work_dir=str(tmp_path_factory.mktemp("stream_dup")), n_buckets=8)
+    before = _persisted(spark)
+    with pytest.raises(ValueError, match="'https://h.example/p/0'"):
+        stream_crawl(spark, pages, seeds, None, None, cfg)
+    assert not os.path.exists(cfg.frontier_in)
+    assert _persisted(spark) == before
+
+
+def _plan_nodes(plan):
+    """Node names of a plan tree, NOT descending into cached relations."""
+    names = [plan.nodeName()]
+    kids = plan.children()
+    for i in range(kids.size()):
+        names += _plan_nodes(kids.apply(i))
+    return names
+
+
+def test_stream_batches_fetch_from_canonical_corpus_cache(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The stream canonicalizes its corpus once: every batch's fetch join
+    reads it from the cache and evaluates no Python UDF on the corpus side,
+    and the stream releases the cache when it drains."""
+    import crawler_spark.scheduler as sch
+
+    corpus = make_corpus(seed=11, n_hosts=6, pages_per_host=10, n_seed_hosts=3)
+    pages = spark.createDataFrame(corpus["pages"])
+    seeds = spark.createDataFrame(corpus["seeds"])
+    fetch_join_fn = sch._fetch_join
+    plans = []
+
+    def recording(corpus_df, scheduled, cfg):
+        ok = fetch_join_fn(corpus_df, scheduled, cfg)
+        plans.append(_plan_nodes(ok._jdf.queryExecution().optimizedPlan()))
+        return ok
+
+    monkeypatch.setattr(sch, "_fetch_join", recording)
+    before = _persisted(spark)
+    cfg = StreamCrawlConfig(
+        work_dir=str(tmp_path_factory.mktemp("stream_corpus")), n_buckets=8, max_passes=60
+    )
+    res = stream_crawl(spark, pages, seeds, None, None, cfg)
+    assert res["schedule"].count() > 0
+    assert len(plans) >= 2
+    for nodes in plans:
+        assert "ArrowEvalPython" not in nodes, nodes
+        assert "InMemoryRelation" in nodes, nodes
+    assert _persisted(spark) == before
+
+
+def test_frontier_round_kernel_smoke(spark):
+    """The bench kernel runs the production stages end to end and returns
+    the keys bench.py reads."""
+    n_urls, n_hosts = 20_000, 100
+    before = _persisted(spark)
+    r = frontier_round_kernel(spark, n_urls=n_urls, n_hosts=n_hosts)
+    assert 0 < r["urls_scheduled"] <= n_hosts * 512
+    assert r["outlinks"] > 0
+    for key in (
+        "round_wall_sec",
+        "urls_scheduled_per_sec",
+        "canary_sec",
+        "canary_io_sec",
+    ):
+        assert key in r, key
+    assert _persisted(spark) == before
