@@ -12,7 +12,7 @@ inputs, run through the production stages of the scheduler
 
     generate urls -> canonicalize (Arrow UDF) -> admit: first-occurrence
       dedup -> Bloom probe + exact anti-join vs seen -> robots -> seq
-      -> fetch: per-host politeness window -> bucketed fetch-as-join
+      -> fetch: per-host politeness window -> broadcast fetch-as-join
       -> expand: outlink extraction (mapInArrow)
 
 Input is generated *distributed* (spark.range + column exprs, no
@@ -38,7 +38,7 @@ from crawler_spark.frontier.canon import (
     url_hash_expr,
 )
 from crawler_spark.frontier.seen import BloomState
-from crawler_spark.scheduler import CrawlConfig, _release, admit, expand, fetch_round
+from crawler_spark.scheduler import _release, admit, expand, fetch_round
 
 # deterministic pseudo-uniform in [0, 1): Knuth multiplicative hash mod a
 # prime — same value for a given id at any parallelism.
@@ -93,12 +93,6 @@ def synth_pages(urls: DataFrame, links_per_page: int = 3, filler_words: int = 60
         F.format_string(fmt, *link_exprs, F.col("id")).alias("html"),
     )
 
-
-# Bucket count of the stored corpus: a property of the TABLE, not of the
-# cluster size — both parallelism levels read the same 128-bucket layout,
-# exactly as two differently-sized clusters would read the same Iceberg
-# table (bucket(url_canon, 128) partition transform).
-FETCH_BUCKETS = 128
 
 # I/O canary probe sizing: 16 × 4 MiB fsync'd chunks = 64 MiB per probe.
 _IO_PROBE_CHUNK_MIB = 4
@@ -157,25 +151,12 @@ def frontier_round_kernel(
 
     Synthetic inputs (set up untimed): ``n_urls`` raw candidate urls over
     ``n_hosts`` hosts, a seen table and Bloom filter holding every
-    ``SEEN_EVERY``-th url, a robots table, and the bucketed corpus. The
-    timed round is the scheduler's own stages: admit → fetch_round (the
-    ``"bucketed"`` fetch join) → expand.
+    ``SEEN_EVERY``-th url, a robots table, and the corpus. The timed round
+    is the scheduler's own stages, as ``crawl()`` runs them: admit →
+    fetch_round → expand.
     """
-    cfg = CrawlConfig(
-        checkpoint_dir="",
-        default_budget=BUDGET,
-        n_buckets=N_BUCKETS,
-        fetch_join="bucketed",
-        corpus_buckets=FETCH_BUCKETS,
-    )
     raw = synth_frontier(spark, n_urls, n_hosts)
-    # The corpus is persisted hash-partitioned by url_canon — the local-mode
-    # stand-in for an Iceberg table STORED with a bucket(url_canon, 128)
-    # layout: bucketing is paid once at write time and reused by every
-    # round, so it belongs to setup, not to the timed round.
-    pages = synth_pages(
-        raw, links_per_page=LINKS_PER_PAGE, filler_words=FILLER_WORDS
-    ).repartition(FETCH_BUCKETS, "url_canon")
+    pages = synth_pages(raw, links_per_page=LINKS_PER_PAGE, filler_words=FILLER_WORDS)
 
     # pre-seen state: every k-th URL, already canonical
     seen = (
@@ -205,7 +186,7 @@ def frontier_round_kernel(
     # 0.27 before this change). Compressed-serialized blocks model the real
     # deployment — executors re-reading a compressed Iceberg/parquet corpus
     # — and turn the re-read into decompression CPU, which scales with
-    # cores. The layout (128 url_canon hash buckets) is unchanged.
+    # cores.
     pages.persist(StorageLevel.DISK_ONLY)
     pages.count()
 
@@ -240,7 +221,7 @@ def frontier_round_kernel(
             cands, seen, bloom, bloom_state, robots, N_BUCKETS, 0, 0
         )
         caches += [fresh, frontier._assign_seq_cache]
-        fetched, _deferred = fetch_round(frontier, pages, politeness, BUDGET, cfg)
+        fetched, _deferred = fetch_round(frontier, pages, politeness, BUDGET, BUDGET)
         caches += fetched._fetch_round_caches
         n_outlinks = expand(fetched, F.col("seq")).count()
         n_scheduled = fetched.count()  # served from the stage's cache

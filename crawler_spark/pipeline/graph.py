@@ -282,7 +282,8 @@ def link_reciprocity(
     (or hand it to :func:`trustrank` as a distrust candidate).
 
     Output: ``(node, n_out, n_reciprocal, reciprocity)`` — counts exact
-    ints, the ratio ONE IEEE division.
+    ints, the ratio ONE IEEE division. Self-loops are dropped: ``u→u`` is
+    its own reverse, so it would count as reciprocated.
 
     Shape: distinct edges self-joined on the REVERSED key — an
     equi-join on (src, dst) = (dst, src), co-partitionable, never a
@@ -290,9 +291,12 @@ def link_reciprocity(
     popular node never forms pairs across its edges) — then one
     src-keyed count with map-side combine.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+        .persist()
+    )
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = e.join(rev, ["src", "dst"], "left_semi").groupBy("src").agg(
         F.count(F.lit(1)).alias("n_reciprocal")

@@ -154,11 +154,17 @@ def passage_windows(
     the integer division never sees a negative operand (Spark ``div``
     truncates toward zero, DuckDB ``//`` floors — they disagree ONLY
     below zero).
+
+    ``ValueError`` unless ``0 < stride <= size``: a stride past the window
+    size skips tokens between windows and can leave an empty window at the
+    tail.
     """
     from crawler_spark.pipeline.dedup import md5h60
     from crawler_spark.pipeline.textstats import tokens_expr
 
     b, s = int(size), int(stride)
+    if not 0 < s <= b:
+        raise ValueError(f"passage_windows needs 0 < stride <= size, got stride={s}, size={b}")
     toks = df.select(
         F.col(id_col), tokens_expr(F.col(text_col)).alias("_toks")
     ).withColumn("_n", F.size("_toks")).filter(F.col("_n") >= 1)

@@ -40,10 +40,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(dot_expr(a, a))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -58,7 +58,6 @@ from crawler_spark.frontier.politeness import (
     politeness_cap,
     robots_allowed,
 )
-from crawler_spark.frontier.cuckoo import CuckooState
 from crawler_spark.frontier.seen import BloomState, filter_unseen
 
 FRONTIER_SCHEMA = StructType(
@@ -90,6 +89,14 @@ METRICS_DDL = (
 # (see _snapshot): a round of a few hundred frontier rows writes one file
 SNAPSHOT_ROWS_PER_PART = 2048
 
+# compact the append-only seen delta log whenever it reaches this many
+# segments: rewrite the union into ONE bucketed snapshot and reset the log.
+# Keeps the per-round read at O(segments) directories instead of O(rounds) —
+# after R rounds an uncompacted log is R small-file dirs, the classic
+# many-snapshots death at 10^10 URLs. Amortized write cost stays O(total/K
+# per compaction); Iceberg maps this to rewrite_data_files.
+SEEN_COMPACT_EVERY = 8
+
 
 @dataclass
 class CrawlConfig:
@@ -97,38 +104,6 @@ class CrawlConfig:
     max_rounds: int = 50
     default_budget: int = 16
     n_buckets: int = 32
-    bits_per_bucket: int = 1 << 16
-    use_bloom: bool = True
-    # which approximate seen-filter fronts the exact anti-join when
-    # use_bloom is set: "bloom" (bitmap; smallest state) or "cuckoo"
-    # (fingerprint table; supports deletion → recrawl expiry without a
-    # filter rebuild). Both are partitioned by host bucket and exactness
-    # never depends on the choice (filter_unseen's anti-join backstop).
-    seen_filter: str = "bloom"
-    cuckoo_table_buckets: int = 1 << 12
-    state_partitions: int = 0  # 0 → n_buckets
-    # fetch-as-join strategy. Both arms join against the same canonical
-    # corpus, canonicalized and persisted once per crawl (_canonical_corpus).
-    # "broadcast": collect+broadcast the scheduled set, probe the corpus
-    # map-side — right when rounds are budget-bounded SMALL (the driver-side
-    # broadcast build is serial, so it must not grow with frontier size).
-    # "bucketed": the corpus is hash-partitioned by url_canon before it is
-    # persisted (the local stand-in for an Iceberg table stored with a
-    # bucket(url_canon, N) transform — bucketing is paid once at write time,
-    # reused every round) and the fetch is a co-partitioned shuffled-hash
-    # join where ONLY the scheduled keys move; nothing serial scales with
-    # the round, which is what keeps N→4N efficiency at 10^6+-scheduled
-    # rounds (see BENCH.md).
-    fetch_join: str = "broadcast"
-    corpus_buckets: int = 128
-    # compact the append-only seen delta log whenever it reaches this many
-    # segments: rewrite the union into ONE bucketed snapshot and reset the
-    # log. Keeps the per-round read at O(segments) directories instead of
-    # O(rounds) — after R rounds an uncompacted log is R small-file dirs,
-    # the classic many-snapshots death at 10^10 URLs. Amortized write cost
-    # stays O(total/K per compaction); Iceberg maps this to
-    # rewrite_data_files. Set very large to disable.
-    seen_compact_every: int = 8
 
 
 @dataclass
@@ -279,13 +254,11 @@ def _assign_seq(allowed: DataFrame, seq_offset: int, round_added: int) -> DataFr
     return out
 
 
-def _canonical_corpus(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def _canonical_corpus(pages: DataFrame) -> DataFrame:
     """The fetch side of every round: ``pages`` projected to ``(url_canon,
     html)``, canonicalized ONCE per crawl and persisted (at scale this is the
     Iceberg pages table, already stored canonical). Left lazy, every round's
     fetch join would re-run the ``canon_expr`` UDF over the whole corpus.
-    ``fetch_join="bucketed"`` also hash-partitions it by ``url_canon``
-    before persisting (see ``CrawlConfig.fetch_join``).
 
     The round's frontier-size arithmetic relies on the pages-table contract
     that ``url_canon`` is unique; the job that materializes the cache checks
@@ -294,8 +267,6 @@ def _canonical_corpus(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
     corpus = pages.select(
         canon_expr(F.col("url")).alias("url_canon"), F.col("html").cast("string").alias("html")
     )
-    if cfg.fetch_join == "bucketed":
-        corpus = corpus.repartition(cfg.corpus_buckets, "url_canon")
     corpus.persist()
     try:
         # one global row (the smallest duplicate key, or null): no incremental
@@ -318,21 +289,16 @@ def _canonical_corpus(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
     return corpus
 
 
-def _fetch_join(corpus: DataFrame, scheduled: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def _fetch_join(corpus: DataFrame, scheduled: DataFrame) -> DataFrame:
     """Fetch-as-join: the scheduled rows whose page is in the corpus, with
     its html.
 
-    ``"broadcast"``: the scheduled set is budget-bounded (≤ hosts ×
-    max_fetches_per_round), so broadcast it and probe the html-bearing
-    corpus MAP-SIDE — the corpus, whose rows carry the page bodies, is
-    never shuffled (a sort-merge join here ships the whole corpus through
-    the shuffle every round). At warehouse scale the broadcast doubles as a
-    runtime filter pruning the Iceberg scan. ``"bucketed"``: a
-    co-partitioned shuffled-hash join against the bucketed corpus — only
-    the scheduled keys shuffle, the html side joins in place."""
-    if cfg.fetch_join == "bucketed":
-        sched_b = scheduled.repartition(cfg.corpus_buckets, "url_canon")
-        return corpus.join(sched_b.hint("shuffle_hash"), "url_canon", "inner")
+    The scheduled set is budget-bounded (≤ hosts × max_fetches_per_round),
+    so it is broadcast and the html-bearing corpus is probed MAP-SIDE — the
+    corpus, whose rows carry the page bodies, is never shuffled (a
+    sort-merge join here ships the whole corpus through the shuffle every
+    round). At warehouse scale the broadcast doubles as a runtime filter
+    pruning the Iceberg scan."""
     return corpus.join(F.broadcast(scheduled), "url_canon", "inner")
 
 
@@ -390,9 +356,10 @@ def fetch_round(
     corpus: DataFrame,
     politeness: DataFrame,
     cap: int,
-    cfg: CrawlConfig,
+    budget: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Fetch: politeness window over ``frontier`` → fetch-as-join against the
+    """Fetch: politeness window over ``frontier`` (``budget`` fetches per host
+    unless ``politeness`` says otherwise) → fetch-as-join against the
     canonical ``corpus`` (:func:`_canonical_corpus`) → misses.
 
     Returns ``(fetched, deferred)``: ``fetched`` = the scheduled rows with
@@ -400,9 +367,7 @@ def fetch_round(
     failed fetch, carries null html), ``deferred`` = the frontier rows over
     their host's budget. ``fetched._fetch_round_caches`` lists what this
     stage persisted; the caller releases it."""
-    scheduled, deferred = apply_politeness_budget(
-        frontier, politeness, cfg.default_budget, cap=cap
-    )
+    scheduled, deferred = apply_politeness_budget(frontier, politeness, budget, cap=cap)
     # reused by the fetch join, the miss anti-join, AND deferred's
     # frontier∖scheduled anti-join — cache the window output once
     scheduled.persist()
@@ -410,18 +375,10 @@ def fetch_round(
     # Left-outer semantics (miss = fetch failure) are recovered with a
     # cheap anti-join of the two small sides; miss derives from the
     # PERSISTED ok so the anti-join reads the cache, not a re-join.
-    ok = _fetch_join(corpus, scheduled, cfg).withColumn("fetched", F.lit(True))
+    ok = _fetch_join(corpus, scheduled).withColumn("fetched", F.lit(True))
     ok.persist()
-    if cfg.fetch_join == "bucketed":
-        miss_src = scheduled.repartition(cfg.corpus_buckets, "url_canon").join(
-            ok.select("url_canon").hint("shuffle_hash"), "url_canon", "left_anti"
-        )
-    else:
-        miss_src = scheduled.join(
-            F.broadcast(ok.select("url_canon")), "url_canon", "left_anti"
-        )
     miss = (
-        miss_src
+        scheduled.join(F.broadcast(ok.select("url_canon")), "url_canon", "left_anti")
         .withColumn("html", F.lit(None).cast("string"))
         .withColumn("fetched", F.lit(False))
     )
@@ -468,20 +425,15 @@ def crawl(
     equi-join on canonical url; ``ValueError`` if two pages share one);
     ``seeds(url, priority, seq)``; ``robots(host, disallow_prefixes)``;
     ``politeness(host, max_fetches_per_round)``."""
-    nparts = cfg.state_partitions or cfg.n_buckets
-    if not cfg.use_bloom:
-        bloom_state = None
-    elif cfg.seen_filter == "cuckoo":
-        bloom_state = CuckooState(cfg.n_buckets, cfg.cuckoo_table_buckets)
-    else:
-        bloom_state = BloomState(cfg.n_buckets, cfg.bits_per_bucket)
+    nparts = cfg.n_buckets
+    bloom_state = BloomState(cfg.n_buckets)
 
     if politeness is None:
         politeness = spark.createDataFrame(
             [], "host string, max_fetches_per_round int"
         )
 
-    corpus = _canonical_corpus(pages, cfg)
+    corpus = _canonical_corpus(pages)
     # the caches the crawl holds at any moment besides the corpus; released
     # at the end of each round, and on the way out if a round raises
     caches: list[DataFrame] = []
@@ -497,11 +449,15 @@ def crawl(
                 frontier_size = frontier.count()
             seen_paths = manifest.get("seen_paths") or [manifest["seen_path"]]
             seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths)
-            bloom = (
-                spark.read.schema(bloom_state.schema).parquet(manifest["bloom_path"])
-                if cfg.use_bloom and manifest.get("bloom_path")
-                else (bloom_state.empty(spark) if bloom_state else None)
-            )
+            if manifest.get("bloom_path"):
+                bloom = spark.read.schema(bloom_state.schema).parquet(manifest["bloom_path"])
+            else:
+                # a manifest without a filter: rebuild it from the seen log. An
+                # empty bitmap would call every candidate definitely new and
+                # skip the exact anti-join, re-admitting seen urls.
+                bloom = bloom_state.merge(
+                    bloom_state.empty(spark), seen.select("bucket", "url_hash")
+                )
         else:
             start_round = 0
             # within-batch first-occurrence dedup keeps the smallest seed seq
@@ -512,9 +468,7 @@ def crawl(
             # free by-product of _assign_seq's offsets collect — no count() job
             seq_offset = frontier._assign_seq_total
             seen = seeds_c.select("url_hash", "bucket", "url_canon")
-            bloom = bloom_state.empty(spark) if bloom_state else None
-            if bloom_state is not None:
-                bloom = bloom_state.merge(bloom, seen.select("bucket", "url_hash"))
+            bloom = bloom_state.merge(bloom_state.empty(spark), seen.select("bucket", "url_hash"))
             # round-0 checkpoint of initial state
             frontier = _snapshot(spark, frontier, _ckpt(cfg, -1, "frontier"), nparts, rows=seq_offset)
             _release(caches)
@@ -527,8 +481,7 @@ def crawl(
             # this undercounts by at most the blocked ones.
             seen = _snapshot(spark, seen, _ckpt(cfg, -1, "seen"), nparts, rows=seq_offset)
             seen_paths = [_ckpt(cfg, -1, "seen")]
-            if bloom is not None:
-                bloom = _snapshot(spark, bloom, _ckpt(cfg, -1, "bloom"), 1)
+            bloom = _snapshot(spark, bloom, _ckpt(cfg, -1, "bloom"), 1)
             frontier_size = seq_offset  # every admitted seed is a frontier row
             _write_manifest(
                 cfg,
@@ -538,7 +491,7 @@ def crawl(
                     "frontier_size": frontier_size,
                     "frontier_path": _ckpt(cfg, -1, "frontier"),
                     "seen_paths": seen_paths,
-                    "bloom_path": _ckpt(cfg, -1, "bloom") if bloom is not None else None,
+                    "bloom_path": _ckpt(cfg, -1, "bloom"),
                 },
             )
 
@@ -556,7 +509,9 @@ def crawl(
             if frontier_size <= 0:
                 break
 
-            fetched, deferred = fetch_round(frontier, corpus, politeness, cap, cfg)
+            fetched, deferred = fetch_round(
+                frontier, corpus, politeness, cap, cfg.default_budget
+            )
             caches += fetched._fetch_round_caches
 
             schedule_log = fetched.select(
@@ -620,10 +575,7 @@ def crawl(
             frontier_next = deferred.select(*[f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
                 new_entries.select(*[f.name for f in FRONTIER_SCHEMA.fields])
             )
-            if bloom_state is not None:
-                bloom_next = bloom_state.merge(bloom, new_seen.select("bucket", "url_hash"))
-            else:
-                bloom_next = None
+            bloom_next = bloom_state.merge(bloom, new_seen.select("bucket", "url_hash"))
 
             frontier = _snapshot(
                 spark, frontier_next, _ckpt(cfg, rnd, "frontier"), nparts, rows=frontier_size
@@ -632,7 +584,7 @@ def crawl(
             # comment — O(new) write, not O(total)); sized like the seed delta
             _snapshot(spark, new_seen, _ckpt(cfg, rnd, "seen"), nparts, rows=n_admitted)
             seen_paths = seen_paths + [_ckpt(cfg, rnd, "seen")]
-            if len(seen_paths) >= cfg.seen_compact_every:
+            if len(seen_paths) >= SEEN_COMPACT_EVERY:
                 # delta-log compaction: one bucketed snapshot replaces the log
                 seen = _snapshot(
                     spark,
@@ -643,8 +595,7 @@ def crawl(
                 seen_paths = [_ckpt(cfg, rnd, "seen_compacted")]
             else:
                 seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths)
-            if bloom_next is not None:
-                bloom = _snapshot(spark, bloom_next, _ckpt(cfg, rnd, "bloom"), 1)
+            bloom = _snapshot(spark, bloom_next, _ckpt(cfg, rnd, "bloom"), 1)
             seq_offset += n_admitted
             _release(caches)
 
@@ -656,7 +607,7 @@ def crawl(
                     "frontier_size": frontier_size,
                     "frontier_path": _ckpt(cfg, rnd, "frontier"),
                     "seen_paths": seen_paths,
-                    "bloom_path": _ckpt(cfg, rnd, "bloom") if bloom_next is not None else None,
+                    "bloom_path": _ckpt(cfg, rnd, "bloom"),
                 },
             )
             rnd += 1

@@ -63,7 +63,6 @@ from crawler_spark.frontier.canon import host_bucket_expr, host_expr, url_hash_e
 from crawler_spark.frontier.politeness import politeness_cap
 from crawler_spark.scheduler import (
     SEEN_SCHEMA,
-    CrawlConfig,
     _canonical_corpus,
     _release,
     admit,
@@ -154,15 +153,6 @@ def _publish(
     return n
 
 
-def _round_config(cfg: StreamCrawlConfig) -> CrawlConfig:
-    """The scheduler stages' settings for a stream: its budget and buckets,
-    and the broadcast fetch join (the scheduled set of a batch is
-    budget-bounded)."""
-    return CrawlConfig(
-        checkpoint_dir=cfg.work_dir, default_budget=cfg.default_budget, n_buckets=cfg.n_buckets
-    )
-
-
 def _round_fn(
     spark: SparkSession,
     corpus: DataFrame,
@@ -176,7 +166,6 @@ def _round_fn(
     if politeness is None:
         politeness = spark.createDataFrame([], "host string, max_fetches_per_round int")
     cap = politeness_cap(politeness, cfg.default_budget)  # once, not per batch
-    round_cfg = _round_config(cfg)
 
     def run_round(batch: DataFrame, batch_id: int) -> None:
         batch = batch.persist()
@@ -213,7 +202,7 @@ def _round_fn(
             )
 
             fetched, deferred = fetch_round(
-                admitted.unionByName(carried), corpus, politeness, cap, round_cfg
+                admitted.unionByName(carried), corpus, politeness, cap, cfg.default_budget
             )
             caches += fetched._fetch_round_caches
             fetched.select(
@@ -276,7 +265,7 @@ def stream_crawl(
     """
     # canonicalized once per stream and persisted; a duplicate url_canon
     # raises here, before anything is published
-    corpus = _canonical_corpus(pages, _round_config(cfg))
+    corpus = _canonical_corpus(pages)
     try:
         for d in (cfg.frontier_in, cfg.schedule_dir, cfg.seen_dir, cfg.stage_dir):
             os.makedirs(d, exist_ok=True)

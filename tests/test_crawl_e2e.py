@@ -61,14 +61,10 @@ def _schedule_tuples_oracle(oracle_result):
     return sorted(out, key=lambda t: (t[0], t[1], t[2]))
 
 
-@pytest.mark.parametrize("use_bloom", [True, False])
-def test_crawl_matches_oracle(spark, corpus, oracle_result, tmp_path_factory, use_bloom):
-    ckpt = str(tmp_path_factory.mktemp(f"ckpt_bloom_{use_bloom}"))
+def test_crawl_matches_oracle(spark, corpus, oracle_result, tmp_path_factory):
+    ckpt = str(tmp_path_factory.mktemp("ckpt_bloom"))
     pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
-    cfg = CrawlConfig(
-        checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8,
-        use_bloom=use_bloom,
-    )
+    cfg = CrawlConfig(checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8)
     result = crawl(spark, pages, seeds, robots, politeness, cfg)
 
     got = _schedule_tuples_spark(result)
@@ -78,21 +74,6 @@ def test_crawl_matches_oracle(spark, corpus, oracle_result, tmp_path_factory, us
 
     got_seen = {r["url_canon"] for r in result.seen.collect()}
     assert got_seen == oracle_result.seen
-
-
-def test_bucketed_fetch_join_identical(spark, corpus, oracle_result, tmp_path_factory):
-    """fetch_join="bucketed" (co-partitioned shuffled-hash fetch against the
-    stored-bucketed corpus) is a pure physical-strategy swap: schedule and
-    seen set must match the oracle exactly like the broadcast path."""
-    ckpt = str(tmp_path_factory.mktemp("ckpt_bucketed"))
-    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
-    cfg = CrawlConfig(
-        checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8,
-        fetch_join="bucketed", corpus_buckets=16,
-    )
-    result = crawl(spark, pages, seeds, robots, politeness, cfg)
-    assert _schedule_tuples_spark(result) == _schedule_tuples_oracle(oracle_result)
-    assert {r["url_canon"] for r in result.seen.collect()} == oracle_result.seen
 
 
 def test_extracted_text_byte_identical(spark, corpus):
@@ -196,7 +177,28 @@ def test_resume_from_pre_frontier_size_manifest(spark, corpus, oracle_result, tm
     assert got == want
 
 
-def test_checkpoint_layout_iceberg_migration_contract(spark, corpus, tmp_path_factory):
+def test_resume_without_bloom_path_rebuilds_filter(spark, corpus, oracle_result, tmp_path_factory):
+    """A manifest with no Bloom filter resumes with one rebuilt from the seen
+    log: an empty filter would call every candidate new, skip the exact
+    anti-join and schedule seen urls again."""
+    import json
+
+    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_nobloom"))
+    cfg = CrawlConfig(checkpoint_dir=ckpt, max_rounds=3, default_budget=16, n_buckets=8)
+    crawl(spark, pages, seeds, robots, politeness, cfg)
+    mpath = os.path.join(ckpt, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["bloom_path"] = None
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    cfg_full = CrawlConfig(checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8)
+    resumed = crawl(spark, pages, seeds, robots, politeness, cfg_full, resume=True)
+    assert _schedule_tuples_spark(resumed) == _schedule_tuples_oracle(oracle_result)
+
+
+def test_checkpoint_layout_iceberg_migration_contract(spark, corpus, tmp_path_factory, monkeypatch):
     """The parquet-dir checkpoint IS the Iceberg migration contract (SURVEY
     S7): pin the layout so swapping _snapshot/_write_manifest for
     writeTo().createOrReplace()/append() + catalog snapshot ids is a pure
@@ -218,12 +220,12 @@ def test_checkpoint_layout_iceberg_migration_contract(spark, corpus, tmp_path_fa
     import hashlib
     import json
 
+    import crawler_spark.scheduler as sch
+
+    monkeypatch.setattr(sch, "SEEN_COMPACT_EVERY", 10_000)  # keep the raw delta log
     pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
     ckpt = str(tmp_path_factory.mktemp("ckpt_layout"))
-    cfg = CrawlConfig(
-        checkpoint_dir=ckpt, max_rounds=3, default_budget=16, n_buckets=8,
-        seen_compact_every=10_000,  # keep the raw delta log (no compaction)
-    )
+    cfg = CrawlConfig(checkpoint_dir=ckpt, max_rounds=3, default_budget=16, n_buckets=8)
     result = crawl(spark, pages, seeds, robots, politeness, cfg)
     with open(os.path.join(ckpt, "manifest.json")) as f:
         man = json.load(f)
@@ -254,10 +256,7 @@ def test_checkpoint_layout_iceberg_migration_contract(spark, corpus, tmp_path_fa
 
     # resume and run the crawl to completion: the old deltas must be
     # APPENDED AROUND, not rewritten (their bytes are immutable)
-    cfg_full = CrawlConfig(
-        checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8,
-        seen_compact_every=10_000,
-    )
+    cfg_full = CrawlConfig(checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8)
     resumed = crawl(spark, pages, seeds, robots, politeness, cfg_full, resume=True)
     assert resumed.rounds > rounds
     for p, d in before.items():
@@ -379,9 +378,8 @@ def _plan_nodes(plan):
     return names
 
 
-@pytest.mark.parametrize("fetch_join", ["broadcast", "bucketed"])
 def test_steady_round_fetch_reads_canonical_corpus_cache(
-    spark, corpus, tmp_path_factory, monkeypatch, fetch_join
+    spark, corpus, tmp_path_factory, monkeypatch
 ):
     """The corpus is canonicalized once per crawl: a steady round's fetch
     join reads it from the cache and evaluates no Python UDF
@@ -392,16 +390,15 @@ def test_steady_round_fetch_reads_canonical_corpus_cache(
     fetch_join_fn = sch._fetch_join
     plans = []
 
-    def recording(corpus_df, scheduled, cfg):
-        ok = fetch_join_fn(corpus_df, scheduled, cfg)
+    def recording(corpus_df, scheduled):
+        ok = fetch_join_fn(corpus_df, scheduled)
         plans.append(_plan_nodes(ok._jdf.queryExecution().optimizedPlan()))
         return ok
 
     monkeypatch.setattr(sch, "_fetch_join", recording)
     cfg = CrawlConfig(
-        checkpoint_dir=str(tmp_path_factory.mktemp(f"ckpt_fetchplan_{fetch_join}")),
+        checkpoint_dir=str(tmp_path_factory.mktemp("ckpt_fetchplan")),
         max_rounds=3, default_budget=16, n_buckets=8,
-        fetch_join=fetch_join, corpus_buckets=16,
     )
     crawl(spark, pages, seeds, robots, politeness, cfg)
     assert len(plans) == 3

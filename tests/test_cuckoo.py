@@ -176,32 +176,3 @@ def test_cogroup_probe_matches_broadcast_probe(spark, keyed):
     via_cg = {(r["url_canon"], r["maybe_seen"]) for r in cs.probe(cands, state).collect()}
     assert via_bc == via_cg
     state.unpersist()
-
-
-def test_scheduler_runs_with_cuckoo_filter(spark, tmp_path):
-    """CrawlConfig(seen_filter="cuckoo") drives the same BSP rounds to the
-    same schedule as the default Bloom config (exactness never depends on
-    the approximate filter)."""
-    from crawler_spark.corpus import make_corpus
-    from crawler_spark.scheduler import CrawlConfig, crawl
-
-    corpus = make_corpus(seed=11, n_hosts=6, pages_per_host=8, n_seed_hosts=3)
-    pages = spark.createDataFrame(corpus["pages"])
-    seeds = spark.createDataFrame(corpus["seeds"])
-    robots = spark.createDataFrame(corpus["robots"])
-    pol = spark.createDataFrame(corpus["politeness"])
-
-    def run(name, **kw):
-        cfg = CrawlConfig(
-            checkpoint_dir=str(tmp_path / name),
-            max_rounds=4,
-            default_budget=4,
-            n_buckets=4,
-            **kw,
-        )
-        res = crawl(spark, pages, seeds, robots, pol, cfg)
-        return {
-            (r["round"], r["seq"], r["url"]) for r in res.schedule.collect()
-        }
-
-    assert run("cuckoo", seen_filter="cuckoo", cuckoo_table_buckets=1 << 8) == run("bloom")

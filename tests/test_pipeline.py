@@ -1558,7 +1558,10 @@ def test_trustrank_seed_gated_teleport(spark):
 def test_link_reciprocity_hand_graph(spark):
     from crawler_spark.pipeline.graph import link_reciprocity
 
-    edges = [("a", "b"), ("b", "a"), ("a", "c"), ("b", "c"), ("c", "b")]
+    edges = [
+        ("a", "b"), ("b", "a"), ("a", "c"), ("b", "c"), ("c", "b"),
+        ("a", "a"), ("c", "c"),  # self-loops: dropped, never reciprocated
+    ]
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {r["node"]: r for r in link_reciprocity(df, min_out=2).collect()}
     # a: out {b,c}, b comes back -> 1/2; b: out {a,c}, both come back -> 1
@@ -1566,7 +1569,7 @@ def test_link_reciprocity_hand_graph(spark):
     assert got["a"]["reciprocity"] == 0.5
     assert (got["b"]["n_out"], got["b"]["n_reciprocal"]) == (2, 2)
     assert got["b"]["reciprocity"] == 1.0
-    assert "c" not in got  # only 1 out-edge, below min_out
+    assert "c" not in got  # 1 out-edge besides its self-loop, below min_out
 
 
 def test_bfs_depth_rings_and_sentinel(spark):
@@ -1603,3 +1606,14 @@ def test_passage_windows_overlap_tail_and_hash(spark):
     assert len(b) == 1 and b[0]["n_pass_tokens"] == 2
     assert b[0]["passage_hash"] == py_md5h60("one two")
     assert not [r for r in out if r["doc_id"] == 3]
+
+
+@pytest.mark.parametrize("size,stride", [(2, 4), (4, 0)])
+def test_passage_windows_rejects_bad_stride(spark, size, stride):
+    """A stride outside (0, size] raises: n=3, size=2, stride=4 used to emit
+    an empty trailing window."""
+    from crawler_spark.pipeline.packing import passage_windows
+
+    df = spark.createDataFrame([(1, "t0 t1 t2")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="stride"):
+        passage_windows(df, "doc_id", "text", size=size, stride=stride)

@@ -2,9 +2,8 @@
 
 The scale story (SURVEY.md §4, README "Design for 10^10-URL scale") makes
 concrete promises about PLAN SHAPE: dims broadcast, parquet scans receive
-pushed filters and pruned schemas, the bucketed fetch join is a shuffled-hash
-join (never a sort-merge that sorts page bodies), and no frontier-sized
-dataset ever funnels through a single partition. Correctness tests can't see
+pushed filters and pruned schemas, and no frontier-sized dataset ever
+funnels through a single partition. Correctness tests can't see
 any of that — these read the formatted explain output the way a reviewer
 would and fail if a regression quietly changes the strategy.
 """
@@ -48,29 +47,6 @@ def test_parquet_scan_pushdown_and_pruning(spark, sf001_dir):
     # ReadSchema carries only the needed columns; `text` must not be decoded
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schema and "text" not in read_schema[0], plan
-
-
-def test_bucketed_fetch_join_is_shuffled_hash(spark):
-    """The big-round fetch join (corpus stored bucketed by url_canon) must be
-    a shuffled-hash join: sort-merge would sort the html-bearing side inside
-    every bucket — pure waste that grows with page size."""
-    pages = spark.range(1000).select(
-        F.format_string("https://h%d.example.com/p/%d", F.pmod("id", F.lit(7)), "id").alias(
-            "url_canon"
-        ),
-        F.lit("<html></html>").alias("html"),
-    ).repartition(8, "url_canon")
-    sched = spark.range(100).select(
-        F.format_string("https://h%d.example.com/p/%d", F.pmod("id", F.lit(7)), "id").alias(
-            "url_canon"
-        )
-    )
-    joined = pages.join(
-        sched.repartition(8, "url_canon").hint("shuffle_hash"), "url_canon", "left_semi"
-    )
-    plan = _plan(joined)
-    assert "ShuffledHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def _frontier_df(spark, n=200, hosts=5):

@@ -61,8 +61,8 @@ def test_stream_batches_fetch_from_canonical_corpus_cache(
     fetch_join_fn = sch._fetch_join
     plans = []
 
-    def recording(corpus_df, scheduled, cfg):
-        ok = fetch_join_fn(corpus_df, scheduled, cfg)
+    def recording(corpus_df, scheduled):
+        ok = fetch_join_fn(corpus_df, scheduled)
         plans.append(_plan_nodes(ok._jdf.queryExecution().optimizedPlan()))
         return ok
 
