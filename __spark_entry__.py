@@ -2037,9 +2037,12 @@ def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("src"),
         F.pmod("event_id", F.lit(150)).alias("dst"),
     ).filter(F.col("src") != F.col("dst"))
-    seeds = edges.select(F.col("src").alias("node")).filter(
-        F.col("node") < 5
-    ).distinct()
+    seeds = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .filter(F.col("node") < 5)
+        .distinct()
+    )
     return bfs_depth(edges, seeds, max_depth=3, small_frontier=True)
 
 
@@ -3455,7 +3458,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(make_png_media(spark, n=60))
         .unionByName(make_jpeg_media(spark, n=60))
     )
-    return resize_images(media, width=8, height=8, allow_stub=False)
+    return resize_images(media, width=8, height=8)
 
 
 def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3466,7 +3469,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     them."""
     from crawler_spark.pipeline.multimodal import make_y4m_media, sample_frames
 
-    return sample_frames(make_y4m_media(spark, n=60), every_n=2, allow_stub=False)
+    return sample_frames(make_y4m_media(spark, n=60), every_n=2)
 
 
 def q_multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -153,8 +153,3 @@ def extract_fields(
 
     # Stage 4: final projection in declaration order
     return staged.select(F.col(url_col), *[value[f"_v_{f.name}"].alias(f.name) for f in fields])
-
-
-def fetch_join(frontier: DataFrame, corpus: DataFrame, url_col: str = "url_canon") -> DataFrame:
-    """Fetch-as-join: inner join drops misses silently (collector.go:88-90)."""
-    return frontier.join(corpus, url_col, "inner")

@@ -122,15 +122,6 @@ def robots_prefixes_expr(text: Column) -> Column:
     return F.coalesce(prefixes, F.array().cast("array<string>"))
 
 
-def parse_robots(df: DataFrame, host_col: str = "host", text_col: str = "robots_txt") -> DataFrame:
-    """``(host, robots_txt)`` → ``(host, disallow_prefixes)`` — the dim
-    table :func:`robots_allowed` consumes. Map-only; no shuffle."""
-    return df.select(
-        F.col(host_col).alias("host"),
-        robots_prefixes_expr(F.col(text_col)).alias("disallow_prefixes"),
-    )
-
-
 #: value of an ``Allow:`` line (leading ws / case-insensitive directive)
 _ALLOW_RE = r"(?i)^\s*allow\s*:\s*(\S*)"
 

@@ -1,53 +1,16 @@
-"""Authority-based frontier priorities.
+"""Change-rate frontier priorities.
 
-The reference schedules strictly FIFO (chan order,
-/root/reference/collector-url.go:23-46); our engine makes priority a DATA
-column the politeness window orders by (SURVEY §2.5 "priority queue").
-This module computes that column from the crawl's own link structure:
-host-level PageRank over the observed outlink graph, banded into integer
-priorities (smaller = sooner, matching the frontier's ascending sort).
-
-Composition, not new machinery: the rank comes from
-:func:`crawler_spark.pipeline.graph.pagerank` (oracle-checked), the band
-from ``ntile`` over rank with a fully-tiebroken order. Host graphs are
-node-small (10^7 hosts for a 10^10-page crawl), so ``small_ranks=True``
-broadcasts the rank frame and the edge list never reshuffles.
+The reference schedules strictly FIFO (channel order in the reference's
+``collector-url.go``); our engine makes priority a DATA column the
+politeness window orders by (SURVEY §2.5 "priority queue").
+:func:`change_rate_priority` computes that column from each URL's observed
+fetch history: how often its content changed, times how long since it was
+last fetched.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-from crawler_spark.pipeline.graph import pagerank
-
-
-def authority_priorities(
-    host_edges: DataFrame,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-    bands: int = 4,
-    iters: int = 3,
-) -> DataFrame:
-    """``(host, priority)``: PageRank hosts on the host→host link graph,
-    then band into ``bands`` integer priorities (0 = highest authority =
-    scheduled first). Deterministic: fixed iterations, rank ties broken
-    by host ascending."""
-    ranks = pagerank(
-        host_edges, src_col=src_col, dst_col=dst_col, iters=iters, small_ranks=True
-    )
-    w = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
-    # ntile over an un-partitioned window funnels through ONE task — fine
-    # here because the rank frame is host-sized by contract (the same
-    # smallness that justified small_ranks); a page-level variant would
-    # band by fixed rank thresholds instead.
-    return pagerank_bands(ranks, bands, w)
-
-
-def pagerank_bands(ranks: DataFrame, bands: int, w) -> DataFrame:
-    return ranks.select(
-        F.col("node").alias("host"),
-        (F.ntile(bands).over(w) - 1).alias("priority"),
-    )
 
 
 def change_rate_priority(

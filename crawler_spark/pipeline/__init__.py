@@ -13,8 +13,9 @@ crawler_spark.frontier / scheduler):
 * ``similarity``  — brute-force cosine top-k (baseline) and an LSH-bucketed
                     approximate variant (the scale path).
 * ``multimodal``  — opaque-binary media columns with typed metadata and
-                    mapInPandas decode/feature plumbing (decoders stubbed:
-                    no image/audio libs in this container).
+                    mapInPandas decode plumbing over from-scratch BMP/PNG/
+                    JPEG/WAV/Y4M codecs; other formats raise
+                    ``NotImplementedError``.
 
 Scale notes are attached per function; the common theme: one shuffle per
 logical aggregation, explicit pre-aggregation before joins, broadcast for

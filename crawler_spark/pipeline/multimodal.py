@@ -19,9 +19,8 @@ grey/RGB/RGBA), baseline **JPEG** (:func:`jpeg_decode` /
 **Y4M** / YUV4MPEG2 (:func:`y4m_frames`, C444/C420 plane sizing).
 :func:`resize_images`, :func:`sample_frames`, and :func:`image_stats`
 operate on real pixels for those formats via the :func:`decode_pixels`
-magic-byte dispatcher; MP4/MP3/WebP still raise ``NotImplementedError``
-unless ``allow_stub`` routes them to the deterministic md5 fakes, which
-remain for plumbing tests.
+magic-byte dispatcher; other formats (MP4/MP3/WebP) raise
+``NotImplementedError``.
 
 Scale notes: media blobs dominate row size → (a) never shuffle the blob:
 extract features first, drop the binary, shuffle the narrow result;
@@ -41,9 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     LongType,
     StringType,
     StructField,
@@ -60,37 +57,6 @@ MEDIA_SCHEMA = StructType(
         StructField("src_url", StringType()),
     ]
 )
-
-FEATURE_DIM = 8
-
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("size_bytes", LongType()),
-        StructField("content_md5", StringType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
-
-
-def deterministic_fake_features(data: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Stable stand-in for a real decoder: md5(bytes) → dim floats in [0,1).
-
-    Exists so tests pin the *plumbing* (schema, batching, null handling)
-    to exact values; a real model replaces only this function.
-    """
-    out: list[float] = []
-    counter = 0
-    while len(out) < dim:
-        d = hashlib.md5(data + counter.to_bytes(4, "little")).digest()
-        for i in range(0, 16, 4):
-            out.append(int.from_bytes(d[i : i + 4], "little") / 2**32)
-            if len(out) == dim:
-                break
-        counter += 1
-    return out
-
 
 # ---------------------------------------------------------------------------
 # real from-scratch codecs (pure NumPy, no external libraries)
@@ -935,8 +901,8 @@ def wav_decode(data: bytes) -> tuple[np.ndarray, int]:
     """Decode a 16-bit PCM WAV to ((n_samples, n_channels) int16, rate) —
     from scratch: RIFF envelope check, chunk walk (unknown chunks like
     LIST/INFO are skipped, word-aligned per spec), fmt parse restricted to
-    uncompressed PCM. Compressed codecs (MP3/AAC/float WAV) are rejected —
-    the CC-scale route for those is the env-gated stub, same as JPEG."""
+    uncompressed PCM. Compressed codecs (MP3/AAC/float WAV) are rejected
+    with ``ValueError``."""
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
     pos, fmt, pcm = 12, None, None
@@ -1034,47 +1000,23 @@ def make_wav_media(spark, n: int = 60) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def decode_image(data: bytes, allow_stub: bool = False) -> list[float]:
-    """Decode an image to a feature vector. BMP/PNG/JPEG take the REAL
-    decode path (:func:`decode_pixels`); the featurizer is the
-    deterministic stand-in applied to the *decoded pixel buffer*, so two
-    encodings of the same pixels featurize identically — swapping in a
-    real model changes only the featurizer. Remaining formats (WebP/AVIF)
-    would need PIL/opencv, absent here — stubbed behind ``allow_stub``."""
-    if _is_decodable_image(data):
-        return deterministic_fake_features(decode_pixels(data).tobytes())
-    if not allow_stub:
+def frame_sample(data: bytes, every_n: int = 10) -> list[bytes]:
+    """Sample every ``every_n``-th video frame with the from-scratch Y4M
+    parser (:func:`y4m_frames`). Compressed containers (MP4…) need an
+    ffmpeg decoder and raise ``NotImplementedError``."""
+    if data[: len(_Y4M_MAGIC)] != _Y4M_MAGIC:
         raise NotImplementedError(
-            "compressed-image decoding requires PIL/opencv (not in this "
-            "container); BMP/PNG decode for real, or pass allow_stub=True "
-            "for the deterministic fake"
+            "compressed video needs an ffmpeg decoder; only Y4M is decoded"
         )
-    return deterministic_fake_features(data)
+    return y4m_frames(data)[:: max(every_n, 1)]
 
 
-def frame_sample(data: bytes, every_n: int = 10, allow_stub: bool = False) -> list[bytes]:
-    """Sample every ``every_n``-th video frame. Y4M streams get the REAL
-    from-scratch parser (:func:`y4m_frames`); compressed containers (mp4…)
-    would need ffmpeg, absent here — stubbed byte-slicing behind
-    ``allow_stub`` for those."""
-    if data[: len(_Y4M_MAGIC)] == _Y4M_MAGIC:
-        return y4m_frames(data)[:: max(every_n, 1)]
-    if not allow_stub:
-        raise NotImplementedError(
-            "compressed video requires ffmpeg (not in this container); "
-            "Y4M input is decoded for real, or pass allow_stub=True"
-        )
-    chunk = max(1, len(data) // max(every_n, 1))
-    return [data[i : i + chunk] for i in range(0, len(data), chunk * every_n)]
-
-
-def resize_image(data: bytes, width: int, height: int, allow_stub: bool = False) -> bytes:
+def resize_image(data: bytes, width: int, height: int) -> bytes:
     """Resize an image to width×height. BMP, PNG and baseline JPEG input
     take the REAL path — decode → :func:`resize_nearest` → re-encode in
     the source format on actual pixels (JPEG through this module's own
-    :func:`jpeg_decode` / :func:`jpeg_encode`). Remaining compressed formats
-    (WebP/AVIF) would need PIL/opencv, absent here — stubbed behind
-    ``allow_stub`` with the same (bytes,w,h)→bytes contract."""
+    :func:`jpeg_decode` / :func:`jpeg_encode`). Other formats (WebP/AVIF)
+    need PIL/opencv and raise ``NotImplementedError``."""
     if data[:2] == b"BM":
         return bmp_encode(resize_nearest(bmp_decode(data), width, height))
     if data[:8] == _PNG_MAGIC:
@@ -1082,18 +1024,9 @@ def resize_image(data: bytes, width: int, height: int, allow_stub: bool = False)
     if data[:3] == _JPEG_MAGIC:
         # real decode → resize → re-encode (lossy, like any JPEG resave)
         return jpeg_encode(resize_nearest(jpeg_decode(data), width, height))
-    if not allow_stub:
-        raise NotImplementedError(
-            "WebP/AVIF resizing requires PIL/opencv (not in this container); "
-            "BMP/PNG/JPEG input is resized for real, or pass allow_stub=True"
-        )
-    target = max(1, (width * height * 3) // 64)
-    out = bytearray()
-    counter = 0
-    while len(out) < target:
-        out.extend(hashlib.md5(data + f":{width}x{height}:{counter}".encode()).digest())
-        counter += 1
-    return bytes(out[:target])
+    raise NotImplementedError(
+        "WebP/AVIF resizing needs PIL/opencv; only BMP/PNG/JPEG are resized"
+    )
 
 
 RESIZED_SCHEMA = StructType(
@@ -1107,31 +1040,28 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_images(
-    media: DataFrame, width: int = 64, height: int = 64, allow_stub: bool = True
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
     """image rows → one narrow row per resized image (blob dropped ASAP).
 
-    Same scale shape as :func:`extract_features`: map-only ``mapInPandas``
-    stage, emits the resized blob's fingerprint/size instead of the pixels
+    Map-only ``mapInPandas`` stage that emits the resized blob's fingerprint/size instead of the pixels
     so no shuffle ever carries image bytes. A real pipeline that must KEEP
     the resized blob writes it straight to a sink from this same stage
     (foreachPartition / parquet binary column partitioned by size bucket)
     rather than returning it through a shuffle. Non-image rows are
-    filtered out up front, so Spark prunes them at the scan."""
+    filtered out up front, so Spark prunes them at the scan. An image in
+    any other format fails the stage with ``NotImplementedError``."""
 
     def fingerprint(b) -> tuple[str, int]:
         data = bytes(b) if b is not None else b""
-        if _is_decodable_image(data):
-            # REAL path (BMP or PNG): decode → nearest-neighbor resize →
-            # fingerprint the raw pixel buffer (format-independent: two
-            # encodings of the same pixels fingerprint equal, and the
-            # DuckDB oracle can rebuild the buffer from the pixel function
-            # + integer index math without an image writer)
-            pix = resize_nearest(decode_pixels(data), width, height)
-            return _hex_md5(pix.tobytes()), int(pix.nbytes)
-        out = resize_image(data, width, height, allow_stub=allow_stub)
-        return _hex_md5(out), len(out)
+        if not _is_decodable_image(data):
+            resize_image(data, width, height)  # raises NotImplementedError
+        # BMP/PNG/JPEG: decode → nearest-neighbor resize → fingerprint the
+        # raw pixel buffer (format-independent: two encodings of the same
+        # pixels fingerprint equal, and the DuckDB oracle can rebuild the
+        # buffer from the pixel function + integer index math without an
+        # image writer)
+        pix = resize_nearest(decode_pixels(data), width, height)
+        return _hex_md5(pix.tobytes()), int(pix.nbytes)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1189,32 +1119,6 @@ def image_stats(media: DataFrame) -> DataFrame:
     return media.filter(F.col("kind") == "image").mapInPandas(batches, STATS_SCHEMA)
 
 
-def extract_features(media: DataFrame, allow_stub: bool = True) -> DataFrame:
-    """binary media rows → narrow feature rows (drops the blob ASAP).
-
-    mapInPandas so each Arrow batch is one Python roundtrip; the output is
-    blob-free, so everything downstream (dedup by content_md5, ANN over
-    ``features``) shuffles narrow rows only.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            content = pdf["content"].map(lambda b: b if b is not None else b"")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "size_bytes": content.map(len).astype("int64"),
-                    "content_md5": content.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "features": content.map(
-                        lambda b: decode_image(b, allow_stub=allow_stub)
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, FEATURES_SCHEMA)
-
-
 FRAMES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -1225,12 +1129,12 @@ FRAMES_SCHEMA = StructType(
 )
 
 
-def sample_frames(media: DataFrame, every_n: int = 10, allow_stub: bool = True) -> DataFrame:
+def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     """video rows → one narrow row per sampled frame (blob dropped ASAP).
 
-    The decode is the stub in :func:`frame_sample` (ffmpeg absent here);
-    the Spark side is the real shape a frame-sampling stage has at scale:
-    `mapInPandas` fan-OUT (one input row → many output rows, which a
+    The decode is :func:`frame_sample` (Y4M only; any other video format
+    fails the stage with ``NotImplementedError``). The Spark side is the
+    shape a frame-sampling stage has at scale: `mapInPandas` fan-OUT (one input row → many output rows, which a
     pandas_udf cannot express), emitting per-frame metadata/fingerprints
     instead of frame blobs so the downstream shuffle (frame dedup,
     per-video rollups) moves hashes, not pixels. Non-video rows pass
@@ -1245,7 +1149,7 @@ def sample_frames(media: DataFrame, every_n: int = 10, allow_stub: bool = True) 
             ):
                 if kind != "video" or content is None:
                     continue
-                frames = frame_sample(bytes(content), every_n, allow_stub=allow_stub)
+                frames = frame_sample(bytes(content), every_n)
                 for j, fr in enumerate(frames):
                     ids.append(mid)
                     nos.append(j)
@@ -1366,22 +1270,3 @@ def make_y4m_media(spark, n: int = 60) -> DataFrame:
         )
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
-
-def make_fake_media(spark, n: int = 64, seed: int = 5) -> DataFrame:
-    """Deterministic synthetic media table (for tests/benches only)."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        payload = hashlib.md5(f"{seed}:{i}".encode()).digest() * (1 + i % 7)
-        kind = kinds[i % 3]
-        rows.append(
-            (
-                i,
-                kind,
-                payload,
-                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                len(payload),
-                f"https://media.example.com/{kind}/{i}",
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

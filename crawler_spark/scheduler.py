@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window, functions as F
 from pyspark.sql.types import (
@@ -112,18 +112,14 @@ class CrawlResult:
     seen: DataFrame
     metrics: DataFrame
     rounds: int = 0
-    extra: dict = field(default_factory=dict)
 
 
 def _ckpt(cfg: CrawlConfig, rnd: int, name: str) -> str:
     return os.path.join(cfg.checkpoint_dir, f"round={rnd}", name)
 
 
-def _write_state(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
+def _write_state(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
 def _manifest_path(cfg: CrawlConfig) -> str:

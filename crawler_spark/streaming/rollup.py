@@ -147,106 +147,3 @@ def url_dedup_stream(
         [key_col]
     )
 
-
-def host_budget_tws(
-    stream_df: DataFrame,
-    budget: int = 5,
-    key_col: str = "host",
-) -> DataFrame:
-    """Lifetime per-host crawl cap on Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState`` (same semantics as
-    :func:`stateful_host_budget`, which stays as the compatibility twin).
-
-    Why the new API matters at scale: typed state handles (ValueState /
-    ListState / MapState) are individually addressable in the state store
-    — a processor can read ONE counter without deserializing a whole blob
-    — and per-state TTL is declarative (``getValueState(ttlDurationMs=…)``
-    would expire idle hosts without a cleanup pass; unset here because a
-    lifetime cap must never forget).
-
-    Emits rows admitted under the cap, with their lifetime sequence
-    number; order within a micro-batch group follows (priority, seq) like
-    the batch politeness window.
-
-    Environment requirements (gated, not assumed): the TWS driver worker
-    needs ``google.protobuf`` on the Python path, and the query needs the
-    RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass =
-    …state.RocksDBStateStoreProvider``). Where either is absent (e.g.
-    this sandbox lacks protobuf), use :func:`stateful_host_budget` — same
-    semantics on the stable applyInPandasWithState API.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = (
-        f"{key_col} string, url_canon string, priority int, seq long, "
-        "lifetime_rank long"
-    )
-
-    class HostBudget(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n_admitted", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            taken = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                if taken >= budget:
-                    break
-                pdf = pdf.sort_values(["priority", "seq"], kind="mergesort")
-                room = budget - taken
-                out = pdf.head(room).copy()
-                out["lifetime_rank"] = range(taken + 1, taken + len(out) + 1)
-                taken += len(out)
-                if len(out):
-                    yield out
-            self._n.update((taken,))
-
-        def close(self) -> None:
-            pass
-
-    return stream_df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=HostBudget(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
-def fetch_parse_stream_join(
-    fetches: DataFrame,
-    parses: DataFrame,
-    horizon: str = "1 hour",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: each parse event matched to
-    the fetch that produced it, within ``horizon``.
-
-    ``(url, fetch_ts)`` ⋈ ``(url, parse_ts)`` with the range condition
-    ``fetch_ts <= parse_ts <= fetch_ts + horizon``. Both sides carry a
-    watermark AND the join condition bounds event time in BOTH directions —
-    that pair is what lets the state store evict: a buffered fetch row is
-    dropped once the parse-side watermark passes ``fetch_ts + horizon``, so
-    state is O(rate × horizon), never O(stream). Without the range bound
-    the join would be correct but its state unbounded — the difference
-    between a demo and something that survives a 10^10-URL feed.
-
-    Output: ``(url, fetch_ts, parse_ts, latency_sec)``, append mode.
-    """
-    f = fetches.select("url", "fetch_ts").withWatermark("fetch_ts", horizon)
-    p = parses.select(
-        F.col("url").alias("p_url"), "parse_ts"
-    ).withWatermark("parse_ts", horizon)
-    return f.join(
-        p,
-        (F.col("url") == F.col("p_url"))
-        & (F.col("parse_ts") >= F.col("fetch_ts"))
-        & (F.col("parse_ts") <= F.col("fetch_ts") + F.expr(f"interval {horizon}")),
-        "inner",
-    ).select(
-        "url",
-        "fetch_ts",
-        "parse_ts",
-        (F.unix_timestamp("parse_ts") - F.unix_timestamp("fetch_ts")).alias("latency_sec"),
-    )

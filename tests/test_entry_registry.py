@@ -49,3 +49,49 @@ def test_rotation_window_is_exactly_fifty_registered_keys():
     unknown = [k for k in front if k not in base]
     assert not unknown, f"rotation window names unregistered queries: {unknown}"
     assert list(E.queries())[:50] == front
+
+
+def _survey_coverage_rows() -> list[list[str]]:
+    """SURVEY.md §2.6 table body as ``[op, implementation, key, test]``."""
+    text = (Path(__file__).resolve().parents[1] / "SURVEY.md").read_text()
+    section = text.split("### 2.6 ", 1)[1].split("\n---", 1)[0]
+    rows = [ln for ln in section.splitlines() if ln.startswith("|")][2:]
+    cells = [[c.strip() for c in ln.strip().strip("|").split(" | ")] for ln in rows]
+    bad = [c[0] for c in cells if len(c) != 4]
+    assert not bad, f"SURVEY §2.6 rows without exactly four cells: {bad}"
+    return cells
+
+
+def test_survey_coverage_map_matches_registry_and_code():
+    """Every SURVEY §2.6 row names a registered queries() key (the first
+    backticked token of its key cell; a cell opening with "—" has none),
+    and every ``path.py::name[/name…]`` in its implementation cell is an
+    attribute of that module — so deleting or renaming an operator
+    without its row fails here."""
+    import importlib
+    import re
+
+    rows = _survey_coverage_rows()
+    qs = E.queries()
+    keyed = [r for r in rows if not r[2].startswith("—")]
+    keys = [re.search(r"`([^`]+)`", r[2]) for r in keyed]
+    assert all(keys), "a SURVEY §2.6 key cell has no backticked key"
+    unknown = sorted({m.group(1) for m in keys} - set(qs))
+    assert not unknown, f"SURVEY §2.6 names unregistered queries: {unknown}"
+
+    refs = [
+        (path, name)
+        for r in rows
+        for path, names in re.findall(r"([\w/]+)\.py::(\w+(?:/\w+)*)", r[1])
+        for name in names.split("/")
+    ]
+    assert refs
+    missing = []
+    for path, name in refs:
+        dotted = path.replace("/", ".")
+        module = importlib.import_module(
+            dotted if dotted == "__spark_entry__" else f"crawler_spark.{dotted}"
+        )
+        if not hasattr(module, name):
+            missing.append(f"{path}.py::{name}")
+    assert not missing, f"SURVEY §2.6 names missing code: {missing}"

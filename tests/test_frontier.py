@@ -397,7 +397,7 @@ def test_robots_prefixes_expr_matches_oracle(spark):
     naming ``*``."""
     import re
 
-    from crawler_spark.frontier.politeness import parse_robots
+    from crawler_spark.frontier.politeness import robots_prefixes_expr
 
     def oracle(text: str) -> list[str]:
         lines = text.split("\n")
@@ -444,34 +444,12 @@ def test_robots_prefixes_expr_matches_oracle(spark):
     )
     got = {
         r["host"]: list(r["disallow_prefixes"])
-        for r in parse_robots(df).collect()
+        for r in df.select(
+            "host", robots_prefixes_expr(F.col("robots_txt")).alias("disallow_prefixes")
+        ).collect()
     }
     for i, b in enumerate(bodies):
         assert got[i] == oracle(b), (i, b, got[i], oracle(b))
-
-
-def test_authority_priorities_bands_by_rank(spark):
-    """Hosts everyone links to get band 0; link-less leaves get the last
-    band; bands are contiguous integers 0..bands-1."""
-    from crawler_spark.frontier.priority import authority_priorities
-
-    edges = spark.createDataFrame(
-        [("a", "hub"), ("b", "hub"), ("c", "hub"), ("a", "mid"), ("b", "mid"),
-         ("hub", "mid"), ("c", "leaf1"), ("hub", "leaf2")],
-        "src_host string, dst_host string",
-    )
-    got = {r["host"]: r["priority"] for r in authority_priorities(edges, bands=3).collect()}
-    assert got["hub"] == 0                       # highest in-authority
-    assert max(got.values()) == 2 and min(got.values()) == 0
-    # the inlink-less sources (a,b,c — minimum rank 0.15, tie broken by
-    # host asc) fill the ordering's tail, so ntile puts the last of them
-    # in the last band
-    assert got["b"] == 2 and got["c"] == 2
-    # every host with an inlink outranks the rank-0.15 sources
-    assert got["leaf1"] <= got["a"] and got["leaf2"] <= got["a"]
-    # determinism: a second run bands identically
-    again = {r["host"]: r["priority"] for r in authority_priorities(edges, bands=3).collect()}
-    assert again == got
 
 
 def test_resolve_redirects_chains_cycles_and_caps(spark):

@@ -10,7 +10,6 @@ can be computed by hand.
 """
 
 import hashlib
-import math
 
 import numpy as np
 import pytest
@@ -19,11 +18,6 @@ from pyspark.sql import functions as F
 from crawler_spark.pipeline import dedup as dd
 from crawler_spark.pipeline import similarity as sim
 from crawler_spark.pipeline import textstats as ts
-from crawler_spark.pipeline.multimodal import (
-    deterministic_fake_features,
-    extract_features,
-    make_fake_media,
-)
 
 # ---------------------------------------------------------------------------
 # pure-Python oracles
@@ -432,32 +426,28 @@ def test_ivf_assignment_matches_numpy_and_lloyd_refines(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_multimodal_features_deterministic(spark):
-    media = make_fake_media(spark, n=12)
-    out = extract_features(media).collect()
-    assert len(out) == 12
-    by_id = {r["media_id"]: r for r in out}
-    src = {r["media_id"]: bytes(r["content"]) for r in media.collect()}
-    for i, blob in src.items():
-        assert by_id[i]["content_md5"] == hashlib.md5(blob).hexdigest()
-        assert by_id[i]["size_bytes"] == len(blob)
-        feats = by_id[i]["features"]
-        assert feats == pytest.approx(deterministic_fake_features(blob))
-        assert all(not math.isnan(f) for f in feats)
+def _mixed_media(spark, n: int = 10):
+    """Real BMP images, WAV audio and Y4M video in one media frame."""
+    from crawler_spark.pipeline.multimodal import (
+        make_bmp_media,
+        make_wav_media,
+        make_y4m_media,
+    )
+
+    return (
+        make_bmp_media(spark, n=n)
+        .unionByName(make_wav_media(spark, n=n))
+        .unionByName(make_y4m_media(spark, n=n))
+    )
 
 
 def test_sample_frames_matches_python_kernel(spark):
-    """mapInPandas frame fan-out == per-row Python kernel (stubbed decode):
-    only video rows emit, one row per sampled frame, blob never in output."""
-    import hashlib
+    """mapInPandas frame fan-out == per-row Python kernel over real mixed
+    media: only video rows emit, one row per sampled frame, blob never in
+    output."""
+    from crawler_spark.pipeline.multimodal import frame_sample, sample_frames
 
-    from crawler_spark.pipeline.multimodal import (
-        frame_sample,
-        make_fake_media,
-        sample_frames,
-    )
-
-    media = make_fake_media(spark, n=30)
+    media = _mixed_media(spark)
     got = {
         (r["media_id"], r["frame_no"]): (r["frame_md5"], r["frame_bytes"])
         for r in sample_frames(media, every_n=4).collect()
@@ -466,7 +456,7 @@ def test_sample_frames_matches_python_kernel(spark):
     for row in media.collect():
         if row["kind"] != "video":
             continue
-        for j, fr in enumerate(frame_sample(bytes(row["content"]), 4, allow_stub=True)):
+        for j, fr in enumerate(frame_sample(bytes(row["content"]), 4)):
             want[(row["media_id"], j)] = (
                 hashlib.md5(fr.hex().encode()).hexdigest(),
                 len(fr),
@@ -475,18 +465,17 @@ def test_sample_frames_matches_python_kernel(spark):
 
 
 def test_resize_images_matches_python_kernel(spark):
-    """mapInPandas resize == per-row Python kernel (stubbed codec): only
-    image rows emit, output carries fingerprint/size, never pixels, and
-    the stub honors the (bytes, w, h) -> bytes contract."""
-    import hashlib
-
+    """mapInPandas resize == per-row Python kernel over real mixed media:
+    only image rows emit, and the output carries the resized pixel
+    buffer's fingerprint/size, never pixels."""
     from crawler_spark.pipeline.multimodal import (
-        make_fake_media,
+        decode_pixels,
         resize_image,
         resize_images,
+        resize_nearest,
     )
 
-    media = make_fake_media(spark, n=30)
+    media = _mixed_media(spark)
     out = resize_images(media, width=32, height=32).collect()
     assert set(out[0].asDict()) == {
         "media_id", "width", "height", "resized_md5", "resized_bytes",
@@ -496,14 +485,41 @@ def test_resize_images_matches_python_kernel(spark):
     for row in media.collect():
         if row["kind"] != "image":
             continue
-        rb = resize_image(bytes(row["content"]), 32, 32, allow_stub=True)
-        want[row["media_id"]] = (hashlib.md5(rb.hex().encode()).hexdigest(), len(rb))
+        pix = resize_nearest(decode_pixels(bytes(row["content"])), 32, 32)
+        want[row["media_id"]] = (
+            hashlib.md5(pix.tobytes().hex().encode()).hexdigest(),
+            pix.nbytes,
+        )
     assert got == want and len(want) > 0
-    # fake 64:1 compression of a 32x32x3 target
-    assert all(n == (32 * 32 * 3) // 64 for _, n in got.values())
-    # real-codec gate: without allow_stub the op must refuse, not fake
+    # real-codec gate: an unknown format must refuse, not fake
     with pytest.raises(NotImplementedError):
         resize_image(b"x", 8, 8)
+
+
+@pytest.mark.parametrize(
+    "kind, blob",
+    [
+        ("image", b"RIFF\x00\x00\x00\x00WEBPVP8 "),
+        ("video", b"\x00\x00\x00\x18ftypmp42"),
+    ],
+)
+def test_unsupported_media_fails_loudly(spark, kind, blob):
+    """An image the BMP/PNG/JPEG codecs cannot read, or a video that is
+    not Y4M, fails the Spark job with NotImplementedError rather than
+    emitting a made-up fingerprint or frame."""
+    from crawler_spark.pipeline.multimodal import (
+        MEDIA_SCHEMA,
+        resize_images,
+        sample_frames,
+    )
+
+    media = spark.createDataFrame(
+        [(1, kind, blob, "application/octet-stream", len(blob), "https://m.example/1")],
+        MEDIA_SCHEMA,
+    )
+    op = resize_images(media, 8, 8) if kind == "image" else sample_frames(media, 2)
+    with pytest.raises(Exception, match="NotImplementedError"):
+        op.collect()
 
 
 def test_ivf_sizing_rule_bounds_cluster_mass_at_sf01(spark):
@@ -589,8 +605,7 @@ def test_resize_nearest_integer_mapping():
 
 def test_y4m_parse_and_real_frame_sampling():
     """From-scratch Y4M parser: frame count/size for C444 and C420, frame
-    params tolerated, and frame_sample takes the REAL path (no allow_stub)
-    for Y4M input."""
+    params tolerated, and frame_sample decodes Y4M input for real."""
     from crawler_spark.pipeline.multimodal import (
         frame_sample,
         y4m_frames,
@@ -600,7 +615,7 @@ def test_y4m_parse_and_real_frame_sampling():
     data = y4m_test_stream(7, 8, 6, 9)
     frames = y4m_frames(data)
     assert len(frames) == 9 and all(len(f) == 3 * 8 * 6 for f in frames)
-    # real path without allow_stub; every 2nd frame, original order kept
+    # every 2nd frame, original order kept
     sampled = frame_sample(data, every_n=2)
     assert sampled == frames[::2]
     # C420 plane sizing + frame-level params after the FRAME keyword
@@ -634,7 +649,7 @@ def test_real_bmp_resize_and_stats_via_spark(spark):
     media = make_bmp_media(spark, n=12)
     got = {
         r["media_id"]: (r["resized_md5"], r["resized_bytes"])
-        for r in resize_images(media, 8, 8, allow_stub=False).collect()
+        for r in resize_images(media, 8, 8).collect()
     }
     stats = {r["media_id"]: r for r in image_stats(media).collect()}
     for i in range(12):
@@ -716,7 +731,7 @@ def test_real_png_resize_and_stats_via_spark(spark):
     media = make_bmp_media(spark, n=6).unionByName(make_png_media(spark, n=6))
     got = {
         r["media_id"]: (r["resized_md5"], r["resized_bytes"])
-        for r in resize_images(media, 8, 8, allow_stub=False).collect()
+        for r in resize_images(media, 8, 8).collect()
     }
     stats = {r["media_id"]: r for r in image_stats(media).collect()}
     assert set(got) == set(stats) == {*range(6), *range(100, 106)}
@@ -844,7 +859,7 @@ def test_real_jpeg_resize_and_stats_via_spark(spark):
     media = make_jpeg_media(spark, n=8)
     got = {
         r["media_id"]: (r["resized_md5"], r["resized_bytes"])
-        for r in resize_images(media, 8, 8, allow_stub=False).collect()
+        for r in resize_images(media, 8, 8).collect()
     }
     stats = {r["media_id"]: r for r in image_stats(media).collect()}
     assert set(got) == set(stats) == set(range(200, 208))
@@ -1585,6 +1600,21 @@ def test_bfs_depth_rings_and_sentinel(spark):
     }
     # shortcut wins: 3 is at depth 1, so 5 is reachable within the cap
     assert got == {1: 0, 2: 1, 3: 1, 4: 2, 5: 3, 9: -1, 10: -1}
+
+
+def test_crawl_depth_seeds_dst_only_nodes(spark, tmp_path):
+    """q_crawl_depth seeds every graph node < 5, as its oracle does: node 3
+    appears only as an edge's dst (event_id % 150) and still gets depth 0,
+    while the node it is reached from stays unseeded."""
+    import __spark_entry__ as E
+
+    # edges user_id -> event_id % 150: 10 -> 3 and 10 -> 11, 3 -> nothing
+    events = spark.createDataFrame(
+        [(3, 10), (11, 10), (161, 10)], "event_id long, user_id long"
+    )
+    events.write.parquet(str(tmp_path / "events.parquet"))
+    got = {r["node"]: r["depth"] for r in E.q_crawl_depth(spark, str(tmp_path)).collect()}
+    assert got == {3: 0, 10: -1, 11: -1}
 
 
 def test_passage_windows_overlap_tail_and_hash(spark):

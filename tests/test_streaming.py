@@ -271,104 +271,3 @@ def test_url_dedup_stream_drops_in_horizon_duplicates(spark, tmp_path_factory):
     assert got.count(("u1", 0)) == 1      # 00:30 duplicate dropped
     assert ("u2", 0) in got
     assert ("u1", 7) in got               # beyond horizon: re-emitted
-
-
-def test_host_budget_tws_matches_legacy_state_api(spark, tmp_path_factory):
-    """The transformWithStateInPandas budget admits the same (host, seq)
-    set as the applyInPandasWithState twin: lifetime cap 5 across two
-    micro-batches, per-batch (priority, seq) admission order, and a
-    lifetime_rank that keeps counting across batches.
-
-    Requires google.protobuf (the TWS driver worker speaks protobuf to
-    the JVM) and the RocksDB state store — skipped when the environment
-    lacks them; the applyInPandasWithState twin above covers the
-    semantics either way."""
-    pytest.importorskip("google.protobuf")
-    from crawler_spark.streaming.rollup import host_budget_tws
-
-    base = str(tmp_path_factory.mktemp("twsbudget"))
-    rows1 = [("h1", f"http://h1/{i}", 0, i) for i in range(4)] + [
-        ("h2", "http://h2/0", 0, 100)
-    ]
-    rows2 = [("h1", f"http://h1/x{i}", 0, 10 + i) for i in range(4)] + [
-        ("h2", "http://h2/1", 0, 101)
-    ]
-    schema = "host string, url_canon string, priority int, seq long"
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(base + "/b0")
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(base + "/b1")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base + "/*")
-    )
-    q = (
-        host_budget_tws(stream, budget=5)
-        .writeStream.format("memory")
-        .queryName("tws_budget_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.sql("select * from tws_budget_out").collect()
-    per_host = {}
-    ranks = {}
-    for r in out:
-        per_host.setdefault(r["host"], []).append(r["seq"])
-        ranks[(r["host"], r["seq"])] = r["lifetime_rank"]
-    assert sorted(per_host["h1"]) == [0, 1, 2, 3, 10]
-    assert sorted(per_host["h2"]) == [100, 101]
-    # rank continues across batches: the batch-2 admit is h1's 5th
-    assert ranks[("h1", 10)] == 5
-
-
-def test_fetch_parse_stream_join_matches_within_horizon(spark, tmp_path_factory):
-    """Stream-stream interval join: a parse within the 1h horizon matches
-    its fetch; a parse 90 min after the fetch does not (range condition),
-    and a parse for a never-fetched url matches nothing. Batch twin: the
-    same join as a plain DataFrame join must give the identical match set."""
-    from crawler_spark.streaming.rollup import fetch_parse_stream_join
-
-    base = str(tmp_path_factory.mktemp("ssjoin"))
-    f_schema = "url string, fetch_ts timestamp"
-    p_schema = "url string, parse_ts timestamp"
-    t0 = "2024-01-01 00:"
-    fetches = [
-        ("http://a/1", f"{t0}00:00"),
-        ("http://a/2", f"{t0}05:00"),
-        ("http://b/1", f"{t0}10:00"),
-    ]
-    parses = [
-        ("http://a/1", f"{t0}20:00"),   # +20min → match
-        ("http://a/2", "2024-01-01 01:40:00"),  # +95min → beyond horizon
-        ("http://c/1", f"{t0}30:00"),   # never fetched → no match
-        ("http://b/1", f"{t0}11:00"),   # +1min → match
-    ]
-    import pyspark.sql.functions as SF
-
-    fdf = spark.createDataFrame(fetches, "url string, ts string").select(
-        "url", SF.col("ts").cast("timestamp").alias("fetch_ts")
-    )
-    pdf = spark.createDataFrame(parses, "url string, ts string").select(
-        "url", SF.col("ts").cast("timestamp").alias("parse_ts")
-    )
-    fdf.coalesce(1).write.parquet(base + "/f/b0")
-    pdf.coalesce(1).write.parquet(base + "/p/b0")
-
-    f_stream = spark.readStream.schema(f_schema).option("maxFilesPerTrigger", 1).parquet(base + "/f/*")
-    p_stream = spark.readStream.schema(p_schema).option("maxFilesPerTrigger", 1).parquet(base + "/p/*")
-    q = (
-        fetch_parse_stream_join(f_stream, p_stream, horizon="1 hour")
-        .writeStream.format("memory")
-        .queryName("fp_join")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r["url"], r["latency_sec"]) for r in spark.sql("select * from fp_join").collect()}
-    assert got == {("http://a/1", 1200), ("http://b/1", 60)}
-
-    # batch twin: identical match set from the same logic as a plain join
-    batch = fetch_parse_stream_join(fdf, pdf, horizon="1 hour")
-    assert {(r["url"], r["latency_sec"]) for r in batch.collect()} == got
