@@ -323,11 +323,12 @@ def q_seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cuckoo_seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full cuckoo-prefiltered unseen pipeline (frontier/cuckoo.py, the
+    """The cuckoo-filtered unseen pipeline (frontier/cuckoo.py, the
     "/cuckoo" half of north_rule's "Bloom/cuckoo URL-seen filter"): build the
-    partitioned filter over the seen keys, probe candidates map-side, exact
-    anti-join only the maybe-seen — output is exact (== NOT EXISTS), the
-    filter only routes rows, so the DuckDB oracle is plain SQL."""
+    partitioned filter over the seen keys, probe candidates map-side, and
+    carry the verdict as a condition of the exact anti-join. Every candidate
+    still probes the seen side, so the output is the exact anti-join's
+    (== NOT EXISTS) and the DuckDB oracle is plain SQL."""
     from crawler_spark.frontier.cuckoo import CuckooState
     from crawler_spark.frontier.seen import filter_unseen
 
@@ -2817,9 +2818,7 @@ def q_lsh_bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast exact tier): sign-pattern LSH bucket per vector, exact
     cosine pair join WITHIN buckets only (equi-self-join on bucket id —
     the plan tests/test_plans.py pins as BNLJ-free). Deterministic seeded
-    LCG hyperplanes are embedded in the DuckDB twin as literals. The
-    n_centroids sizing rule for the IVF sibling is
-    similarity.ivf_n_centroids (C = max(16, N/1024))."""
+    LCG hyperplanes are embedded in the DuckDB twin as literals."""
     emb = _t(spark, sf_dir, "embeddings")
     return sim.lsh_bucket_pairs(emb, n_planes=6, dim=64, threshold=0.2)
 
@@ -3135,8 +3134,8 @@ CRAWL_H, CRAWL_P, CRAWL_ROUNDS = 6, 12, 3
 
 
 def q_crawl_bsp_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship operator: 3 BSP frontier rounds (canonicalize → bloom+
-    exact seen-dedup → robots → politeness window → fetch-as-join → outlink
+    """The flagship operator: 3 BSP frontier rounds (canonicalize → exact
+    seen anti-join → robots → politeness window → fetch-as-join → outlink
     expansion) run by the REAL scheduler.crawl engine over an ARITHMETIC
     corpus (every link target a pure function of (host, page)), so the
     whole crawl — schedule order, seq assignment, robots prefix blocks,

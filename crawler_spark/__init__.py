@@ -8,8 +8,8 @@ From-scratch reimplementation of the capabilities of songshine/crawler
                   with a pure-Python oracle kernel.
 * ``corpus``    — deterministic Common-Crawl-style synthetic corpus
                   (pages/seeds/robots/politeness) for tests and benchmarks.
-* ``frontier``  — URL canonicalization + hashing, partitioned Bloom +
-                  exact URL-seen filter, robots, per-host politeness budget.
+* ``frontier``  — URL canonicalization + hashing, exact URL-seen
+                  anti-join, robots, per-host politeness budget.
 * ``collector`` — field extraction (fetch-as-join + rule projection,
                   follow-up fetches as joins).
 * ``scheduler`` — the BSP round loop with per-round checkpoint/resume and

@@ -11,7 +11,7 @@ inputs, run through the production stages of the scheduler
 (crawler_spark.scheduler.admit / fetch_round / expand):
 
     generate urls -> canonicalize (Arrow UDF) -> admit: first-occurrence
-      dedup -> Bloom probe + exact anti-join vs seen -> robots -> seq
+      dedup -> exact anti-join vs seen -> robots -> seq
       -> fetch: per-host politeness window -> broadcast fetch-as-join
       -> expand: outlink extraction (mapInArrow)
 
@@ -37,7 +37,6 @@ from crawler_spark.frontier.canon import (
     host_expr,
     url_hash_expr,
 )
-from crawler_spark.frontier.seen import BloomState
 from crawler_spark.scheduler import _release, admit, expand, fetch_round
 
 # deterministic pseudo-uniform in [0, 1): Knuth multiplicative hash mod a
@@ -131,8 +130,8 @@ def io_probe_sec() -> float:
 
 
 # The kernel's fixed round shape: per-host budget, state buckets, one url in
-# SEEN_EVERY pre-marked seen (a realistic revisit rate for the Bloom probe +
-# exact anti-join), page richness (real pages carry tens of links in KBs of
+# SEEN_EVERY pre-marked seen (a realistic revisit rate for the exact seen
+# anti-join), page richness (real pages carry tens of links in KBs of
 # html), and one host in ROBOTS_EVERY disallowing the /p/1 prefix.
 BUDGET = 512
 N_BUCKETS = 32
@@ -150,10 +149,9 @@ def frontier_round_kernel(
     """One frontier round at scale; returns timings + throughput.
 
     Synthetic inputs (set up untimed): ``n_urls`` raw candidate urls over
-    ``n_hosts`` hosts, a seen table and Bloom filter holding every
-    ``SEEN_EVERY``-th url, a robots table, and the corpus. The timed round
-    is the scheduler's own stages, as ``crawl()`` runs them: admit →
-    fetch_round → expand.
+    ``n_hosts`` hosts, a seen table holding every ``SEEN_EVERY``-th url, a
+    robots table, and the corpus. The timed round is the scheduler's own
+    stages, as ``crawl()`` runs them: admit → fetch_round → expand.
     """
     raw = synth_frontier(spark, n_urls, n_hosts)
     pages = synth_pages(raw, links_per_page=LINKS_PER_PAGE, filler_words=FILLER_WORDS)
@@ -167,10 +165,6 @@ def frontier_round_kernel(
         .withColumn("url_hash", url_hash_expr(F.col("url_canon")))
         .select("url_hash", "bucket", "url_canon")
     )
-    bloom_state = BloomState(N_BUCKETS, 1 << 22)
-    bloom = bloom_state.merge(bloom_state.empty(spark), seen.select("bucket", "url_hash"))
-    bloom.persist()
-    bloom.count()
     seen.persist()
     seen.count()
     robots = spark.range(0, n_hosts, ROBOTS_EVERY).select(
@@ -217,9 +211,7 @@ def frontier_round_kernel(
     )
     caches = []
     try:
-        fresh, frontier = admit(
-            cands, seen, bloom, bloom_state, robots, N_BUCKETS, 0, 0
-        )
+        fresh, frontier = admit(cands, seen, robots, N_BUCKETS, 0, 0)
         caches += [fresh, frontier._assign_seq_cache]
         fetched, _deferred = fetch_round(frontier, pages, politeness, BUDGET, BUDGET)
         caches += fetched._fetch_round_caches
@@ -230,7 +222,6 @@ def frontier_round_kernel(
         _release(caches)
         seen.unpersist()
         pages.unpersist()
-        bloom.unpersist()
     return {
         "n_urls": n_urls,
         "n_hosts": n_hosts,

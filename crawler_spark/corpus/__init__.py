@@ -1,1 +1,1 @@
-from crawler_spark.corpus.generator import make_corpus, write_corpus  # noqa: F401
+from crawler_spark.corpus.generator import make_corpus  # noqa: F401

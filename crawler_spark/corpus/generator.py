@@ -219,24 +219,3 @@ def make_corpus(
     )
 
     return {"pages": pages, "seeds": seeds, "robots": robots, "politeness": politeness}
-
-
-def write_corpus(outdir: str, **kwargs) -> dict[str, str]:
-    """Write corpus tables as parquet; returns {table: path}. Timestamps are
-    written in microseconds: pyarrow's default for pandas input is
-    TIMESTAMP(NANOS), which Spark's parquet reader rejects."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(outdir, exist_ok=True)
-    tables = make_corpus(**kwargs)
-    paths = {}
-    for name, df in tables.items():
-        path = os.path.join(outdir, f"{name}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(df, preserve_index=False), path, coerce_timestamps="us"
-        )
-        paths[name] = path
-    return paths

@@ -79,11 +79,13 @@ def extract_outlinks(base_url: str, html: str) -> list[str]:
 # tests/test_frontier.py.
 
 # "simple" URL: scheme://host[:port][/path][?query][#frag], no userinfo,
-# no IPv6 brackets — covers essentially every crawl-frontier URL.
+# no IPv6 brackets, non-empty host — covers essentially every crawl-frontier
+# URL. An empty host takes the fallback: for a scheme outside urllib's
+# uses_netloc list, urlunsplit drops the empty "//" ("b://" → "b:/").
 # RE2 (pyarrow) dialect with named groups; semantics identical to Python re
 # for this pattern (no backrefs/lookarounds).
 _FAST_URL_PA = (
-    r"^(?P<scheme>[A-Za-z][A-Za-z0-9+.\-]*)://(?P<host>[A-Za-z0-9.\-]*)"
+    r"^(?P<scheme>[A-Za-z][A-Za-z0-9+.\-]*)://(?P<host>[A-Za-z0-9.\-]+)"
     r"(?::(?P<port>[0-9]{1,5}))?(?P<path>/[^?#]*)?(?:\?(?P<query>[^#]*))?(?:#.*)?$"
 )
 

@@ -32,7 +32,7 @@ Semantics (standard cuckoo-filter contract):
 * false-positive rate ~ 2 × 4 / 2^16 per slot-bucket pair + stash hits;
   every positive is double-checked by the exact anti-join in
   :func:`crawler_spark.frontier.seen.filter_unseen`, so filter false
-  positives cost time, never correctness;
+  positives never change the result;
 * ``delete`` may only be called for values actually inserted (else it can
   evict another member's fingerprint). After an fp-collision delete a
   remaining member can probe negative — for recrawl expiry that direction
@@ -271,11 +271,6 @@ class CuckooState:
         assert table_buckets & (table_buckets - 1) == 0, "power of two"
         self.n_buckets = n_buckets
         self.table_buckets = table_buckets
-
-    # capacity at the ≤0.5 load factor the no-evict design wants
-    @property
-    def capacity_per_bucket(self) -> int:
-        return self.table_buckets * _SLOTS // 2
 
     def state_bytes(self) -> int:
         return self.n_buckets * self.table_buckets * _SLOTS * 2

@@ -1,15 +1,20 @@
-"""Partitioned Bloom URL-seen filter + exact anti-join backstop.
+"""URL-seen check: the exact anti-join, plus a partitioned Bloom filter.
 
 north_rule: "deduplicated via a partitioned Bloom/cuckoo URL-seen filter".
 
-Design (scale rationale): at 10^10 URLs an exact anti-join against the seen
-table shuffles the full frontier every round. The Bloom state is partitioned
-by host-bucket (``pmod(xxhash64(host), n_buckets)``) so each bucket's bitmap
-stays small enough to build/probe inside one Arrow batch; probing classifies
-candidates into *definitely-new* (bloom miss → admitted with no exact
-check) and *maybe-seen* (bloom hit → exact ``left_anti`` against only the
-matching seen-table partitions). With a 1% FPR, the expensive exact
-anti-join shrinks to ~(revisit_rate + 1%) of the frontier.
+The crawl's seen check is :func:`filter_unseen` without a filter: one exact
+``left_anti`` join of the round's candidates against the seen table on
+``url_canon``. With a filter, ``filter_unseen`` returns the same rows: the
+filter's verdict only rides the anti-join's condition, so every candidate
+still probes the seen side and the filter never spares the join a lookup.
+A filter can change a row only by being wrong (a false negative re-admits a
+seen url). The crawl, the streaming crawl and the benchmark kernel run no
+filter; the cuckoo filter's registry query (``cuckoo_seen_anti_join``) is
+the one caller that passes one.
+
+The Bloom state is partitioned by host-bucket
+(``pmod(xxhash64(host), n_buckets)``) so each bucket's bitmap stays small
+enough to build/probe inside one Arrow batch.
 
 Bitmaps are numpy uint64 arrays stored as binary rows ``(bucket, bitmap)``
 — a plain DataFrame, checkpointable to parquet/Iceberg like any other state
@@ -232,14 +237,16 @@ def filter_unseen(
     bloom: DataFrame | None,
     bloom_state: BloomState | None,
 ) -> DataFrame:
-    """Exact unseen filter with optional Bloom/cuckoo prefilter.
+    """The candidates whose ``url_canon`` is not in ``seen``: an exact
+    ``left_anti`` join.
 
-    ``candidates`` must carry (url_hash, bucket); ``seen`` is the exact seen
-    table with (url_hash, bucket). Definitely-new rows (filter miss) skip the
-    exact anti-join entirely; only maybe-seen rows are checked exactly.
-    ``bloom_state`` is any state object with the partitioned-filter duck
-    type (``probe`` / ``probe_broadcast`` / ``state_bytes``): BloomState or
-    :class:`crawler_spark.frontier.cuckoo.CuckooState`.
+    ``candidates`` must carry (url_canon, url_hash, bucket); ``seen`` is the
+    exact seen table. With a filter (``bloom`` plus ``bloom_state``, any
+    state object with the partitioned-filter duck type ``probe`` /
+    ``probe_broadcast`` / ``state_bytes``: BloomState or
+    :class:`crawler_spark.frontier.cuckoo.CuckooState`), the result is the
+    same rows: the filter's verdict is a condition on the same anti-join,
+    so every candidate still probes the seen side.
     """
     # Join on url_canon ALONE: string equality is exact by itself (no
     # reliance on the 64-bit hash, whose birthday collisions at 10^10 URLs
@@ -256,16 +263,12 @@ def filter_unseen(
         probed = bloom_state.probe_broadcast(candidates, bloom)
     else:
         probed = bloom_state.probe(candidates, bloom)
-    # ONE anti-join whose condition carries the probe verdict: a
-    # maybe_seen=false row can never satisfy the join condition, so the
-    # Bloom's no-false-negative guarantee admits it with zero build-side
-    # lookups, while maybe-seen rows get the exact check — same semantics
-    # as splitting into (definitely-new ∪ anti-joined maybe) branches, but
-    # as a single pass. The two-branch union form re-executed everything
-    # above the probe (the admission-dedup aggregate + the probe UDF's
-    # Arrow round-trip) once per branch — Spark reuses exchanges across
-    # union arms, not post-shuffle operator work — which measured ~15% of
-    # the 6M-URL round's wall (paired A/B on the round-2 kernel, BENCH.md).
+    # ONE anti-join whose condition carries the probe verdict. The hash
+    # lookup runs for every candidate; the condition is evaluated only on a
+    # key match, where a filter with no false negatives always holds — so
+    # the rows out are the exact anti-join's, and a maybe_seen=false row
+    # spares no lookup. (The two-branch form, definitely-new ∪ anti-joined
+    # maybe-seen, re-executed everything above the probe once per branch.)
     seen_keys = seen.select(*key)
     return probed.join(
         seen_keys,

@@ -1137,17 +1137,16 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     shape a frame-sampling stage has at scale: `mapInPandas` fan-OUT (one input row → many output rows, which a
     pandas_udf cannot express), emitting per-frame metadata/fingerprints
     instead of frame blobs so the downstream shuffle (frame dedup,
-    per-video rollups) moves hashes, not pixels. Non-video rows pass
-    through with zero frames (filter upstream if undesired).
+    per-video rollups) moves hashes, not pixels. Non-video rows are
+    filtered out up front, so no image or audio blob reaches Python and
+    they yield no frames.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, nos, md5s, sizes = [], [], [], []
-            for mid, kind, content in zip(
-                pdf["media_id"], pdf["kind"], pdf["content"]
-            ):
-                if kind != "video" or content is None:
+            for mid, content in zip(pdf["media_id"], pdf["content"]):
+                if content is None:
                     continue
                 frames = frame_sample(bytes(content), every_n)
                 for j, fr in enumerate(frames):
@@ -1164,7 +1163,7 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
                 }
             )
 
-    return media.mapInPandas(batches, FRAMES_SCHEMA)
+    return media.filter(F.col("kind") == "video").mapInPandas(batches, FRAMES_SCHEMA)
 
 
 def bmp_test_pixels(media_id: int, w: int, h: int) -> np.ndarray:

@@ -224,22 +224,6 @@ def lsh_bucket_pairs(
     )
 
 
-def ivf_n_centroids(n_vectors: int, target_cluster: int = 1024) -> int:
-    """Sizing rule for IVF / SemDeDup centroid count at corpus scale.
-
-    Within-cluster pair work is Σ|cluster|² ≈ N²/C, so C must GROW with
-    the corpus: C = max(16, N / target_cluster) keeps the expected cluster
-    at ``target_cluster`` vectors (≈ 0.5M scored pairs each) regardless of
-    N; the centroid argmin scan costs N·C·dim flops, which at C = N/1024
-    stays ~dim·N²/1024 — fine until N ~ 10^8, beyond which a two-level
-    quantizer (IMI) replaces the flat scan. The sf0.1 default of 16 is
-    this rule's floor, not a constant: at 10^9 vectors it yields ~10^6
-    centroids. Ceiling division so the expected cluster never exceeds the
-    target. Pinned by tests/test_pipeline.py."""
-    target = max(1, target_cluster)
-    return max(16, -(-n_vectors // target))
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the scale path promised in lsh_bucketed_topk's
 # docstring: replace the sign-pattern bucket with argmin-over-centroids.

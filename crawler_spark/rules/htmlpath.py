@@ -275,9 +275,6 @@ _AXES = frozenset(
     "ancestor-or-self following-sibling preceding-sibling following "
     "preceding attribute".split()
 )
-_REVERSE_AXES = frozenset(
-    "parent ancestor ancestor-or-self preceding-sibling preceding".split()
-)
 
 
 def _parse_step(step: str) -> tuple[str | None, str, list[str]]:

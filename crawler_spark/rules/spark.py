@@ -43,9 +43,6 @@ class Trans:
     py: Callable[[str], str]
     col: Callable[[Column], Column] | None = None
 
-    def apply_py(self, s: str) -> str:
-        return self.py(s)
-
 
 def _py_trans(trans: Trans | None) -> Callable[[str], str] | None:
     return trans.py if trans is not None else None

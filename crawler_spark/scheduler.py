@@ -7,20 +7,21 @@ Bulk-Synchronous-Parallel rounds, per SURVEY.md §3/§7:
     frontier ──politeness window──▶ scheduled ──join corpus──▶ fetched
         ▲                                                        │
         │                                                outlink explode
-        └── deferred ∪ (dedup → bloom+anti-join seen → robots → seq) ◀┘
+        └── deferred ∪ (dedup → anti-join seen → robots → seq) ◀┘
 
-Every round is checkpointed (frontier, seen, bloom, schedule, metrics) to
-parquet snapshots with a manifest, so a killed job resumes exactly
-(north_rule). Iceberg would slot in here as the table format; the sandbox
-has no Iceberg jars, so the state store is parquet-dir snapshots with the
-same append/replace semantics (see storage.py).
+Every round is checkpointed (schedule, metrics, then frontier, seen delta
+and manifest in one checkpoint step) to parquet snapshots, so a killed job
+resumes exactly (north_rule). Iceberg would slot in here as the table
+format; the sandbox has no Iceberg jars, so the state store is parquet-dir
+snapshots with the same append/replace semantics (see storage.py).
 
 Scale notes (10^10-URL frontier):
 * frontier/seen state is partitioned by salted host-bucket
   (pmod(xxhash64(host), n_buckets)) — joins against it co-partition, hot
   hosts spread across salt, AQE splits residual skew;
-* the seen check is Bloom-prefiltered per bucket so the exact anti-join
-  touches only bloom-positive candidates (crawler_spark.frontier.seen);
+* the seen check is one exact ``left_anti`` join on ``url_canon``: the
+  candidates arrive hash-partitioned by ``url_canon`` from the admission
+  dedup, so only the seen side moves (crawler_spark.frontier.seen);
 * the seen table is an append-only DELTA LOG (one parquet dir of newly
   admitted urls per round, manifest lists the paths) — checkpoint write
   cost per round is O(new urls), not O(total seen); Iceberg maps this to
@@ -58,7 +59,7 @@ from crawler_spark.frontier.politeness import (
     politeness_cap,
     robots_allowed,
 )
-from crawler_spark.frontier.seen import BloomState, filter_unseen
+from crawler_spark.frontier.seen import filter_unseen
 
 FRONTIER_SCHEMA = StructType(
     [
@@ -315,8 +316,6 @@ def _release(caches: list[DataFrame]) -> None:
 def admit(
     cands: DataFrame,
     seen: DataFrame | None,
-    bloom: DataFrame | None,
-    bloom_state,
     robots: DataFrame | None,
     n_buckets: int,
     seq_offset: int,
@@ -334,9 +333,9 @@ def admit(
     order); the caller releases ``new_entries._assign_seq_cache``."""
     fresh = _dedup_candidates(cands, n_buckets)
     if seen is not None:
-        # the seen delta, the Bloom merge and the seq stage all read the
-        # filtered set: cache it so the anti-join runs once
-        fresh = filter_unseen(fresh, seen, bloom, bloom_state)
+        # the seen delta and the seq stage both read the filtered set:
+        # cache it so the anti-join runs once
+        fresh = filter_unseen(fresh, seen, None, None)
         fresh.persist()
     try:
         allowed = robots_allowed(fresh, robots) if robots is not None else fresh
@@ -421,9 +420,6 @@ def crawl(
     equi-join on canonical url; ``ValueError`` if two pages share one);
     ``seeds(url, priority, seq)``; ``robots(host, disallow_prefixes)``;
     ``politeness(host, max_fetches_per_round)``."""
-    nparts = cfg.n_buckets
-    bloom_state = BloomState(cfg.n_buckets)
-
     if politeness is None:
         politeness = spark.createDataFrame(
             [], "host string, max_fetches_per_round int"
@@ -436,6 +432,8 @@ def crawl(
     try:
         manifest = read_manifest(cfg.checkpoint_dir) if resume else None
         if manifest is not None:
+            # an older manifest may also name a bloom_path: the exact seen
+            # log alone decides admission, so it is not read
             start_round = manifest["next_round"]
             seq_offset = manifest["seq_offset"]
             frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(manifest["frontier_path"])
@@ -445,51 +443,20 @@ def crawl(
                 frontier_size = frontier.count()
             seen_paths = manifest.get("seen_paths") or [manifest["seen_path"]]
             seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths)
-            if manifest.get("bloom_path"):
-                bloom = spark.read.schema(bloom_state.schema).parquet(manifest["bloom_path"])
-            else:
-                # a manifest without a filter: rebuild it from the seen log. An
-                # empty bitmap would call every candidate definitely new and
-                # skip the exact anti-join, re-admitting seen urls.
-                bloom = bloom_state.merge(
-                    bloom_state.empty(spark), seen.select("bucket", "url_hash")
-                )
         else:
             start_round = 0
             # within-batch first-occurrence dedup keeps the smallest seed seq
             seeds_c, frontier = admit(
-                seed_candidates(seeds), None, None, None, robots, cfg.n_buckets, 0, 0
+                seed_candidates(seeds), None, robots, cfg.n_buckets, 0, 0
             )
             caches += [seeds_c, frontier._assign_seq_cache]
-            # free by-product of _assign_seq's offsets collect — no count() job
-            seq_offset = frontier._assign_seq_total
-            seen = seeds_c.select("url_hash", "bucket", "url_canon")
-            bloom = bloom_state.merge(bloom_state.empty(spark), seen.select("bucket", "url_hash"))
-            # round-0 checkpoint of initial state
-            frontier = _snapshot(spark, frontier, _ckpt(cfg, -1, "frontier"), nparts, rows=seq_offset)
-            _release(caches)
-            # seen is an append-only DELTA LOG: each round writes only its newly
-            # admitted urls; the live table is a multi-path read. A full-table
-            # rewrite per round would be O(|seen-so-far|) — the dominant write at
-            # 10^10 URLs — where the delta is O(|new this round|). With Iceberg
-            # the delta write is writeTo(seen).append() on the same snapshot.
-            # Sized by the admitted seeds: robots-blocked seeds are seen too, so
-            # this undercounts by at most the blocked ones.
-            seen = _snapshot(spark, seen, _ckpt(cfg, -1, "seen"), nparts, rows=seq_offset)
-            seen_paths = [_ckpt(cfg, -1, "seen")]
-            bloom = _snapshot(spark, bloom, _ckpt(cfg, -1, "bloom"), 1)
-            frontier_size = seq_offset  # every admitted seed is a frontier row
-            _write_manifest(
-                cfg,
-                {
-                    "next_round": 0,
-                    "seq_offset": seq_offset,
-                    "frontier_size": frontier_size,
-                    "frontier_path": _ckpt(cfg, -1, "frontier"),
-                    "seen_paths": seen_paths,
-                    "bloom_path": _ckpt(cfg, -1, "bloom"),
-                },
+            # free by-product of _assign_seq's offsets collect — no count()
+            # job; every admitted seed is a frontier row
+            seq_offset = frontier_size = frontier._assign_seq_total
+            frontier, seen, seen_paths = _checkpoint(
+                spark, cfg, -1, frontier, frontier_size, seeds_c, seq_offset, [], seq_offset
             )
+            _release(caches)
 
         # static per crawl — computing it inside the loop would add a driver
         # collect job per round (pure flat cost against N→4N efficiency)
@@ -527,7 +494,7 @@ def crawl(
                 fetched, F.col("priority").cast("long") * F.lit(1 << 40) + F.col("seq")
             )
             fresh, new_entries = admit(
-                cands, seen, bloom, bloom_state, robots, cfg.n_buckets, seq_offset, rnd + 1
+                cands, seen, robots, cfg.n_buckets, seq_offset, rnd + 1
             )
             caches += [fresh, new_entries._assign_seq_cache]
             n_admitted = new_entries._assign_seq_total  # from the offsets collect
@@ -567,45 +534,15 @@ def crawl(
             frontier_size = frontier_size - n_scheduled + n_admitted
 
             # --- next-round state -----------------------------------------------
-            new_seen = fresh.select("url_hash", "bucket", "url_canon")
             frontier_next = deferred.select(*[f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
                 new_entries.select(*[f.name for f in FRONTIER_SCHEMA.fields])
             )
-            bloom_next = bloom_state.merge(bloom, new_seen.select("bucket", "url_hash"))
-
-            frontier = _snapshot(
-                spark, frontier_next, _ckpt(cfg, rnd, "frontier"), nparts, rows=frontier_size
-            )
-            # append-only seen delta: write THIS round's admissions (see init
-            # comment — O(new) write, not O(total)); sized like the seed delta
-            _snapshot(spark, new_seen, _ckpt(cfg, rnd, "seen"), nparts, rows=n_admitted)
-            seen_paths = seen_paths + [_ckpt(cfg, rnd, "seen")]
-            if len(seen_paths) >= SEEN_COMPACT_EVERY:
-                # delta-log compaction: one bucketed snapshot replaces the log
-                seen = _snapshot(
-                    spark,
-                    spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths),
-                    _ckpt(cfg, rnd, "seen_compacted"),
-                    nparts,
-                )
-                seen_paths = [_ckpt(cfg, rnd, "seen_compacted")]
-            else:
-                seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths)
-            bloom = _snapshot(spark, bloom_next, _ckpt(cfg, rnd, "bloom"), 1)
             seq_offset += n_admitted
-            _release(caches)
-
-            _write_manifest(
-                cfg,
-                {
-                    "next_round": rnd + 1,
-                    "seq_offset": seq_offset,
-                    "frontier_size": frontier_size,
-                    "frontier_path": _ckpt(cfg, rnd, "frontier"),
-                    "seen_paths": seen_paths,
-                    "bloom_path": _ckpt(cfg, rnd, "bloom"),
-                },
+            frontier, seen, seen_paths = _checkpoint(
+                spark, cfg, rnd, frontier_next, frontier_size, fresh, n_admitted,
+                seen_paths, seq_offset,
             )
+            _release(caches)
             rnd += 1
     finally:
         _release(caches)
@@ -621,6 +558,64 @@ def crawl(
         metrics=read_rounds("metrics", METRICS_DDL),
         rounds=rnd,
     )
+
+
+def _checkpoint(
+    spark: SparkSession,
+    cfg: CrawlConfig,
+    rnd: int,
+    frontier: DataFrame,
+    frontier_size: int,
+    fresh: DataFrame,
+    n_fresh: int,
+    seen_paths: list[str],
+    seq_offset: int,
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Write the state round ``rnd + 1`` starts from — the seed state
+    (``rnd = -1``) or round ``rnd``'s next state — in one order: frontier
+    snapshot, seen delta, seen compaction when the log is long, manifest.
+    The manifest goes last, so a crash at any earlier write resumes from
+    the previous manifest and re-runs the step, overwriting its own paths.
+
+    Seen is an append-only DELTA LOG: each step writes only its ``fresh``
+    urls (deduped and unseen, robots-blocked ones included); the live table
+    is a multi-path read. A full-table rewrite per round would be
+    O(|seen-so-far|) — the dominant write at 10^10 URLs — where the delta is
+    O(|new this round|); with Iceberg the delta write is
+    ``writeTo(seen).append()``. It is sized by ``n_fresh``, the admitted
+    count, which undercounts by at most the robots-blocked urls.
+
+    Returns ``(frontier, seen, seen_paths)`` read back from the checkpoint."""
+    frontier = _snapshot(
+        spark, frontier, _ckpt(cfg, rnd, "frontier"), cfg.n_buckets, rows=frontier_size
+    )
+    seen_paths = seen_paths + [_ckpt(cfg, rnd, "seen")]
+    _snapshot(
+        spark, fresh.select("url_hash", "bucket", "url_canon"), seen_paths[-1],
+        cfg.n_buckets, rows=n_fresh,
+    )
+    if len(seen_paths) >= SEEN_COMPACT_EVERY:
+        # delta-log compaction: one bucketed snapshot replaces the log
+        seen = _snapshot(
+            spark,
+            spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths),
+            _ckpt(cfg, rnd, "seen_compacted"),
+            cfg.n_buckets,
+        )
+        seen_paths = [_ckpt(cfg, rnd, "seen_compacted")]
+    else:
+        seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_paths)
+    _write_manifest(
+        cfg,
+        {
+            "next_round": rnd + 1,
+            "seq_offset": seq_offset,
+            "frontier_size": frontier_size,
+            "frontier_path": _ckpt(cfg, rnd, "frontier"),
+            "seen_paths": seen_paths,
+        },
+    )
+    return frontier, seen, seen_paths
 
 
 def _snapshot(

@@ -23,9 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-#: storage.go:38-40 flushes every 100 rows; kept as documentation only.
-REFERENCE_FLUSH_ROWS = 100
-
 
 def write_csv(
     df: DataFrame,

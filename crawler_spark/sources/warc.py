@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 _SEP = "WARC/1.0\r\n"
-_BLANK = "\r\n\r\n"
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:

@@ -5,16 +5,16 @@ The reference is a pull-based streaming system (bounded Go channels:
 sources are finite, so the batch engine models it as BSP rounds
 (scheduler.py). This package is the *unbounded-source* tier: the same
 round logic driven by Structured Streaming, plus the streaming-native
-operators (watermarked windowed rollups, cross-batch keyed state) that
-a long-running crawl needs.
+operators (cross-batch keyed state, watermarked URL dedup) that a
+long-running crawl needs.
 
 - :mod:`crawl_stream` — incremental crawl: a watched frontier directory
   is the stream source; each micro-batch is one politeness-bounded round
   whose outlinks feed back into the source, with exactly-once effects via
   batch-id-keyed idempotent writes.
-- :mod:`rollup` — event-time windowed fetch-rate rollups with watermarks
-  (late page drops), and a lifetime per-host budget via
-  ``applyInPandasWithState`` (state the per-round window cannot express).
+- :mod:`rollup` — a lifetime per-host budget via
+  ``applyInPandasWithState`` (state the per-round window cannot express),
+  and watermark-bounded URL dedup.
 """
 
 from crawler_spark.streaming.crawl_stream import (  # noqa: F401
@@ -22,8 +22,6 @@ from crawler_spark.streaming.crawl_stream import (  # noqa: F401
     stream_crawl,
 )
 from crawler_spark.streaming.rollup import (  # noqa: F401
-    hourly_host_rollup,
-    hourly_host_rollup_stream,
     stateful_host_budget,
     url_dedup_stream,
 )

@@ -194,7 +194,7 @@ def _round_fn(
                 batch.filter(F.col("seq").isNull()).select(
                     "url_canon", "priority", "first_occ_a", "first_occ_b"
                 ),
-                seen, None, None, robots, cfg.n_buckets, (batch_id << 32) + 1, batch_id,
+                seen, robots, cfg.n_buckets, (batch_id << 32) + 1, batch_id,
             )
             caches += [fresh, admitted._assign_seq_cache]
             fresh.select("url_hash", "bucket", "url_canon").write.mode("overwrite").parquet(

@@ -1,20 +1,15 @@
-"""Streaming-native operators: watermarked windowed rollups + keyed state.
+"""Streaming-native operators: keyed state + watermarked dedup.
 
 The reference has no event time (bounded channels only — SURVEY.md §2.4
 "Streaming" row); these operators are the streaming half our engine needs
 once the crawl runs against an unbounded page feed:
 
-- :func:`hourly_host_rollup_stream` — fetch-rate-per-host over event-time
-  windows with a watermark, the standard late-data answer (a page whose
-  ``warc_ts`` lags the watermark past the delay is dropped, not
-  double-counted into a finalized window).
 - :func:`stateful_host_budget` — a LIFETIME per-host crawl cap enforced
   across micro-batches via ``applyInPandasWithState``. The per-round
   politeness window (frontier/politeness.py) cannot express this: a
   window function sees one round, keyed state survives all of them.
-
-Both come with batch twins so tests can assert stream == batch on the
-same finite input (availableNow).
+- :func:`url_dedup_stream` — first arrival of each canonical URL within a
+  watermark horizon (``dropDuplicatesWithinWatermark``).
 """
 
 from __future__ import annotations
@@ -22,7 +17,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
@@ -31,50 +26,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-
-def hourly_host_rollup(
-    df: DataFrame, ts_col: str = "warc_ts", key_col: str = "host"
-) -> DataFrame:
-    """Batch twin of the streaming rollup: pages/hour per host."""
-    return (
-        df.groupBy(
-            F.window(F.col(ts_col), "1 hour").alias("win"), F.col(key_col)
-        )
-        .agg(F.count("*").alias("n_pages"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col(key_col).alias("host"),
-            "n_pages",
-        )
-    )
-
-
-def hourly_host_rollup_stream(
-    stream_df: DataFrame,
-    ts_col: str = "warc_ts",
-    key_col: str = "host",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Event-time windowed page counts per host with a watermark.
-
-    Append output mode emits a (window, host) row once the watermark
-    passes the window end — late pages inside the delay still count,
-    later ones are dropped. State size is bounded by
-    (#hosts × watermark/window) — the watermark is what makes a
-    10^10-page unbounded feed feasible; without it window state grows
-    forever.
-    """
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), "1 hour").alias("win"), F.col(key_col))
-        .agg(F.count("*").alias("n_pages"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col(key_col).alias("host"),
-            "n_pages",
-        )
-    )
 
 
 _BUDGET_OUT = StructType(
@@ -138,7 +89,7 @@ def url_dedup_stream(
     seen anti-join (frontier/seen.py): state for a key is kept only until
     the watermark passes its arrival + delay, so state size is bounded by
     the horizon's traffic — not by crawl lifetime (the unbounded-lifetime
-    cap is the batch seen table / Bloom; this operator is the in-flight
+    cap is the batch seen table; this operator is the in-flight
     tier that stops duplicate fetches *within* a horizon at stream speed).
     A duplicate later than the horizon re-emits — by design: the batch
     layer owns forever-dedup, the stream layer owns burst-dedup.

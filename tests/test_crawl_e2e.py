@@ -62,7 +62,7 @@ def _schedule_tuples_oracle(oracle_result):
 
 
 def test_crawl_matches_oracle(spark, corpus, oracle_result, tmp_path_factory):
-    ckpt = str(tmp_path_factory.mktemp("ckpt_bloom"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_oracle"))
     pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
     cfg = CrawlConfig(checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8)
     result = crawl(spark, pages, seeds, robots, politeness, cfg)
@@ -177,20 +177,23 @@ def test_resume_from_pre_frontier_size_manifest(spark, corpus, oracle_result, tm
     assert got == want
 
 
-def test_resume_without_bloom_path_rebuilds_filter(spark, corpus, oracle_result, tmp_path_factory):
-    """A manifest with no Bloom filter resumes with one rebuilt from the seen
-    log: an empty filter would call every candidate new, skip the exact
-    anti-join and schedule seen urls again."""
+def test_resume_from_manifest_naming_bloom_path(spark, corpus, oracle_result, tmp_path_factory):
+    """A manifest written while the crawl kept a Bloom filter also names a
+    ``bloom_path``. Resume ignores the key (the exact seen log decides
+    alone) and still reaches the oracle schedule."""
     import json
 
     pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
-    ckpt = str(tmp_path_factory.mktemp("ckpt_nobloom"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_bloompath"))
     cfg = CrawlConfig(checkpoint_dir=ckpt, max_rounds=3, default_budget=16, n_buckets=8)
     crawl(spark, pages, seeds, robots, politeness, cfg)
     mpath = os.path.join(ckpt, "manifest.json")
     with open(mpath) as f:
         m = json.load(f)
-    m["bloom_path"] = None
+    assert "bloom_path" not in m
+    # the pre-change layout: the last round's filter snapshot, never written
+    # by this crawl, so a resume that read it would fail
+    m["bloom_path"] = os.path.join(ckpt, "round=2", "bloom")
     with open(mpath, "w") as f:
         json.dump(m, f)
     cfg_full = CrawlConfig(checkpoint_dir=ckpt, max_rounds=12, default_budget=16, n_buckets=8)
@@ -231,7 +234,7 @@ def test_checkpoint_layout_iceberg_migration_contract(spark, corpus, tmp_path_fa
         man = json.load(f)
     assert set(man) == {
         "next_round", "seq_offset", "frontier_size",
-        "frontier_path", "seen_paths", "bloom_path",
+        "frontier_path", "seen_paths",
     }
     rounds = result.rounds
     assert rounds == 3 and man["next_round"] == rounds
@@ -244,6 +247,8 @@ def test_checkpoint_layout_iceberg_migration_contract(spark, corpus, tmp_path_fa
     for r in range(rounds):
         for state in ("frontier", "schedule", "metrics"):
             assert os.path.isdir(os.path.join(ckpt, f"round={r}", state)), (r, state)
+    # the crawl state is frontier, seen log and manifest: no filter snapshot
+    assert not glob.glob(os.path.join(ckpt, "round=*", "bloom"))
 
     def digest(path):
         return {
@@ -342,7 +347,7 @@ def test_failed_round_releases_caches(spark, corpus, tmp_path_factory, monkeypat
 
 # Spark jobs of one steady round on this corpus (local[8], 8 shuffle
 # partitions): the budget this round shape was measured at.
-STEADY_ROUND_JOBS = 32
+STEADY_ROUND_JOBS = 28
 
 
 def test_steady_round_job_budget(spark, corpus, tmp_path_factory):
@@ -405,3 +410,100 @@ def test_steady_round_fetch_reads_canonical_corpus_cache(
     steady = plans[2]
     assert "ArrowEvalPython" not in steady, steady
     assert "InMemoryRelation" in steady, steady
+
+
+# --- crash-anywhere resume ------------------------------------------------------
+#
+# Every write of a crawl step goes through one of three module globals of the
+# scheduler: _write_state (schedule, metrics), _snapshot (frontier, seen
+# delta, seen compaction) and _write_manifest. Each case raises at one of
+# them, in the seed state (round -1) or in round 1, then resumes.
+
+# seen_paths reaches 3 in round 1 (seed delta + rounds 0 and 1), so round 1
+# also compacts the seen log: every kind of write happens in that round
+_FAULT_COMPACT_EVERY = 3
+_FAULT_ROUNDS = 3
+
+
+@pytest.fixture(scope="module")
+def fault_corpus():
+    return make_corpus(seed=7, n_hosts=3, pages_per_host=6, n_seed_hosts=2)
+
+
+def _crawl_outcome(result):
+    schedule = _schedule_tuples_spark(result)
+    seen = {r["url_canon"] for r in result.seen.collect()}
+    metrics = sorted(
+        (r["round"], r["bucket"], r["scheduled"], r["fetch_ok"], r["admitted"])
+        for r in result.metrics.collect()
+    )
+    return schedule, seen, metrics
+
+
+def _fault_crawl(spark, corpus, ckpt, resume=False):
+    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
+    cfg = CrawlConfig(
+        checkpoint_dir=ckpt, max_rounds=_FAULT_ROUNDS, default_budget=2, n_buckets=4
+    )
+    return crawl(spark, pages, seeds, robots, politeness, cfg, resume=resume)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, fault_corpus, tmp_path_factory):
+    mp = pytest.MonkeyPatch()
+    import crawler_spark.scheduler as sch
+
+    mp.setattr(sch, "SEEN_COMPACT_EVERY", _FAULT_COMPACT_EVERY)
+    try:
+        result = _fault_crawl(spark, fault_corpus, str(tmp_path_factory.mktemp("ckpt_clean")))
+        assert result.rounds == _FAULT_ROUNDS
+        return _crawl_outcome(result)
+    finally:
+        mp.undo()
+
+
+@pytest.mark.parametrize(
+    "write, rnd, name",
+    [
+        ("_snapshot", -1, "frontier"),
+        ("_snapshot", -1, "seen"),
+        ("_write_manifest", -1, None),
+        ("_write_state", 1, "schedule"),
+        ("_write_state", 1, "metrics"),
+        ("_snapshot", 1, "frontier"),
+        ("_snapshot", 1, "seen"),
+        ("_snapshot", 1, "seen_compacted"),
+        ("_write_manifest", 1, None),
+    ],
+)
+def test_crash_at_any_write_resumes_to_uninterrupted_crawl(
+    spark, fault_corpus, uninterrupted, tmp_path_factory, monkeypatch, write, rnd, name
+):
+    """A crawl killed at any one write of the seed state or of round 1
+    resumes (``resume=True``) to the schedule, seen set and per-round,
+    per-bucket metrics counts of a crawl that was never interrupted."""
+    import crawler_spark.scheduler as sch
+
+    monkeypatch.setattr(sch, "SEEN_COMPACT_EVERY", _FAULT_COMPACT_EVERY)
+    real = getattr(sch, write)
+    hits = []
+
+    def at_fault_point(*args, **kwargs):
+        if write == "_write_manifest":
+            hit = args[1]["next_round"] == rnd + 1
+        else:
+            path = args[1] if write == "_write_state" else args[2]
+            hit = path.rstrip(os.sep).endswith(os.path.join(f"round={rnd}", name))
+        if hit and not hits:
+            hits.append(write)
+            raise RuntimeError(f"injected crash at {write} round={rnd} {name}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(sch, write, at_fault_point)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_crash"))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _fault_crawl(spark, fault_corpus, ckpt)
+    resumed = _fault_crawl(spark, fault_corpus, ckpt, resume=True)
+    assert hits == [write]
+    assert resumed.rounds == _FAULT_ROUNDS
+    assert _crawl_outcome(resumed) == uninterrupted

@@ -523,7 +523,7 @@ def test_unsupported_media_fails_loudly(spark, kind, blob):
 
 
 def test_ivf_sizing_rule_bounds_cluster_mass_at_sf01(spark):
-    """The documented sizing rule C = max(16, ceil(N/1024)) actually bounds
+    """The sizing rule C = max(16, ceil(N/1024)) actually bounds
     the pair-generation cost at sf0.1 (the r1/r2 'one knob to watch'):
     with the rule-derived C, the Sigma cluster^2 proxy (semantic_dedup's
     within-cluster pair work) stays within 2x of the balanced ideal N^2/C,
@@ -531,21 +531,12 @@ def test_ivf_sizing_rule_bounds_cluster_mass_at_sf01(spark):
     Measured headroom: ratio 1.01, max share 0.074 at n_iters=0."""
     import os
 
-    from crawler_spark.pipeline.similarity import (
-        ivf_centroids,
-        ivf_n_centroids,
-        ivf_probe_expr,
-    )
-
-    # the rule's arithmetic at synthetic corpus sizes (floor / growth arms)
-    assert ivf_n_centroids(2_000) == 16
-    assert ivf_n_centroids(1_000_000) == 977
-    assert ivf_n_centroids(10**9) == 976_563
+    from crawler_spark.pipeline.similarity import ivf_centroids, ivf_probe_expr
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.1")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
-    c = ivf_n_centroids(n)
+    c = 16  # the rule's floor: sf0.1 has N = 2,000 vectors, ceil(N/1024) = 2
     cents = ivf_centroids(emb, "vec_id", "embedding", n_centroids=c, n_iters=0)
     sizes = [
         r["cnt"]
@@ -1288,19 +1279,6 @@ def test_span_dedup_matches_python_oracle_hypothesis(spark):
         assert got == py_oracle(docs)
 
     inner()
-
-
-def test_ivf_n_centroids_sizing_rule():
-    """C = max(16, N/1024): floor at small scale, grows linearly with the
-    corpus so Σ|cluster|² stays ~N·target instead of N²/16."""
-    from crawler_spark.pipeline.similarity import ivf_n_centroids
-
-    assert ivf_n_centroids(1_000) == 16           # sf-scale floor
-    assert ivf_n_centroids(100_000) == 98
-    assert ivf_n_centroids(10**9) == 976_563      # ~10^6 at 10^9 vectors
-    # expected cluster size stays bounded by the target
-    for n in (10**5, 10**7, 10**9):
-        assert n / ivf_n_centroids(n) <= 1024
 
 
 def test_lsh_bucket_pairs_subset_of_exact(spark):

@@ -478,3 +478,29 @@ def test_url_canon_expressions_are_map_only_codegen(spark, sf001_dir):
     assert "EvalPython" not in simple, simple
     # "*" prefixes whole-stage-codegen operators in simple mode
     assert "*(" in simple, simple
+
+
+def test_sample_frames_filters_video_rows_before_python(spark, tmp_path):
+    """Only video rows cross into sample_frames' Python worker: a Filter on
+    ``kind`` sits below the MapInPandas node, so image and audio blobs are
+    pruned by Spark instead of being shipped over Arrow and skipped."""
+    from crawler_spark.pipeline.multimodal import MEDIA_SCHEMA, sample_frames
+
+    path = str(tmp_path / "media")
+    spark.createDataFrame([], MEDIA_SCHEMA).write.parquet(path)
+    plan = sample_frames(spark.read.parquet(path))._jdf.queryExecution().optimizedPlan()
+
+    def find(node, name):
+        if node.nodeName() == name:
+            return node
+        kids = node.children()
+        for i in range(kids.size()):
+            hit = find(kids.apply(i), name)
+            if hit is not None:
+                return hit
+        return None
+
+    mip = find(plan, "MapInPandas")
+    assert mip is not None, plan.toString()
+    below = find(mip.children().apply(0), "Filter")
+    assert below is not None and "kind" in below.condition().toString(), plan.toString()

@@ -1,6 +1,6 @@
 """Structured Streaming tier: incremental crawl (foreachBatch rounds fed
-back through a watched directory), watermarked windowed rollups, and
-cross-batch keyed state (applyInPandasWithState lifetime budget)."""
+back through a watched directory), cross-batch keyed state
+(applyInPandasWithState lifetime budget) and watermarked URL dedup."""
 
 import datetime as dt
 import os
@@ -15,8 +15,6 @@ from crawler_spark.corpus import make_corpus
 from crawler_spark.oracle import crawl_oracle
 from crawler_spark.streaming import (
     StreamCrawlConfig,
-    hourly_host_rollup,
-    hourly_host_rollup_stream,
     stateful_host_budget,
     stream_crawl,
 )
@@ -104,91 +102,6 @@ def test_stream_crawl_rerun_is_noop(spark, corpus, tmp_path_factory):
 
 def _ts(h, m=0):
     return dt.datetime(2025, 3, 1, h, m)
-
-
-@pytest.fixture()
-def fetch_log(spark, tmp_path_factory):
-    """Tiny fetch log: (warc_ts, host) across 3 hours, written as THREE
-    parquet files so maxFilesPerTrigger=1 yields three micro-batches with
-    advancing watermark."""
-    base = str(tmp_path_factory.mktemp("fetchlog"))
-    batches = [
-        [(_ts(0, 5), "a.com"), (_ts(0, 40), "a.com"), (_ts(0, 20), "b.com")],
-        [(_ts(1, 10), "a.com"), (_ts(0, 55), "b.com"), (_ts(1, 30), "b.com")],
-        [(_ts(4, 0), "a.com")],  # advances the watermark past hour 0+delay
-        # since SPARK-40925 (3.4) late-event filtering uses the PREVIOUS
-        # batch's watermark while eviction uses the current one, so the
-        # late row must arrive TWO batches after the advancer to be dropped
-        [(_ts(4, 30), "b.com")],
-        [(_ts(0, 59), "a.com")],  # 3h31m late — beyond a 1h delay, dropped
-    ]
-    import time
-
-    t0 = time.time()
-    for i, rows in enumerate(batches):
-        d = os.path.join(base, f"f{i}")
-        spark.createDataFrame(rows, "warc_ts timestamp, host string").coalesce(
-            1
-        ).write.parquet(d)
-        # the file source orders by modification time — pin distinct,
-        # increasing mtimes so batch order is the written order
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (t0 + 60 * i, t0 + 60 * i))
-    return base
-
-
-def test_hourly_rollup_stream_complete_matches_batch(spark, fetch_log):
-    df_batch = spark.read.parquet(*[os.path.join(fetch_log, d) for d in os.listdir(fetch_log)])
-    want = {
-        (r["window_start"], r["host"]): r["n_pages"]
-        for r in hourly_host_rollup(df_batch).collect()
-    }
-    stream = spark.readStream.schema("warc_ts timestamp, host string").parquet(
-        fetch_log + "/*"
-    )
-    q = (
-        hourly_host_rollup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("rollup_complete")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["window_start"], r["host"]): r["n_pages"]
-        for r in spark.sql("select * from rollup_complete").collect()
-    }
-    assert got == want
-
-
-def test_hourly_rollup_stream_append_drops_late(spark, fetch_log):
-    """Append mode with a 1h watermark processed one file per micro-batch:
-    hour-0 windows finalize once the watermark passes 01:00 (batch 3's
-    04:00 event pushes it), so the 00:59 event arriving in batch 3 —
-    2h59m late, beyond the 1h delay — is dropped from a.com's hour-0
-    count."""
-    stream = (
-        spark.readStream.schema("warc_ts timestamp, host string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(fetch_log + "/*")
-    )
-    q = (
-        hourly_host_rollup_stream(stream, watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("rollup_append")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["window_start"].hour, r["host"]): r["n_pages"]
-        for r in spark.sql("select * from rollup_append").collect()
-    }
-    # hour-0 finalized WITHOUT the late 00:59 row: a.com=2 (not 3), b.com=2
-    assert got[(0, "a.com")] == 2
-    assert got[(0, "b.com")] == 2
 
 
 def test_stateful_host_budget_lifetime_cap(spark, tmp_path_factory):
