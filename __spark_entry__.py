@@ -3218,17 +3218,19 @@ def _crawl_arith_inputs(spark: SparkSession):
 def q_stream_crawl_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Structured Streaming tier of the crawl: the frontier is a watched
     directory, each availableNow micro-batch is one politeness-bounded
-    round run in foreachBatch, outlinks/deferred urls feed back into the
-    source until the crawl drains.
+    round run in foreachBatch (fetch → expand → admit), and the admitted
+    outlinks plus deferred urls feed back into the source as frontier rows
+    until the crawl drains.
 
     Value-hashed since r3: driven over the SAME arithmetic corpus as
     q_crawl_bsp_rounds (one pass == one batch == one BSP round), so the
     drained schedule replays as chained CTEs in DuckDB (_sql_stream_crawl).
     The twin differs from the batch oracle exactly where the engines
     differ: child admission key = (parent seq, in-page pos) and
-    seq = batch_id·2^32 + within-batch admission rank (replay-stable, no
-    cross-batch counter — see streaming/crawl_stream.py). The RNG-corpus
-    drain/equivalence properties remain pinned by tests/test_streaming.py."""
+    seq = batch_id·2^32 + admission rank, where batch_id is the batch that
+    fetches the url (replay-stable, no cross-batch counter — see
+    streaming/crawl_stream.py). The RNG-corpus drain/equivalence
+    properties remain pinned by tests/test_streaming.py."""
     import tempfile
 
     from crawler_spark.streaming import StreamCrawlConfig, stream_crawl
@@ -4395,8 +4397,8 @@ def _sql_stream_crawl() -> str:
       no parent-priority term;
     * seq = batch_id·2^32 + 1-based within-batch admission rank over the
       post-robots admitted set (so seeds get seq h+1 in batch 0);
-    * round_added = the ADMITTING batch (children of batch n are admitted
-      by batch n+1, whose input is batch n's feedback file);
+    * round_added = the FETCHING batch (children of batch n are admitted
+      at the end of batch n and published as batch n+1's frontier);
     * seen delta per batch = pre-robots fresh discoveries, anti-joined by
       later batches — identical to the batch engine's discipline."""
     H, P = CRAWL_H, CRAWL_P

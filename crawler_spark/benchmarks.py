@@ -151,7 +151,8 @@ def frontier_round_kernel(
     Synthetic inputs (set up untimed): ``n_urls`` raw candidate urls over
     ``n_hosts`` hosts, a seen table holding every ``SEEN_EVERY``-th url, a
     robots table, and the corpus. The timed round is the scheduler's own
-    stages, as ``crawl()`` runs them: admit → fetch_round → expand.
+    stages over raw candidates: admit → fetch_round → expand (``crawl()``
+    runs the same stages as fetch_round → expand → admit).
     """
     raw = synth_frontier(spark, n_urls, n_hosts)
     pages = synth_pages(raw, links_per_page=LINKS_PER_PAGE, filler_words=FILLER_WORDS)

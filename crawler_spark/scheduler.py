@@ -307,10 +307,10 @@ def _release(caches: list[DataFrame]) -> None:
 
 # --- round stages --------------------------------------------------------------
 #
-# One implementation of each stage of a crawl round. crawl() runs them as
-# fetch → expand → admit (admission closes a round), the streaming crawl as
-# admit → fetch → expand (admission opens a micro-batch), and the benchmark
-# kernel as admit → fetch → expand over synthetic inputs.
+# One implementation of each stage of a crawl round. crawl() and the
+# streaming crawl's micro-batch both run them as fetch → expand → admit
+# (admission closes a round and yields the next round's frontier rows); the
+# benchmark kernel runs admit → fetch → expand over synthetic candidates.
 
 
 def admit(
@@ -500,26 +500,29 @@ def crawl(
             n_admitted = new_entries._assign_seq_total  # from the offsets collect
 
             # --- metrics (per-partition lineage counters) -----------------------
-            m_sched = fetched.groupBy("bucket").agg(
-                F.count("*").alias("scheduled"),
-                F.sum(F.col("fetched").cast("long")).alias("fetch_ok"),
-            )
-            # url_sketch: per-bucket HLL of admitted URLs — mergeable lineage
-            # (hll_union_agg across any rounds/buckets → distinct-URL estimate
-            # with no rescan of any round's frontier; see frontier/seen.py)
-            m_new = new_entries.groupBy("bucket").agg(
-                F.count("*").alias("admitted"),
-                F.hll_sketch_agg(F.col("url_canon"), F.lit(12)).alias("url_sketch"),
-            )
+            # one aggregation over scheduled rows ∪ admitted rows: each counter
+            # counts its arm's non-null marker (count, never null, keeps the
+            # columns non-nullable). url_sketch: per-bucket HLL of admitted URLs
+            # — mergeable lineage (hll_union_agg across any rounds/buckets →
+            # distinct-URL estimate with no rescan of any round's frontier; see
+            # frontier/seen.py); null in a bucket that admitted nothing
             metrics = (
-                m_sched.join(m_new, "bucket", "full")
+                fetched.select(
+                    "bucket", F.lit(1).alias("scheduled"),
+                    F.when(F.col("fetched"), 1).alias("fetch_ok"),
+                )
+                .unionByName(
+                    new_entries.select("bucket", F.lit(1).alias("admitted"), "url_canon"),
+                    allowMissingColumns=True,
+                )
+                .groupBy("bucket")
+                .agg(
+                    *[F.count(c).alias(c) for c in ("scheduled", "fetch_ok", "admitted")],
+                    F.hll_sketch_agg("url_canon", F.lit(12)).alias("url_sketch"),
+                )
                 .select(
-                    F.lit(rnd).alias("round"),
-                    "bucket",
-                    F.coalesce("scheduled", F.lit(0)).alias("scheduled"),
-                    F.coalesce("fetch_ok", F.lit(0)).alias("fetch_ok"),
-                    F.coalesce("admitted", F.lit(0)).alias("admitted"),
-                    "url_sketch",
+                    F.lit(rnd).alias("round"), "bucket", "scheduled", "fetch_ok", "admitted",
+                    F.when(F.col("admitted") > 0, F.col("url_sketch")).alias("url_sketch"),
                 )
             )
             # per-round scheduled total rides the metrics WRITE job as an
@@ -638,14 +641,11 @@ def _snapshot(
     lower bound), sizes the write: ``min(nparts, ceil(rows /
     SNAPSHOT_ROWS_PER_PART))`` partitions, so a small round writes one part
     file instead of ``nparts`` near-empty ones. The (bucket, salt) layout is
-    kept at any count — a slot never spans part files."""
+    kept at any count — a slot never spans part files. ``df`` carries both
+    ``bucket`` and ``url_hash``."""
     if rows is not None:
         nparts = max(1, min(nparts, -(-rows // SNAPSHOT_ROWS_PER_PART)))
-    cols = df.columns
-    if "bucket" in cols and (nparts > 1 or rows is not None):
-        if "url_hash" in cols:
-            df = df.repartition(nparts, "bucket", F.pmod("url_hash", F.lit(16)))
-        else:
-            df = df.repartition(nparts, "bucket")
+    if nparts > 1 or rows is not None:
+        df = df.repartition(nparts, "bucket", F.pmod("url_hash", F.lit(16)))
     df.write.mode("overwrite").parquet(path)
     return spark.read.schema(df.schema).parquet(path)

@@ -25,23 +25,26 @@ the batch's input files. This is the standard foreachBatch idempotency
 contract; with Iceberg the same property comes from committing the batch
 id in the snapshot summary and skipping already-committed ids.
 
-Deferred urls (over a host's per-round budget) ride the feedback files
-WITH their already-assigned ``(seq, round_added)``: they are already in
-the seen log, so they must bypass the seen anti-join, and they must keep
-their admission seq so the politeness order stays FIFO-within-priority
-across batches — exactly the batch scheduler's carry-over semantics.
-New candidates travel with ``seq = round_added = null`` and earn a
-replay-stable ``seq = batch_id << 32 | within-batch admission rank`` (no
-mutable cross-batch counter — a counter would break idempotent replay).
+Every row in the watched directory is a FRONTIER row (``FRONTIER_SCHEMA``,
+the batch scheduler's ``frontier_next``): a batch fetches its rows, expands
+the fetched pages' outlinks and admits them, then publishes ``deferred ∪
+admitted`` for the next batch — the batch crawl's fetch → expand → admit
+order. Deferred urls (over a host's per-round budget) keep their
+``(seq, round_added)``, so the politeness order stays FIFO-within-priority
+across batches. Batch ``b`` admits with the replay-stable ``seq = (b + 1)
+<< 32 | admission rank`` and ``round_added = b + 1``, the batch whose
+frontier they join (no mutable cross-batch counter — a counter would break
+idempotent replay); the seeds are admitted once, before the first pass,
+with seq offset 1 and ``round_added = 0``.
 
-Scale: one round of the batch scheduler's own stages
-(``scheduler.admit``, ``fetch_round`` and ``expand``), run admission
-first — the corpus is canonicalized and persisted once per stream and never
-shuffled (broadcast fetch join on the budget-bounded scheduled set), seen
-is an append-only delta log, and the watched directory only ever holds
-narrow canonical url rows. Reference semantics preserved: per-page
-order-preserving outlink extraction (the reference's collector-url.go:31),
-silent drop of failed fetches (its collector.go:88-90).
+Scale: one round of the batch scheduler's own stages (``fetch_round``,
+``expand`` and ``scheduler.admit``) — the corpus is canonicalized and
+persisted once per stream and never shuffled (broadcast fetch join on the
+budget-bounded scheduled set), seen is an append-only delta log, and the
+watched directory only ever holds narrow canonical url rows. Reference
+semantics preserved: per-page order-preserving outlink extraction (the
+reference's collector-url.go:31), silent drop of failed fetches (its
+collector.go:88-90).
 """
 
 from __future__ import annotations
@@ -51,17 +54,13 @@ import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from crawler_spark.frontier.canon import host_bucket_expr, host_expr, url_hash_expr
+# the state writers (_write_state, _snapshot) are called through the module,
+# where the crash-resume tests replace them
+from crawler_spark import scheduler
 from crawler_spark.frontier.politeness import politeness_cap
 from crawler_spark.scheduler import (
+    FRONTIER_SCHEMA,
     SEEN_SCHEMA,
     _canonical_corpus,
     _release,
@@ -69,20 +68,6 @@ from crawler_spark.scheduler import (
     expand,
     fetch_round,
     seed_candidates,
-)
-
-# rows flowing through the watched directory: canonical url + admission key;
-# seq and round_added are null for NEW candidates, set for deferred
-# carry-overs (whose admission key is then unused, and null)
-CAND_SCHEMA = StructType(
-    [
-        StructField("url_canon", StringType()),
-        StructField("priority", IntegerType()),
-        StructField("first_occ_a", LongType()),
-        StructField("first_occ_b", LongType()),
-        StructField("seq", LongType()),
-        StructField("round_added", IntegerType()),
-    ]
 )
 
 
@@ -160,78 +145,53 @@ def _round_fn(
     politeness: DataFrame | None,
     cfg: StreamCrawlConfig,
 ):
-    """Build the foreachBatch body: one round of the scheduler's stages,
-    admission first. All writes are keyed by batch_id and overwritten — see
-    module docstring (idempotent replay)."""
+    """Build the foreachBatch body: one round of the scheduler's stages in
+    ``crawl()``'s order, fetch → expand → admit. All writes are keyed by
+    batch_id and overwritten — see module docstring (idempotent replay)."""
     if politeness is None:
         politeness = spark.createDataFrame([], "host string, max_fetches_per_round int")
     cap = politeness_cap(politeness, cfg.default_budget)  # once, not per batch
 
     def run_round(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        caches = [batch]
+        caches = []
         try:
-            # deferred carry-overs: already seen + robots-vetted; keep identity
-            carried = batch.filter(F.col("seq").isNotNull()).withColumn(
-                "host", host_expr(F.col("url_canon"))
-            ).select(
-                "url_canon", "host",
-                host_bucket_expr(F.col("host"), cfg.n_buckets).alias("bucket"),
-                url_hash_expr(F.col("url_canon")).alias("url_hash"),
-                "priority", "round_added", "seq",
+            fetched, deferred = fetch_round(batch, corpus, politeness, cap, cfg.default_budget)
+            caches += fetched._fetch_round_caches
+            scheduler._write_state(
+                fetched.select(
+                    F.col("url_canon").alias("url"), "host", "priority", "seq", "fetched",
+                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
+                ),
+                os.path.join(cfg.schedule_dir, f"batch={batch_id}"),
             )
 
-            # new candidates: the seen log of every OTHER batch (a replayed
-            # batch must not see its own delta) is the unseen filter's state
+            # the seen log of every OTHER batch (a replayed batch must not see
+            # its own delta) is the unseen filter's state; child admission
+            # key = (parent seq, in-page position); replay-stable seq =
+            # (batch_id + 1)·2^32 + 1-based admission rank
             seen_deltas = [
                 os.path.join(cfg.seen_dir, d)
                 for d in sorted(os.listdir(cfg.seen_dir))
                 if os.path.isdir(os.path.join(cfg.seen_dir, d)) and d != f"batch={batch_id}"
             ]
             seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_deltas) if seen_deltas else None
-            # replay-stable seq = batch_id·2^32 + 1-based admission rank
             fresh, admitted = admit(
-                batch.filter(F.col("seq").isNull()).select(
-                    "url_canon", "priority", "first_occ_a", "first_occ_b"
-                ),
-                seen, robots, cfg.n_buckets, (batch_id << 32) + 1, batch_id,
+                expand(fetched, F.col("seq")), seen, robots, cfg.n_buckets,
+                ((batch_id + 1) << 32) + 1, batch_id + 1,
             )
             caches += [fresh, admitted._assign_seq_cache]
-            fresh.select("url_hash", "bucket", "url_canon").write.mode("overwrite").parquet(
-                os.path.join(cfg.seen_dir, f"batch={batch_id}")
+            scheduler._snapshot(
+                spark, fresh.select("url_hash", "bucket", "url_canon"),
+                os.path.join(cfg.seen_dir, f"batch={batch_id}"), cfg.n_buckets,
+                rows=admitted._assign_seq_total,
             )
 
-            fetched, deferred = fetch_round(
-                admitted.unionByName(carried), corpus, politeness, cap, cfg.default_budget
-            )
-            caches += fetched._fetch_round_caches
-            fetched.select(
-                F.col("url_canon").alias("url"), "host", "priority", "seq", "fetched",
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(cfg.schedule_dir, f"batch={batch_id}")
-            )
-
-            # feed the stream: outlinks of fetched pages (new candidates,
-            # child admission key = (parent seq, in-page position)) +
-            # deferred urls (carry-overs) into the watched directory
-            feedback = expand(fetched, F.col("seq")).select(
-                "url_canon", "priority", "first_occ_a", "first_occ_b",
-                F.lit(None).cast("long").alias("seq"),
-                F.lit(None).cast("int").alias("round_added"),
-            ).unionByName(
-                deferred.select(
-                    "url_canon", "priority",
-                    F.lit(None).cast("long").alias("first_occ_a"),
-                    F.lit(None).cast("long").alias("first_occ_b"),
-                    "seq", "round_added",
-                )
-            )
-            # empty-feedback suppression + count ride the publish write
-            # itself (Observation in _publish) — one job, no persist; no file
-            # ⇒ the next pass sees no input and the drain loop terminates.
+            # feed the stream the next batch's frontier; empty-frontier
+            # suppression + count ride the publish write itself (Observation
+            # in _publish) — one job, no persist; no file ⇒ the next pass
+            # sees no input and the drain loop terminates.
             _publish(
-                feedback,
+                deferred.unionByName(admitted),
                 os.path.join(cfg.stage_dir, f"from_batch={batch_id}"),
                 cfg.frontier_in,
                 f"b{batch_id}",
@@ -262,7 +222,19 @@ def stream_crawl(
     the BSP frontier draining. A killed job restarts from the checkpoint
     and replays only uncommitted batches, whose idempotent batch-id-keyed
     writes make the replay invisible.
+
+    Raises ``ValueError`` on a ``work_dir`` whose watched directory may
+    still hold candidate rows of the older admit-first layout: one with a
+    stream checkpoint but no ``seen/seeds``, which is written before the
+    first pass creates the checkpoint.
     """
+    seeds_seen = os.path.join(cfg.seen_dir, "seeds")
+    if os.path.isdir(cfg.checkpoint) and not os.path.isdir(seeds_seen):
+        raise ValueError(
+            f"stream work_dir {cfg.work_dir!r} has a checkpoint but no seen/seeds: "
+            "it was written by an admit-first stream, whose watched directory "
+            "holds candidate rows, not frontier rows"
+        )
     # canonicalized once per stream and persisted; a duplicate url_canon
     # raises here, before anything is published
     corpus = _canonical_corpus(pages)
@@ -270,22 +242,23 @@ def stream_crawl(
         for d in (cfg.frontier_in, cfg.schedule_dir, cfg.seen_dir, cfg.stage_dir):
             os.makedirs(d, exist_ok=True)
 
-        # seeds are canonicalized once, here; outlinks leave expand canonical
-        _publish(
-            seed_candidates(seeds).select(
-                "*",
-                F.lit(None).cast("long").alias("seq"),
-                F.lit(None).cast("int").alias("round_added"),
-            ),
-            os.path.join(cfg.stage_dir, "seeds"),
-            cfg.frontier_in,
-            "seeds",
-        )
+        # the seeds are admitted once, here, as batch 0's frontier; their seen
+        # delta is written before the frontier file can be consumed and before
+        # the first pass creates the checkpoint (the admit-first check above)
+        seeds_fresh, frontier = admit(seed_candidates(seeds), None, robots, cfg.n_buckets, 1, 0)
+        try:
+            scheduler._snapshot(
+                spark, seeds_fresh.select("url_hash", "bucket", "url_canon"), seeds_seen,
+                cfg.n_buckets, rows=frontier._assign_seq_total,
+            )
+            _publish(frontier, os.path.join(cfg.stage_dir, "seeds"), cfg.frontier_in, "seeds")
+        finally:
+            _release([seeds_fresh, frontier._assign_seq_cache])
 
         round_fn = _round_fn(spark, corpus, robots, politeness, cfg)
         passes = 0
         for _ in range(cfg.max_passes):
-            src = spark.readStream.schema(CAND_SCHEMA).parquet(cfg.frontier_in)
+            src = spark.readStream.schema(FRONTIER_SCHEMA).parquet(cfg.frontier_in)
             q = (
                 src.writeStream.foreachBatch(round_fn)
                 .option("checkpointLocation", cfg.checkpoint)

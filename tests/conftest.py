@@ -34,3 +34,27 @@ def sf001_dir():
 @pytest.fixture(scope="session")
 def sf01_dir():
     return os.path.join(TESTDATA, "sf0.01")
+
+
+@pytest.fixture
+def crash_at(monkeypatch):
+    """Install a fault point: ``crash_at(module, name, hit)`` replaces
+    ``module.name`` with a wrapper that raises ``RuntimeError("injected
+    crash …")`` the first time ``hit(*args, **kwargs)`` holds and otherwise
+    calls the original. Returns the list of crashes so far (one entry once
+    the fault point fired)."""
+
+    def install(module, name, hit):
+        real = getattr(module, name)
+        hits = []
+
+        def at_fault_point(*args, **kwargs):
+            if not hits and hit(*args, **kwargs):
+                hits.append(name)
+                raise RuntimeError(f"injected crash at {name}")
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, at_fault_point)
+        return hits
+
+    return install

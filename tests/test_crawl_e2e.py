@@ -347,7 +347,7 @@ def test_failed_round_releases_caches(spark, corpus, tmp_path_factory, monkeypat
 
 # Spark jobs of one steady round on this corpus (local[8], 8 shuffle
 # partitions): the budget this round shape was measured at.
-STEADY_ROUND_JOBS = 28
+STEADY_ROUND_JOBS = 27
 
 
 def test_steady_round_job_budget(spark, corpus, tmp_path_factory):
@@ -417,7 +417,8 @@ def test_steady_round_fetch_reads_canonical_corpus_cache(
 # Every write of a crawl step goes through one of three module globals of the
 # scheduler: _write_state (schedule, metrics), _snapshot (frontier, seen
 # delta, seen compaction) and _write_manifest. Each case raises at one of
-# them, in the seed state (round -1) or in round 1, then resumes.
+# them (the crash_at fixture, tests/conftest.py), in the seed state
+# (round -1) or in round 1, then resumes.
 
 # seen_paths reaches 3 in round 1 (seed delta + rounds 0 and 1), so round 1
 # also compacts the seen log: every kind of write happens in that round
@@ -477,7 +478,8 @@ def uninterrupted(spark, fault_corpus, tmp_path_factory):
     ],
 )
 def test_crash_at_any_write_resumes_to_uninterrupted_crawl(
-    spark, fault_corpus, uninterrupted, tmp_path_factory, monkeypatch, write, rnd, name
+    spark, fault_corpus, uninterrupted, tmp_path_factory, monkeypatch, crash_at,
+    write, rnd, name,
 ):
     """A crawl killed at any one write of the seed state or of round 1
     resumes (``resume=True``) to the schedule, seen set and per-round,
@@ -485,21 +487,14 @@ def test_crash_at_any_write_resumes_to_uninterrupted_crawl(
     import crawler_spark.scheduler as sch
 
     monkeypatch.setattr(sch, "SEEN_COMPACT_EVERY", _FAULT_COMPACT_EVERY)
-    real = getattr(sch, write)
-    hits = []
 
-    def at_fault_point(*args, **kwargs):
+    def hit(*args, **kwargs):
         if write == "_write_manifest":
-            hit = args[1]["next_round"] == rnd + 1
-        else:
-            path = args[1] if write == "_write_state" else args[2]
-            hit = path.rstrip(os.sep).endswith(os.path.join(f"round={rnd}", name))
-        if hit and not hits:
-            hits.append(write)
-            raise RuntimeError(f"injected crash at {write} round={rnd} {name}")
-        return real(*args, **kwargs)
+            return args[1]["next_round"] == rnd + 1
+        path = args[1] if write == "_write_state" else args[2]
+        return path.rstrip(os.sep).endswith(os.path.join(f"round={rnd}", name))
 
-    monkeypatch.setattr(sch, write, at_fault_point)
+    hits = crash_at(sch, write, hit)
     ckpt = str(tmp_path_factory.mktemp("ckpt_crash"))
     with pytest.raises(RuntimeError, match="injected crash"):
         _fault_crawl(spark, fault_corpus, ckpt)

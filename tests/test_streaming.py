@@ -4,8 +4,10 @@ back through a watched directory), cross-batch keyed state
 
 import datetime as dt
 import os
+import re
 import sys
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -98,6 +100,98 @@ def test_stream_crawl_rerun_is_noop(spark, corpus, tmp_path_factory):
     second = stream_crawl(spark, pages, seeds, robots, politeness, cfg)
     assert {r["url_canon"] for r in second["seen"].collect()} == seen1
     assert second["schedule"].count() == sched1
+
+
+def test_stream_rejects_admit_first_work_dir(spark, tmp_path_factory):
+    """A work_dir left by the admit-first stream (a checkpoint, candidate
+    rows in the watched directory, no seen/seeds) raises ValueError naming
+    it before anything is scheduled: read as frontier rows, its candidates
+    would carry null host, bucket and url_hash."""
+    work = str(tmp_path_factory.mktemp("stream_admit_first"))
+    cfg = StreamCrawlConfig(work_dir=work, n_buckets=8)
+    os.makedirs(cfg.checkpoint)
+    os.makedirs(os.path.join(cfg.seen_dir, "batch=0"))
+    os.makedirs(cfg.frontier_in)
+    pd.DataFrame(
+        {"url_canon": ["https://h.example/p/1"], "priority": [0], "first_occ_a": [1],
+         "first_occ_b": [0], "seq": [None], "round_added": [None]}
+    ).astype(
+        {"priority": "int32", "first_occ_a": "int64", "first_occ_b": "int64",
+         "seq": "Int64", "round_added": "Int32"}
+    ).to_parquet(os.path.join(cfg.frontier_in, "b0-0.parquet"))
+    pages = spark.createDataFrame(
+        [("https://h.example/p/0", '<a href="/p/1">a</a>'), ("https://h.example/p/1", "x")],
+        "url string, html string",
+    )
+    seeds = spark.createDataFrame(
+        [("https://h.example/p/0", 0, 0)], "url string, priority int, seq long"
+    )
+    with pytest.raises(ValueError, match=re.escape(work)):
+        stream_crawl(spark, pages, seeds, None, None, cfg)
+    assert not os.path.exists(cfg.schedule_dir)
+
+
+# --- crash-anywhere resume ------------------------------------------------------
+#
+# The stream writes its seen deltas through scheduler._snapshot, its schedule
+# through scheduler._write_state and the watched directory's files through
+# crawl_stream._publish. Each case raises at one of them (the crash_at
+# fixture, tests/conftest.py), for the seeds or in batch 1, then reruns
+# stream_crawl on the same work_dir.
+
+
+@pytest.fixture(scope="module")
+def fault_corpus():
+    return make_corpus(seed=7, n_hosts=3, pages_per_host=6, n_seed_hosts=2)
+
+
+def _fault_stream(spark, corpus, work):
+    pages, seeds, robots, politeness = _inputs(spark, corpus)
+    cfg = StreamCrawlConfig(work_dir=work, default_budget=2, n_buckets=4, max_passes=60)
+    res = stream_crawl(spark, pages, seeds, robots, politeness, cfg)
+    schedule = sorted(
+        tuple(r)
+        for r in res["schedule"].select("batch_id", "url", "priority", "seq", "fetched").collect()
+    )
+    return schedule, {r["url_canon"] for r in res["seen"].collect()}
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_stream(spark, fault_corpus, tmp_path_factory):
+    return _fault_stream(spark, fault_corpus, str(tmp_path_factory.mktemp("stream_clean")))
+
+
+@pytest.mark.parametrize(
+    "write, target",
+    [
+        ("_snapshot", os.path.join("seen", "seeds")),
+        ("_publish", "seeds"),
+        ("_write_state", os.path.join("schedule", "batch=1")),
+        ("_snapshot", os.path.join("seen", "batch=1")),
+        ("_publish", "b1"),
+    ],
+)
+def test_stream_crash_at_any_write_resumes_to_uninterrupted_stream(
+    spark, fault_corpus, uninterrupted_stream, tmp_path_factory, crash_at, write, target
+):
+    """A stream killed at any one write of the seeds or of batch 1, rerun on
+    the same work_dir, ends with the schedule and seen set of a stream that
+    was never interrupted."""
+    import crawler_spark.scheduler as sch
+    from crawler_spark.streaming import crawl_stream
+
+    def hit(*args, **kwargs):
+        if write == "_publish":
+            return args[3] == target
+        path = args[1] if write == "_write_state" else args[2]
+        return path.rstrip(os.sep).endswith(target)
+
+    hits = crash_at(crawl_stream if write == "_publish" else sch, write, hit)
+    work = str(tmp_path_factory.mktemp("stream_crash"))
+    with pytest.raises(Exception, match="injected crash"):
+        _fault_stream(spark, fault_corpus, work)
+    assert hits == [write]
+    assert _fault_stream(spark, fault_corpus, work) == uninterrupted_stream
 
 
 def _ts(h, m=0):
