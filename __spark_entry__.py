@@ -330,7 +330,6 @@ def q_cuckoo_seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     still probes the seen side, so the output is the exact anti-join's
     (== NOT EXISTS) and the DuckDB oracle is plain SQL."""
     from crawler_spark.frontier.cuckoo import CuckooState
-    from crawler_spark.frontier.seen import filter_unseen
 
     customer = _t(spark, sf_dir, "customer")
     # restrict the seen set so a real mix of hits and misses flows through
@@ -352,7 +351,7 @@ def q_cuckoo_seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = keyed(orders, "o_custkey")
     cs = CuckooState(n_buckets=n_buckets, table_buckets=1 << 12)
     filt = cs.merge(cs.empty(spark), seen.select("bucket", "url_hash"))
-    return filter_unseen(cands, seen, filt, cs).select("c_custkey", "c_name")
+    return cs.unseen(cands, seen, filt).select("c_custkey", "c_name")
 
 
 def q_robots_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5344,8 +5343,8 @@ FROM documents a LEFT JOIN documents b ON b.doc_id = a.doc_id + 1""",
             "(SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey "
             "AND o.o_totalprice > 400000)"
         ),
-        # the cuckoo prefilter only routes rows between the fast path and the
-        # exact anti-join; the result set is identical to plain NOT EXISTS
+        # the cuckoo verdict only conditions the exact anti-join; the result
+        # set is identical to plain NOT EXISTS
         "cuckoo_seen_anti_join": (
             "SELECT c_custkey, c_name FROM customer c WHERE NOT EXISTS "
             "(SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey "

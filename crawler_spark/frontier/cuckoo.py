@@ -3,12 +3,9 @@
 
 Same state-table pattern as :class:`crawler_spark.frontier.seen.BloomState`
 — one binary row per host bucket, checkpointable to parquet/Iceberg, probed
-map-side via broadcast or co-partitioned via cogroup — but, unlike a Bloom
-bitmap, a cuckoo filter supports **deletion**: expiring a URL from the seen
-state re-admits it to the frontier without rebuilding the filter. That is
-the primitive a recrawl policy needs at 10^10-URL scale, where rebuilding a
-~12 GiB filter from the exact seen table every refresh cycle would be a
-full-table scan per cycle.
+map-side with codegen expressions. :meth:`CuckooState.unseen` carries the
+probe verdict as a condition of the exact anti-join; the
+``cuckoo_seen_anti_join`` registry query runs it.
 
 Layout per host bucket (a (2,4)-cuckoo filter):
 
@@ -31,18 +28,14 @@ Semantics (standard cuckoo-filter contract):
   filter is a set: re-inserting a member is a no-op);
 * false-positive rate ~ 2 × 4 / 2^16 per slot-bucket pair + stash hits;
   every positive is double-checked by the exact anti-join in
-  :func:`crawler_spark.frontier.seen.filter_unseen`, so filter false
-  positives never change the result;
-* ``delete`` may only be called for values actually inserted (else it can
-  evict another member's fingerprint). After an fp-collision delete a
-  remaining member can probe negative — for recrawl expiry that direction
-  is safe: the URL is simply fetched once more.
+  :meth:`CuckooState.unseen`, so filter false positives never change the
+  result.
 
 All kernels are numpy bit-ops over whole Arrow batches — no per-row Python.
 
 Reference parity note: the reference keeps NO url-seen state at all
-(dedup is per-page only, /root/reference/collector-url.go:31); the global
-seen filter is new behavior mandated by BASELINE.json's north_rule.
+(dedup is per-page only, collector-url.go:31); the global seen filter is
+new behavior mandated by BASELINE.json's north_rule.
 """
 
 from __future__ import annotations
@@ -52,7 +45,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     IntegerType,
     StructField,
     StructType,
@@ -207,41 +199,6 @@ def _insert_entries(
     return table, stash
 
 
-def _delete_kernel(
-    table: np.ndarray, stash: np.ndarray, h: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Remove one stored copy per unique hash (best-effort, vectorized).
-
-    Two distinct deleted hashes can map to the same (slot-bucket, slot); the
-    collision loser keeps its entry — erring toward "still seen", which for
-    recrawl expiry only delays one refetch.
-    """
-    if not len(h):
-        return table, stash
-    h = np.unique(h)
-    fp, i1, i2 = _index_pair(h, table.shape[0])
-    todo = np.ones(len(h), dtype=bool)
-    # stash first: exact key match, cheapest
-    if len(stash):
-        k1, k2 = _stash_keys(i1, fp), _stash_keys(i2, fp)
-        m1, m2 = np.isin(k1, stash), np.isin(k2, stash)
-        stash = stash[~np.isin(stash, np.concatenate([k1[m1], k2[m2]]))]
-        todo &= ~(m1 | m2)
-    for choice in (i1, i2):
-        rows = np.flatnonzero(todo)
-        if not len(rows):
-            break
-        m = table[choice[rows]] == fp[rows, None]
-        has = m.any(axis=1)
-        rows = rows[has]
-        slot = m[has].argmax(axis=1)
-        # one clear per physical slot: dedupe (bucket, slot) pairs keep-first
-        _, keep = np.unique(choice[rows] * _SLOTS + slot, return_index=True)
-        table[choice[rows[keep]], slot[keep]] = 0
-        todo[rows[keep]] = False
-    return table, stash
-
-
 def _decode(row_table, row_stash, n_tbl: int) -> tuple[np.ndarray, np.ndarray]:
     table = (
         np.frombuffer(bytes(row_table), dtype=np.uint16).reshape(n_tbl, _SLOTS).copy()
@@ -257,13 +214,7 @@ def _decode(row_table, row_stash, n_tbl: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 class CuckooState:
-    """Partitioned cuckoo filter over ``url_hash`` keyed by host bucket.
-
-    Duck-compatible with :class:`BloomState` (``empty`` / ``merge`` /
-    ``probe`` / ``probe_broadcast`` / ``state_bytes``) so
-    :func:`crawler_spark.frontier.seen.filter_unseen` and the scheduler
-    accept either; adds :meth:`delete` for recrawl expiry.
-    """
+    """Partitioned cuckoo filter over ``url_hash`` keyed by host bucket."""
 
     schema = CUCKOO_SCHEMA
 
@@ -272,15 +223,14 @@ class CuckooState:
         self.n_buckets = n_buckets
         self.table_buckets = table_buckets
 
-    def state_bytes(self) -> int:
-        return self.n_buckets * self.table_buckets * _SLOTS * 2
-
     def empty(self, spark) -> DataFrame:
         zero_t = bytes(self.table_buckets * _SLOTS * 2)
         rows = [(b, zero_t, b"") for b in range(self.n_buckets)]
         return spark.createDataFrame(rows, CUCKOO_SCHEMA)
 
-    def _fold(self, kernel):
+    def merge(self, state_df: DataFrame, new_df: DataFrame) -> DataFrame:
+        """Fold new ``(bucket, url_hash)`` rows into the per-bucket filters —
+        co-partitioned on the bucket key, same shuffle shape as Bloom merge."""
         n_tbl = self.table_buckets
 
         def fold(state_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -306,29 +256,15 @@ class CuckooState:
                         table, stash, s // 65536, (s % 65536).astype(np.uint16)
                     )
             hashes = new_pdf["url_hash"].to_numpy(dtype=np.int64).astype(np.uint64)
-            table, stash = kernel(table, stash, hashes)
+            table, stash = _insert_hashes(table, stash, hashes)
             return pd.DataFrame(
                 {"bucket": [bucket], "table": [table.tobytes()], "stash": [stash.tobytes()]}
             )
 
-        return fold
-
-    def merge(self, state_df: DataFrame, new_df: DataFrame) -> DataFrame:
-        """Fold new ``(bucket, url_hash)`` rows into the per-bucket filters —
-        co-partitioned on the bucket key, same shuffle shape as Bloom merge."""
         return (
             state_df.groupBy("bucket")
             .cogroup(new_df.select("bucket", "url_hash").groupBy("bucket"))
-            .applyInPandas(self._fold(_insert_hashes), CUCKOO_SCHEMA)
-        )
-
-    def delete(self, state_df: DataFrame, expired_df: DataFrame) -> DataFrame:
-        """Expire ``(bucket, url_hash)`` members (recrawl). Only values that
-        were inserted may be deleted — the standard cuckoo-filter contract."""
-        return (
-            state_df.groupBy("bucket")
-            .cogroup(expired_df.select("bucket", "url_hash").groupBy("bucket"))
-            .applyInPandas(self._fold(_delete_kernel), CUCKOO_SCHEMA)
+            .applyInPandas(fold, CUCKOO_SCHEMA)
         )
 
     def probe_broadcast(self, candidates: DataFrame, state_df: DataFrame) -> DataFrame:
@@ -342,8 +278,7 @@ class CuckooState:
         the planner keeps seeing the candidates' partitioning, so the
         exact anti-join above reuses the admission exchange instead of
         re-shuffling every candidate (the Arrow form's ArrowEvalPython hid
-        it). Right while the whole filter fits executor memory; the
-        partitioned :meth:`probe` is the 10^10-URL path."""
+        it). Right while the whole filter fits executor memory."""
         n_tbl = self.table_buckets
         tables: list[bytes | None] = [None] * self.n_buckets
         stashes: list[list[int]] = [[] for _ in range(self.n_buckets)]
@@ -365,33 +300,20 @@ class CuckooState:
             "maybe_seen", cuckoo_test_expr(F.col("url_hash"), table, stash, n_tbl)
         )
 
-    def probe(self, candidates: DataFrame, state_df: DataFrame) -> DataFrame:
-        """Co-partitioned probe: each bucket's filter crosses to Python once
-        per partition, candidates keep their scheduler bucket partitioning."""
-        n_tbl = self.table_buckets
-        out_schema = StructType(
-            list(candidates.schema.fields) + [StructField("maybe_seen", BooleanType())]
-        )
-        cand_cols = [f.name for f in candidates.schema.fields]
-
-        def check(cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(cand_pdf) == 0:
-                return pd.DataFrame(columns=[*cand_cols, "maybe_seen"])
-            table = np.zeros((n_tbl, _SLOTS), dtype=np.uint16)
-            stash = np.zeros(0, dtype=np.int64)
-            hit = np.zeros(len(cand_pdf), dtype=bool)
-            h = cand_pdf["url_hash"].to_numpy(dtype=np.int64).astype(np.uint64)
-            for t_blob, s_blob in zip(
-                state_pdf.get("table", []), state_pdf.get("stash", [])
-            ):
-                table, stash = _decode(t_blob, s_blob, n_tbl)
-                hit |= _probe_kernel(table, stash, h)
-            cand_pdf = cand_pdf.copy()
-            cand_pdf["maybe_seen"] = hit
-            return cand_pdf
-
-        return (
-            candidates.groupBy("bucket")
-            .cogroup(state_df.groupBy("bucket"))
-            .applyInPandas(check, out_schema)
-        )
+    def unseen(self, candidates: DataFrame, seen: DataFrame, state_df: DataFrame) -> DataFrame:
+        """The candidates ``(…, url_canon, url_hash, bucket)`` whose
+        ``url_canon`` is not in ``seen``: the exact ``left_anti`` join, with
+        this filter's verdict (over ``state_df``) as a condition on it."""
+        probed = self.probe_broadcast(candidates, state_df)
+        # ONE anti-join whose condition carries the probe verdict. The hash
+        # lookup runs for every candidate; the condition is evaluated only on a
+        # key match, where a filter with no false negatives always holds — so
+        # the rows out are the exact anti-join's, and a maybe_seen=false row
+        # spares no lookup. (The two-branch form, definitely-new ∪ anti-joined
+        # maybe-seen, re-executed everything above the probe once per branch.)
+        seen_keys = seen.select("url_canon")
+        return probed.join(
+            seen_keys,
+            (probed["url_canon"] == seen_keys["url_canon"]) & probed["maybe_seen"],
+            "left_anti",
+        ).drop("maybe_seen")

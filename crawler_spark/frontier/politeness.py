@@ -178,7 +178,7 @@ def robots_allowed_rfc(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
-def politeness_cap(politeness: DataFrame, default_budget: int = 16) -> int:
+def politeness_cap(politeness: DataFrame, default_budget: int) -> int:
     """Max budget across the politeness dim — the literal bound that lets
     Catalyst plan the map-side WindowGroupLimit. The dim is static for a
     crawl, so compute this ONCE and pass it to every round's
@@ -191,8 +191,8 @@ def politeness_cap(politeness: DataFrame, default_budget: int = 16) -> int:
 def apply_politeness_budget(
     frontier: DataFrame,
     politeness: DataFrame,
-    default_budget: int = 16,
-    cap: int | None = None,
+    default_budget: int,
+    cap: int,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the round's frontier into (scheduled, deferred).
 
@@ -206,9 +206,9 @@ def apply_politeness_budget(
     single hot host would rank all its rows in ONE task. Two measures keep
     that off the critical path at 10^10-URL scale:
 
-    * the ``_rk <= lit(cap)`` bound (cap = the max budget across the
-      politeness dim, a tiny driver-side max) lets Catalyst plan a
-      *partial* ``WindowGroupLimit`` BEFORE the shuffle — every map task
+    * the ``_rk <= lit(cap)`` bound (cap = :func:`politeness_cap`, the
+      max budget across the politeness dim, once per crawl) lets Catalyst
+      plan a *partial* ``WindowGroupLimit`` BEFORE the shuffle — every map task
       keeps at most ``cap`` rows per host, so the post-shuffle hot-host
       partition holds ≤ cap × map_tasks rows instead of the host's whole
       frontier;
@@ -217,8 +217,6 @@ def apply_politeness_budget(
       of the ``rank > budget`` side of a full window, which would have
       forced ranking every row of the hot host anyway.
     """
-    if cap is None:
-        cap = politeness_cap(politeness, default_budget)
     joined = frontier.join(
         F.broadcast(politeness.select("host", "max_fetches_per_round")), "host", "left"
     ).withColumn(

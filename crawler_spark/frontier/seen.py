@@ -1,25 +1,20 @@
-"""URL-seen check: the exact anti-join, plus a partitioned Bloom filter.
+"""Partitioned Bloom URL-seen filter, plus mergeable distinct-URL sketches.
 
 north_rule: "deduplicated via a partitioned Bloom/cuckoo URL-seen filter".
 
-The crawl's seen check is :func:`filter_unseen` without a filter: one exact
-``left_anti`` join of the round's candidates against the seen table on
-``url_canon``. With a filter, ``filter_unseen`` returns the same rows: the
-filter's verdict only rides the anti-join's condition, so every candidate
-still probes the seen side and the filter never spares the join a lookup.
-A filter can change a row only by being wrong (a false negative re-admits a
-seen url). The crawl, the streaming crawl and the benchmark kernel run no
-filter; the cuckoo filter's registry query (``cuckoo_seen_anti_join``) is
-the one caller that passes one.
+The crawl's seen check is the exact ``left_anti`` join in
+:func:`crawler_spark.scheduler.admit`; no filter takes part in it. The
+filter that does run, the cuckoo filter of the ``cuckoo_seen_anti_join``
+registry query, lives in :mod:`crawler_spark.frontier.cuckoo`.
 
 The Bloom state is partitioned by host-bucket
 (``pmod(xxhash64(host), n_buckets)``) so each bucket's bitmap stays small
-enough to build/probe inside one Arrow batch.
+enough to build inside one Arrow batch.
 
 Bitmaps are numpy uint64 arrays stored as binary rows ``(bucket, bitmap)``
 — a plain DataFrame, checkpointable to parquet/Iceberg like any other state
-table. Build and probe are vectorized numpy bit-ops over Arrow batches (no
-per-row Python).
+table. The build is vectorized numpy bit-ops over Arrow batches and the
+probe is codegen expressions (no per-row Python).
 """
 
 from __future__ import annotations
@@ -29,9 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     IntegerType,
-    LongType,
     StructField,
     StructType,
 )
@@ -59,16 +52,8 @@ def _apply_set(bitmap: np.ndarray, hashes: np.ndarray, n_bits: int) -> None:
     np.bitwise_or.at(bitmap, words, np.uint64(1) << shifts)
 
 
-def _test_bits(bitmap: np.ndarray, hashes: np.ndarray, n_bits: int) -> np.ndarray:
-    pos = _positions(hashes, n_bits)  # (n, K)
-    words = pos >> 6
-    shifts = (pos & 63).astype(np.uint64)
-    hit = (bitmap[words] >> shifts) & np.uint64(1)
-    return hit.all(axis=1)
-
-
 def bloom_test_expr(url_hash: F.Column, bitmap: F.Column, n_bits: int) -> F.Column:
-    """Codegen Bloom membership test — the JVM twin of ``_test_bits``.
+    """Codegen Bloom membership test of the bits ``_apply_set`` sets.
 
     Replays the numpy kernel's double hashing bit-exactly on signed longs:
     ``h1 = h & 0xFFFFFFFF`` (low 32, non-negative), ``h2 = (h >>> 32) | 1``
@@ -80,7 +65,7 @@ def bloom_test_expr(url_hash: F.Column, bitmap: F.Column, n_bits: int) -> F.Colu
     word byte order makes the flat-byte view line up). Byte extraction =
     one-byte ``substr`` → latin-1 ``decode`` → ``ascii`` (0-255); all
     whole-stage codegen, no Python. NULL bitmap (bucket absent from the
-    filter) → false (definitely new), matching the numpy path."""
+    filter) → false (definitely new)."""
     h1 = url_hash.bitwiseAND(F.lit(0xFFFFFFFF))
     h2 = F.shiftrightunsigned(url_hash, 32).bitwiseOR(F.lit(1))
     verdict = None
@@ -107,9 +92,6 @@ class BloomState:
         assert bits_per_bucket % 64 == 0
         self.n_buckets = n_buckets
         self.n_bits = bits_per_bucket
-
-    def state_bytes(self) -> int:
-        return self.n_buckets * self.n_bits // 8
 
     def empty(self, spark) -> DataFrame:
         zero = bytes(self.n_bits // 8)
@@ -171,12 +153,8 @@ class BloomState:
         task; ``element_at`` by bucket returns a byte[] REFERENCE, and
         per-candidate work is K one-byte substrings. The literal rides the
         task binary exactly like the old python broadcast variable did
-        (n_buckets × bits/8; 32 × 512 KiB = 16 MiB here). At 10^10-URL
-        scale the filter is ~12 GiB and must stay partitioned →
-        :meth:`probe`. The scheduler picks per :func:`filter_unseen`'s
-        threshold. ``tests/test_plans.py`` pins the no-Python single-
-        exchange plan shape; bit-exactness vs the numpy kernel is pinned
-        in tests/test_frontier.py.
+        (n_buckets × bits/8; 32 × 512 KiB = 16 MiB here). Bit-exactness
+        vs a numpy reference is pinned in tests/test_frontier.py.
         """
         rows = bloom_df.collect()
         blobs: list[bytes | None] = [None] * self.n_buckets
@@ -187,94 +165,6 @@ class BloomState:
         return candidates.withColumn(
             "maybe_seen", bloom_test_expr(F.col("url_hash"), bitmap, self.n_bits)
         )
-
-    def probe(self, candidates: DataFrame, bloom_df: DataFrame) -> DataFrame:
-        """Adds ``maybe_seen`` boolean to candidates ``(…, bucket, url_hash)``.
-
-        Implemented as a per-bucket cogroup (NOT a join): joining the bitmap
-        column onto every candidate row would ship ``rows × bitmap_bytes``
-        through Arrow — at 10^6 rows × 512 KiB bitmaps that is hundreds of
-        GiB. Cogrouping by bucket moves each bitmap across to Python exactly
-        once per bucket partition, and the candidates are already
-        partitioned by bucket in the scheduler, so this shuffle is the
-        state-table co-partitioning, not an extra one.
-        """
-        n_bits = self.n_bits
-        out_schema = StructType(list(candidates.schema.fields) + [StructField("maybe_seen", BooleanType())])
-        cand_cols = [f.name for f in candidates.schema.fields]
-
-        def check(cand_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(cand_pdf) == 0:
-                return pd.DataFrame(columns=[*cand_cols, "maybe_seen"])
-            blobs = bloom_pdf["bitmap"].dropna() if len(bloom_pdf) else []
-            if len(blobs) == 0:
-                cand_pdf = cand_pdf.copy()
-                cand_pdf["maybe_seen"] = False
-                return cand_pdf
-            bitmap = np.zeros(n_bits // 64, dtype=np.uint64)
-            for blob in blobs:
-                bitmap |= np.frombuffer(bytes(blob), dtype=np.uint64)
-            hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
-            cand_pdf = cand_pdf.copy()
-            cand_pdf["maybe_seen"] = _test_bits(bitmap, hashes, n_bits)
-            return cand_pdf
-
-        return (
-            candidates.groupBy("bucket")
-            .cogroup(bloom_df.groupBy("bucket"))
-            .applyInPandas(check, out_schema)
-        )
-
-
-# Below this total filter size, probe via broadcast bitmaps (map-side, no
-# shuffle); above it, per-bucket cogroup keeps each bitmap on its partition.
-BLOOM_BROADCAST_MAX_BYTES = 256 << 20
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom: DataFrame | None,
-    bloom_state: BloomState | None,
-) -> DataFrame:
-    """The candidates whose ``url_canon`` is not in ``seen``: an exact
-    ``left_anti`` join.
-
-    ``candidates`` must carry (url_canon, url_hash, bucket); ``seen`` is the
-    exact seen table. With a filter (``bloom`` plus ``bloom_state``, any
-    state object with the partitioned-filter duck type ``probe`` /
-    ``probe_broadcast`` / ``state_bytes``: BloomState or
-    :class:`crawler_spark.frontier.cuckoo.CuckooState`), the result is the
-    same rows: the filter's verdict is a condition on the same anti-join,
-    so every candidate still probes the seen side.
-    """
-    # Join on url_canon ALONE: string equality is exact by itself (no
-    # reliance on the 64-bit hash, whose birthday collisions at 10^10 URLs
-    # are expected), and — decisive for the plan — the candidates arrive
-    # hash-partitioned by url_canon from the admission dedup's groupBy, so
-    # a url_canon-keyed sort-merge anti-join reuses that exchange: only the
-    # seen side shuffles. A composite (url_hash, url_canon) key would
-    # force a second full exchange of the candidates for zero extra
-    # exactness.
-    key = ["url_canon"]
-    if bloom is None or bloom_state is None:
-        return candidates.join(seen.select(*key), key, "left_anti")
-    if bloom_state.state_bytes() <= BLOOM_BROADCAST_MAX_BYTES:
-        probed = bloom_state.probe_broadcast(candidates, bloom)
-    else:
-        probed = bloom_state.probe(candidates, bloom)
-    # ONE anti-join whose condition carries the probe verdict. The hash
-    # lookup runs for every candidate; the condition is evaluated only on a
-    # key match, where a filter with no false negatives always holds — so
-    # the rows out are the exact anti-join's, and a maybe_seen=false row
-    # spares no lookup. (The two-branch form, definitely-new ∪ anti-joined
-    # maybe-seen, re-executed everything above the probe once per branch.)
-    seen_keys = seen.select(*key)
-    return probed.join(
-        seen_keys,
-        (probed["url_canon"] == seen_keys["url_canon"]) & probed["maybe_seen"],
-        "left_anti",
-    ).drop("maybe_seen")
 
 
 # ---------------------------------------------------------------------------

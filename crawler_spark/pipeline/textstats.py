@@ -445,20 +445,23 @@ def corpus_familiarity(df, id_col: str, text_col: str):
     Output: ``(id, n_tokens, sum_cnt, familiarity)`` — empty documents
     score 0.
 
-    Shape at 100 TB: explode tokens → token-keyed count with MAP-SIDE
-    partial aggregation (one exchange, vocab-sized result) → vocab
-    BROADCAST back onto the exploded stream (no fact-sized token-keyed
-    shuffle — the tfidf/inverted-postings discipline; stopword skew
-    never materializes as a hot reduce key) → per-doc sum (one doc-keyed
-    exchange, also map-side combined). The corpus total N rides the plan
-    as a scalar aggregate crossJoin, not a separate driver count() job.
+    Shape: explode tokens → token-keyed count with MAP-SIDE partial
+    aggregation (one exchange, vocab-sized result) → vocab BROADCAST back
+    onto the exploded stream (no fact-sized token-keyed shuffle — the
+    tfidf/inverted-postings discipline; stopword skew never materializes
+    as a hot reduce key) → per-doc sum (one doc-keyed exchange, also
+    map-side combined). The broadcast holds while the vocabulary fits
+    executor memory; a web-scale vocabulary with its long tail of rare
+    tokens may not. The corpus total N rides the plan as a scalar
+    aggregate crossJoin, not a separate driver count() job. Both reads
+    of the exploded tokens sit in the one returned plan, so nothing is
+    persisted: the frame is lazy, and a cache it pinned could never be
+    released.
     """
     from crawler_spark.pipeline.dedup import spread
 
-    toks = (
-        spread(df)
-        .select(F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("tok"))
-        .persist()  # scanned twice: vocab-count build + scored stream
+    toks = spread(df).select(
+        F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     big_n = vocab.agg(F.sum("cnt").alias("_n_corpus"))

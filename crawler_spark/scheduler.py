@@ -59,7 +59,6 @@ from crawler_spark.frontier.politeness import (
     politeness_cap,
     robots_allowed,
 )
-from crawler_spark.frontier.seen import filter_unseen
 
 FRONTIER_SCHEMA = StructType(
     [
@@ -333,9 +332,16 @@ def admit(
     order); the caller releases ``new_entries._assign_seq_cache``."""
     fresh = _dedup_candidates(cands, n_buckets)
     if seen is not None:
-        # the seen delta and the seq stage both read the filtered set:
-        # cache it so the anti-join runs once
-        fresh = filter_unseen(fresh, seen, None, None)
+        # Join on url_canon ALONE: string equality is exact by itself (no
+        # reliance on the 64-bit hash, whose birthday collisions at 10^10
+        # URLs are expected), and — decisive for the plan — the candidates
+        # arrive hash-partitioned by url_canon from the dedup's groupBy, so
+        # a url_canon-keyed sort-merge anti-join reuses that exchange: only
+        # the seen side shuffles. A composite (url_hash, url_canon) key
+        # would force a second full exchange of the candidates for zero
+        # extra exactness. The seen delta and the seq stage both read the
+        # filtered set: cache it so the anti-join runs once.
+        fresh = fresh.join(seen.select("url_canon"), "url_canon", "left_anti")
         fresh.persist()
     try:
         allowed = robots_allowed(fresh, robots) if robots is not None else fresh

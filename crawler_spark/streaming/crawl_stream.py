@@ -116,25 +116,25 @@ def _publish(
     with ``skip_if_empty`` an empty frame is staged but never moved into the
     watched dir, so publication is suppressed WITHOUT the separate
     persist+count() job the pre-r4 caller paid (empty batches must not publish: each would enqueue
-    under a fresh batch id and chain empty batches forever). A suppressed
-    stage is deleted on the spot (r5, ADVICE r4) so drain-terminating
-    rounds stop leaving dead from_batch=N dirs behind."""
+    under a fresh batch id and chain empty batches forever). The staging
+    dir is deleted once its parts are moved (or suppressed), so a drain
+    leaves no ``seeds`` or ``from_batch=N`` dirs behind; a crash between
+    the moves and the delete only re-stages on replay."""
     obs = Observation()
     df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
         stage_path
     )
     n = int(obs.get["n"] or 0)
-    if skip_if_empty and n == 0:
-        shutil.rmtree(stage_path, ignore_errors=True)
-        return 0
-    parts = sorted(
-        f for f in os.listdir(stage_path) if f.endswith(".parquet") and not f.startswith(".")
-    )
-    for i, part in enumerate(parts):
-        os.replace(
-            os.path.join(stage_path, part),
-            os.path.join(dest_dir, f"{prefix}-{i}.parquet"),
+    if not (skip_if_empty and n == 0):
+        parts = sorted(
+            f for f in os.listdir(stage_path) if f.endswith(".parquet") and not f.startswith(".")
         )
+        for i, part in enumerate(parts):
+            os.replace(
+                os.path.join(stage_path, part),
+                os.path.join(dest_dir, f"{prefix}-{i}.parquet"),
+            )
+    shutil.rmtree(stage_path, ignore_errors=True)
     return n
 
 

@@ -1,14 +1,12 @@
 """Cuckoo seen-filter: kernel invariants (numpy) + Spark state-table paths.
 
 Contract under test (crawler_spark/frontier/cuckoo.py):
-* no false negatives for inserted members — the property filter_unseen's
-  fast path relies on for exactness;
+* no false negatives for inserted members — the property that keeps
+  ``CuckooState.unseen`` exact;
 * bounded false-positive rate;
-* delete expires members (recrawl) and never un-seats other members when
-  fingerprints don't collide;
 * merge of two serialized states preserves membership (partial-key
   re-insertion);
-* end-to-end filter_unseen with a CuckooState equals the exact anti-join.
+* ``CuckooState.unseen`` equals the exact anti-join.
 """
 
 import numpy as np
@@ -17,11 +15,9 @@ import pytest
 from crawler_spark.frontier.cuckoo import (
     _SLOTS,
     CuckooState,
-    _delete_kernel,
     _insert_hashes,
     _probe_kernel,
 )
-from crawler_spark.frontier.seen import filter_unseen
 
 
 def _rng_hashes(seed: int, n: int) -> np.ndarray:
@@ -66,26 +62,6 @@ def test_overflow_goes_to_stash_never_lost():
     assert _probe_kernel(table, stash, members).all()
 
 
-def test_delete_expires_members_keeps_others():
-    table, stash = _empty()
-    members = _rng_hashes(5, 5000)
-    table, stash = _insert_hashes(table, stash, members)
-    gone, kept = members[::2], members[1::2]
-    table, stash = _delete_kernel(table, stash, gone)
-    # kept members still probe true (seed chosen: no fp+bucket collisions)
-    assert _probe_kernel(table, stash, kept).all()
-    # deleted ones probe false, modulo fp false positives against kept
-    assert _probe_kernel(table, stash, gone).mean() < 0.002
-
-
-def test_delete_under_overflow_roundtrip():
-    table, stash = _empty(64)
-    members = _rng_hashes(6, 400)
-    table, stash = _insert_hashes(table, stash, members)
-    table, stash = _delete_kernel(table, stash, members)
-    assert int((table != 0).sum()) == 0 and len(stash) == 0
-
-
 @pytest.fixture()
 def keyed(spark):
     def mk(rows):
@@ -102,24 +78,9 @@ def test_filter_unseen_exact_with_cuckoo(spark, keyed):
     cand_rows = seen_rows[:25] + [
         (i % 2, i * 7 + 3, f"https://h.example/q/{i}") for i in range(25)
     ]
-    out = filter_unseen(keyed(cand_rows), seen, state, cs)
+    out = cs.unseen(keyed(cand_rows), seen, state)
     got = {r["url_canon"] for r in out.collect()}
     assert got == {f"https://h.example/q/{i}" for i in range(25)}
-
-
-def test_spark_delete_readmits_urls(spark, keyed):
-    cs = CuckooState(n_buckets=2, table_buckets=1 << 8)
-    seen_rows = [(i % 2, i * 7, f"https://h.example/p/{i}") for i in range(50)]
-    seen = keyed(seen_rows)
-    state = cs.merge(cs.empty(spark), seen.select("bucket", "url_hash"))
-    expired_rows = seen_rows[:10]
-    state2 = cs.delete(state, keyed(expired_rows).select("bucket", "url_hash"))
-    probed = cs.probe_broadcast(keyed(seen_rows), state2).collect()
-    by_url = {r["url_canon"]: r["maybe_seen"] for r in probed}
-    for b, h, u in expired_rows:
-        assert by_url[u] is False  # expired -> re-admitted to the frontier
-    for b, h, u in seen_rows[10:]:
-        assert by_url[u] is True  # untouched members survive the delete
 
 
 def test_merge_of_two_states_preserves_membership(spark, keyed):
@@ -163,16 +124,3 @@ def test_jvm_broadcast_probe_stash_path_no_false_negatives(spark, keyed):
     )
     for (b, h, u), w in zip(cand_rows, want):
         assert got[u] == bool(w), (u, h)
-
-
-def test_cogroup_probe_matches_broadcast_probe(spark, keyed):
-    cs = CuckooState(n_buckets=4, table_buckets=1 << 8)
-    seen_rows = [(i % 4, i * 7, f"p{i}") for i in range(200)]
-    state = cs.merge(cs.empty(spark), keyed(seen_rows).select("bucket", "url_hash"))
-    state.persist().count()
-    cand_rows = seen_rows[::3] + [(i % 4, i * 7 + 5, f"q{i}") for i in range(100)]
-    cands = keyed(cand_rows)
-    via_bc = {(r["url_canon"], r["maybe_seen"]) for r in cs.probe_broadcast(cands, state).collect()}
-    via_cg = {(r["url_canon"], r["maybe_seen"]) for r in cs.probe(cands, state).collect()}
-    assert via_bc == via_cg
-    state.unpersist()

@@ -11,7 +11,16 @@ from crawler_spark.frontier.canon import (
     host_expr,
 )
 from crawler_spark.frontier.politeness import apply_politeness_budget, robots_allowed
-from crawler_spark.frontier.seen import BloomState, filter_unseen
+from crawler_spark.frontier.seen import BloomState, _positions
+
+
+def _test_bits(bitmap: np.ndarray, hashes: np.ndarray, n_bits: int) -> np.ndarray:
+    """Numpy Bloom membership test: the reference the JVM probe must match."""
+    pos = _positions(hashes, n_bits)  # (n, K)
+    words = pos >> 6
+    shifts = (pos & 63).astype(np.uint64)
+    hit = (bitmap[words] >> shifts) & np.uint64(1)
+    return hit.all(axis=1)
 
 
 def test_canonicalize_url():
@@ -77,7 +86,7 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
         [(int(h) % 4, int(h), f"u{h}") for h in hashes],
         "bucket int, url_hash long, url_canon string",
     )
-    probed = bs.probe(cands, bloom)
+    probed = bs.probe_broadcast(cands, bloom)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
     # unseen hashes → mostly not maybe_seen
     other = rng.integers(-(2**62), 2**62, size=500)
@@ -85,7 +94,7 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
         [(int(h) % 4, int(h), f"v{h}") for h in other],
         "bucket int, url_hash long, url_canon string",
     )
-    fp = bs.probe(cands2, bloom).filter(F.col("maybe_seen")).count()
+    fp = bs.probe_broadcast(cands2, bloom).filter(F.col("maybe_seen")).count()
     assert fp < 25  # <5% at this sizing
 
 
@@ -95,8 +104,6 @@ def test_jvm_probe_matches_numpy_kernel_bit_exact(spark):
     duplicate URL past the exactness backstop. Covers negative hashes and
     the extremes of the signed-64 range (where the unsigned-shift h2
     derivation differs between naive and correct translations)."""
-    from crawler_spark.frontier.seen import _test_bits
-
     n_bits = 1 << 14
     bs = BloomState(n_buckets=4, bits_per_bucket=n_bits)
     rng = np.random.default_rng(11)
@@ -129,23 +136,6 @@ def test_jvm_probe_matches_numpy_kernel_bit_exact(spark):
         assert got[int(h)] == want, h
     # and every seeded hash probes positive (no false negatives)
     assert all(got[int(h)] for h in probe_hashes[:150])
-
-
-def test_filter_unseen_exact_with_bloom(spark):
-    bs = BloomState(n_buckets=2, bits_per_bucket=1 << 12)
-    seen_rows = [(i % 2, i * 7, f"https://h.example/p/{i}") for i in range(50)]
-    seen = spark.createDataFrame(seen_rows, "bucket int, url_hash long, url_canon string")
-    bloom = bs.merge(bs.empty(spark), seen.select("bucket", "url_hash"))
-    # candidates: 25 seen + 25 new
-    cand_rows = seen_rows[:25] + [
-        (i % 2, i * 7 + 3, f"https://h.example/q/{i}") for i in range(25)
-    ]
-    cands = spark.createDataFrame(
-        cand_rows, "bucket int, url_hash long, url_canon string"
-    )
-    out = filter_unseen(cands, seen, bloom, bs)
-    got = {r["url_canon"] for r in out.collect()}
-    assert got == {f"https://h.example/q/{i}" for i in range(25)}
 
 
 def test_robots_allowed(spark):
@@ -229,7 +219,7 @@ def test_politeness_budget_split(spark):
     politeness = spark.createDataFrame(
         [("h1", 3)], "host string, max_fetches_per_round int"
     )
-    sched, defer = apply_politeness_budget(frontier, politeness, default_budget=16)
+    sched, defer = apply_politeness_budget(frontier, politeness, 16, cap=16)
     s = {r["url_canon"] for r in sched.collect()}
     d = {r["url_canon"] for r in defer.collect()}
     # h1: budget 3 → u0,u1,u2 (priority 0, seq order); low_prio deferred last

@@ -1413,10 +1413,14 @@ def test_corpus_familiarity_matches_python(docs_df):
 
     cnt = Counter(t for _, text in DOCS for t in text.lower().split())
     n_corpus = sum(cnt.values())
+    jsc = docs_df.sparkSession.sparkContext._jsc
+    n_persisted = jsc.getPersistentRDDs().size()
     got = {
         r["doc_id"]: (r["n_tokens"], r["sum_cnt"], r["familiarity"])
         for r in ts.corpus_familiarity(docs_df, "doc_id", "text").collect()
     }
+    # the returned frame is lazy, so nothing can release a cache it pins
+    assert jsc.getPersistentRDDs().size() == n_persisted
     assert set(got) == {d for d, _ in DOCS}
     for doc_id, text in DOCS:
         toks = text.lower().split()

@@ -163,14 +163,14 @@ def test_jd_extraction_plan_is_fused(spark):
 
 
 def test_bloom_probe_is_jvm_and_reuses_admission_exchange(spark):
-    """The broadcast Bloom probe must stay PURE JVM (r3): an Arrow/pandas
-    probe node hides the child's hash partitioning from the planner, which
-    re-exchanged every candidate of the round for the exact anti-join
-    (measured 269 MB of a 6M round's ~850 MB shuffled). Pin: (a) no Python
-    eval node anywhere in the unseen filter, (b) exactly ONE exchange of
-    the candidates side — the admission dedup's — with the bitmap join
-    arriving broadcast."""
-    from crawler_spark.frontier.seen import BloomState, filter_unseen
+    """The filtered unseen check (``CuckooState.unseen``) must stay PURE
+    JVM (r3): an Arrow/pandas probe node hides the child's hash
+    partitioning from the planner, which re-exchanged every candidate of
+    the round for the exact anti-join (measured 269 MB of a 6M round's
+    ~850 MB shuffled). Pin: (a) no Python eval node anywhere in the unseen
+    filter, (b) exactly ONE exchange of the candidates side — the admission
+    dedup's — with the filter tables riding a literal."""
+    from crawler_spark.frontier.cuckoo import CuckooState
     from crawler_spark.scheduler import _dedup_candidates
 
     cands = spark.range(1000).select(
@@ -187,16 +187,16 @@ def test_bloom_probe_is_jvm_and_reuses_admission_exchange(spark):
         F.xxhash64(F.format_string("x%d", F.col("id"))).alias("url_hash"),
         F.pmod("id", F.lit(8)).cast("int").alias("bucket"),
     )
-    bs = BloomState(8, 1 << 13)
-    bloom = bs.merge(bs.empty(spark), seen.select("bucket", "url_hash"))
-    plan = _plan(filter_unseen(cands, seen, bloom, bs))
-    # (a) the probe is expressions, not a Python eval stage (the bloom MERGE
-    # sub-plan is applyInPandas by design — assert on the probe path only:
-    # no ArrowEvalPython, which is what scalar pandas_udfs plan as)
+    cs = CuckooState(8, 1 << 10)
+    state = cs.merge(cs.empty(spark), seen.select("bucket", "url_hash"))
+    plan = _plan(cs.unseen(cands, seen, state))
+    # (a) the probe is expressions, not a Python eval stage (the filter
+    # MERGE sub-plan is applyInPandas by design — assert on the probe path
+    # only: no ArrowEvalPython, which is what scalar pandas_udfs plan as)
     assert "ArrowEvalPython" not in plan, plan
     # (b) candidate side: one exchange (the dedup groupBy), none added for
-    # the anti-join above it — the bitmaps ride an array literal (a plain
-    # Project), not a join, so only the seen side can add an exchange
+    # the anti-join above it — the filter tables ride an array literal (a
+    # plain Project), not a join, so only the seen side can add an exchange
     cand_exchanges = plan.count("Exchange hashpartitioning(url_canon")
     assert cand_exchanges <= 2, plan  # dedup + seen side, nothing extra
 

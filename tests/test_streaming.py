@@ -71,6 +71,9 @@ def test_stream_crawl_drains_to_oracle_sets(spark, corpus, tmp_path_factory):
     assert n == res["schedule"].select("url").distinct().count()
     assert n == len(oracle.schedule)
 
+    # every publish removes its staging dir once its parts are moved
+    assert os.listdir(cfg.stage_dir) == []
+
 
 def test_stream_crawl_budget_never_exceeded_per_batch(spark, corpus, tmp_path_factory):
     work = str(tmp_path_factory.mktemp("stream_budget"))
