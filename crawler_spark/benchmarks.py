@@ -37,7 +37,7 @@ from crawler_spark.frontier.canon import (
     host_expr,
     url_hash_expr,
 )
-from crawler_spark.scheduler import _release, admit, expand, fetch_round
+from crawler_spark.scheduler import _collect_seq_bounds, _release, admit, expand, fetch_round
 
 # deterministic pseudo-uniform in [0, 1): Knuth multiplicative hash mod a
 # prime — same value for a given id at any parallelism.
@@ -212,8 +212,10 @@ def frontier_round_kernel(
     )
     caches = []
     try:
-        fresh, frontier = admit(cands, seen, robots, N_BUCKETS, 0, 0)
-        caches += [fresh, frontier._assign_seq_cache]
+        fresh, frontier = admit(
+            cands, seen, robots, N_BUCKETS, 0, 0, _collect_seq_bounds(cands)
+        )
+        caches.append(fresh)
         fetched, _deferred = fetch_round(frontier, pages, politeness, BUDGET, BUDGET)
         caches += fetched._fetch_round_caches
         n_outlinks = expand(fetched, F.col("seq")).count()

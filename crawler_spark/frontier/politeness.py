@@ -29,7 +29,11 @@ def url_path_query_expr(url: Column) -> Column:
 
 
 def robots_allowed(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """Filter out URLs whose path?query starts with a disallowed prefix.
+    """The robots verdict as a column: ``frontier`` plus a boolean
+    ``allowed``, false iff the URL's path?query starts with a disallowed
+    prefix of its host. A column, not a filter, so one pass over the rows
+    serves both a caller that keeps blocked urls (the crawl remembers them
+    as seen) and one that drops them.
 
     ``robots(host, disallow_prefixes array<string>)`` is a per-host dim —
     tiny next to the frontier → broadcast join; prefix matching stays
@@ -40,17 +44,13 @@ def robots_allowed(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     joined = frontier.join(
         F.broadcast(robots.select("host", "disallow_prefixes")), "host", "left"
     )
-    disallowed = F.when(F.col("disallow_prefixes").isNull(), F.lit(False)).otherwise(
-        F.exists(
+    allowed = F.when(F.col("disallow_prefixes").isNull(), F.lit(True)).otherwise(
+        ~F.exists(
             F.col("disallow_prefixes"),
             lambda p: path.startswith(p),
         )
     )
-    return (
-        joined.withColumn("_disallowed", disallowed)
-        .filter(~F.col("_disallowed"))
-        .drop("_disallowed", "disallow_prefixes")
-    )
+    return joined.withColumn("allowed", allowed).drop("disallow_prefixes")
 
 
 #: value of a ``Disallow:`` line (leading ws / case-insensitive directive)

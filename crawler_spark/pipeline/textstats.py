@@ -309,8 +309,10 @@ def tfidf_top_terms(df, id_col: str, text_col: str, k: int = 5):
     toks = spread(df).select(
         F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("term")
     )
+    # scanned twice (df_t build + scored join) but NOT persisted: the
+    # returned frame is lazy, so nothing could release the cache; exchange
+    # reuse shares the tf shuffle between the two consumers
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.persist()  # scanned twice: df_t build + scored join
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
     # same association as the SQL twin: (tf·(N+1)) / (df+1), N+1 integer
     # before one exact int→double conversion
@@ -330,7 +332,7 @@ def tfidf_top_terms(df, id_col: str, text_col: str, k: int = 5):
     )
 
 
-def inverted_postings(df, id_col: str, text_col: str, k: int = 50, persist_tf: bool = True):
+def inverted_postings(df, id_col: str, text_col: str, k: int = 50):
     """Bounded inverted index: for every term, its document frequency and
     its top-``k`` postings (highest-tf documents, ties doc-id ascending)
     as a compact ``"id:tf"`` rank-ordered list string.
@@ -353,7 +355,10 @@ def inverted_postings(df, id_col: str, text_col: str, k: int = 50, persist_tf: b
 
     The vocab-sized ``df_t`` table then broadcasts back onto the (already
     k-bounded) posting rows — the same broadcast-df pattern as
-    :func:`tfidf_top_terms`; no fact-sized join shuffle anywhere.
+    :func:`tfidf_top_terms`; no fact-sized join shuffle anywhere. The tf
+    counts feed both consumers unpersisted (the returned frame is lazy, so
+    a cache could never be released): exchange reuse shares the tf shuffle
+    and only the post-shuffle final aggregate runs once per consumer.
     """
     from pyspark.sql import Window
 
@@ -363,15 +368,6 @@ def inverted_postings(df, id_col: str, text_col: str, k: int = 50, persist_tf: b
         F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("term")
     )
     tf = toks.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
-    if persist_tf:
-        # Scanned twice (df_t build + ranked postings). CACHE LEAK BY
-        # DESIGN (same contract as span_dedup): the block is left pinned
-        # because the returned frame is lazy — callers that invoke this
-        # repeatedly outside bench.py's quiesce should pass
-        # persist_tf=False (ReuseExchange then shares the tf shuffle and
-        # only the cheap post-shuffle final agg re-runs per consumer) or
-        # clear the cache themselves.
-        tf = tf.persist()
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
     w = Window.partitionBy("term").orderBy(F.col("tf").desc(), F.col(id_col).asc())
     ranked = (

@@ -7,7 +7,7 @@ Bulk-Synchronous-Parallel rounds, per SURVEY.md §3/§7:
     frontier ──politeness window──▶ scheduled ──join corpus──▶ fetched
         ▲                                                        │
         │                                                outlink explode
-        └── deferred ∪ (dedup → anti-join seen → robots → seq) ◀┘
+        └── deferred ∪ (dedup → anti-join seen → robots verdict → seq) ◀┘
 
 Every round is checkpointed (schedule, metrics, then frontier, seen delta
 and manifest in one checkpoint step) to parquet snapshots, so a killed job
@@ -26,10 +26,18 @@ Scale notes (10^10-URL frontier):
   admitted urls per round, manifest lists the paths) — checkpoint write
   cost per round is O(new urls), not O(total seen); Iceberg maps this to
   writeTo(seen).append();
+* admission persists ONE cache per round: the deduped unseen urls with
+  their robots verdict as a column. The seen delta is all of its rows,
+  the admitted frontier rows are its allowed ones;
 * seq assignment needs a global total order over each round's NEW urls
-  only (not the whole frontier); implemented as a two-phase rank —
-  per-partition ranks + partition-size offsets — to avoid a
-  single-partition window.
+  only (not the whole frontier). Approximate quantiles of the order key,
+  observed on the round's schedule write at no extra job, cut it into
+  ranges, one partition each; per-range ranks + range-size offsets give
+  the rank without a sampling job or a single-partition window;
+* a step whose row count the driver knows to fit one part file (the
+  frontier into the politeness window, the metrics aggregate, a state
+  snapshot) runs as ONE partition: no exchange moves its few hundred
+  rows. Above ``SNAPSHOT_ROWS_PER_PART`` rows each keeps its exchange.
 """
 
 from __future__ import annotations
@@ -86,7 +94,9 @@ METRICS_DDL = (
 )
 
 # rows per part file of a state snapshot whose row count the driver knows
-# (see _snapshot): a round of a few hundred frontier rows writes one file
+# (see _snapshot): a round of a few hundred frontier rows writes one file.
+# Also the bound of _fits_one_part: a step of at most this many rows runs
+# as one partition
 SNAPSHOT_ROWS_PER_PART = 2048
 
 # compact the append-only seen delta log whenever it reaches this many
@@ -141,6 +151,33 @@ def read_manifest(checkpoint_dir: str) -> dict | None:
         return json.load(f)
 
 
+def _fits_one_part(rows: int | None) -> bool:
+    """Whether a step of ``rows`` rows (None: unknown to the driver) fits
+    one part: ``ceil(rows / SNAPSHOT_ROWS_PER_PART) <= 1``. Such a step is
+    ``coalesce(1)``'d — a single partition satisfies any clustered
+    distribution, so the grouping, window or join above it plans no
+    exchange, and the job that exchange would have cost is not run."""
+    return rows is not None and rows <= SNAPSHOT_ROWS_PER_PART
+
+
+def _seq_bounds(spark: SparkSession, key: Column) -> Column:
+    """Aggregate column ``seq_bounds``: approximate quantiles of the
+    admission key ``key`` (nulls ignored) cutting it into
+    ``defaultParallelism`` ranges — the ``bounds`` of :func:`_assign_seq`.
+    An aggregate, so a write can carry it as an ``Observation`` at no
+    extra job; null over no rows."""
+    nparts = spark.sparkContext.defaultParallelism
+    fractions = [i / nparts for i in range(1, nparts)] or [0.5]
+    return F.percentile_approx(key, fractions).alias("seq_bounds")
+
+
+def _collect_seq_bounds(cands: DataFrame) -> list[int]:
+    """:func:`_seq_bounds` of admission candidates that no earlier write
+    observed (the seeds, the benchmark kernel's batch): one aggregate
+    over ``first_occ_a``."""
+    return cands.agg(_seq_bounds(cands.sparkSession, F.col("first_occ_a"))).first()[0] or []
+
+
 def seed_candidates(seeds: DataFrame) -> DataFrame:
     """seeds(url, priority, seq) → admission candidates ``(url_canon,
     priority, first_occ_a, first_occ_b)``: canonicalized, keyed by seed seq."""
@@ -187,53 +224,71 @@ def _dedup_candidates(cands: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def _assign_seq(allowed: DataFrame, seq_offset: int, round_added: int) -> DataFrame:
-    """Deterministic global seq for admitted urls, ordered by first
-    occurrence — TWO-PHASE rank, no single-partition global window:
+def _assign_seq(
+    fresh: DataFrame, bounds: list[int], seq_offset: int, round_added: int
+) -> DataFrame:
+    """Deterministic global seq for the ``allowed`` rows of ``fresh``,
+    ordered by first occurrence — a rank over key RANGES, no sampling job
+    and no single-partition global window:
 
-    1. range-partition + sort by the order key, so partition *p* holds a
-       contiguous key range and rows are sorted within it;
-    2. count rows per partition (tiny driver-side collect, one row per
-       partition), prefix-sum into per-partition offsets;
-    3. seq = per-partition ``row_number`` (window partitioned by
-       ``spark_partition_id()`` — parallel) + that partition's offset.
+    1. each row's range = the number of ``bounds`` ≤ its ``first_occ_a``;
+       ``repartitionById`` puts each range in its own partition (ranges
+       past ``nparts`` wrap around; :func:`_seq_bounds` makes exactly
+       ``nparts``), and the result is persisted — the round's one
+       admission cache;
+    2. one collect counts rows per range (a row per range, O(nparts), no
+       exchange: the cache is already partitioned by range), prefix-summed
+       into per-range offsets over the allowed rows;
+    3. seq = ``row_number`` over the allowed rows of each range (window
+       partitioned by range — no exchange either) + that range's offset.
 
-    A plain ``Window.orderBy(...)`` here would funnel every row of the
-    round through ONE task; at 10^8 new urls/round that task is the whole
-    job. The extra count job reads the persisted DF once — cheap next to
-    the round's joins.
+    Any sorted ``bounds`` give the same seq: a range holds every row of
+    each ``first_occ_a`` it covers, and ranges follow key order. Bounds
+    only balance the ranges, so approximate ones (:func:`_seq_bounds`)
+    are enough and a replay with other bounds assigns the same seq. A
+    plain ``Window.orderBy(...)`` here would funnel every row of the round
+    through ONE task; at 10^8 new urls/round that task is the whole job.
 
     Ordering contract: ADMISSION order only — (first_occ_a, first_occ_b) =
     (seed seq) for seeds, (parent schedule rank, in-page position) for
     outlinks. The candidate's own priority must NOT reorder admission (it
-    affects scheduling, not seq)."""
-    spark = allowed.sparkSession
-    nparts = spark.sparkContext.defaultParallelism
-    ranged = allowed.repartitionByRange(
-        nparts, "first_occ_a", "first_occ_b"
-    ).sortWithinPartitions("first_occ_a", "first_occ_b")
-    ranged = ranged.withColumn("_pid", F.spark_partition_id())
-    ranged.persist()
+    affects scheduling, not seq). Blocked rows (``allowed`` false) get no
+    seq and are not returned.
+
+    Returns the frontier rows of the allowed urls. ``_assign_seq_cache`` is
+    the cache (every row of ``fresh``, plus ``_part``), which the caller
+    unpersists after materializing the round's state; ``_assign_seq_total``
+    and ``_assign_seq_fresh``, the allowed and all row counts, are free
+    by-products of the offsets collect."""
+    nparts = fresh.sparkSession.sparkContext.defaultParallelism
+    bounds = sorted(bounds)
+    part = (
+        F.size(F.filter(F.array(*map(F.lit, bounds)).cast("array<long>"),
+                        lambda b: b <= F.col("first_occ_a")))
+        if bounds else F.lit(0)
+    )
+    cached = fresh.withColumn("_part", part).repartitionById(nparts, "_part")
+    cached.persist()
     try:
-        sizes = {
-            r["_pid"]: r["n"]
-            for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-        }
+        counts = sorted(
+            cached.groupBy("_part")
+            .agg(F.count("*").alias("n"), F.count_if("allowed").alias("n_allowed"))
+            .collect(),
+            key=lambda r: r["_part"],
+        )
     except BaseException:
-        ranged.unpersist()
+        cached.unpersist()
         raise
-    offsets, acc = {}, seq_offset
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    off_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-        ),
-        F.col("_pid"),
-    ) if offsets else F.lit(seq_offset)
-    w = Window.partitionBy("_pid").orderBy("first_occ_a", "first_occ_b")
-    out = ranged.select(
+    offsets, acc = [], seq_offset
+    for r in counts:
+        offsets += [r["_part"], acc]
+        acc += r["n_allowed"]
+    off_expr = (
+        F.element_at(F.create_map(*map(F.lit, offsets)), F.col("_part"))
+        if offsets else F.lit(seq_offset)
+    )
+    w = Window.partitionBy("_part").orderBy("first_occ_a", "first_occ_b")
+    out = cached.filter(F.col("allowed")).select(
         "url_canon",
         "host",
         "bucket",
@@ -242,11 +297,9 @@ def _assign_seq(allowed: DataFrame, seq_offset: int, round_added: int) -> DataFr
         F.lit(round_added).cast("int").alias("round_added"),
         (F.row_number().over(w).cast("long") + off_expr.cast("long") - 1).alias("seq"),
     )
-    # the caller unpersists this after materializing the round's state
-    out._assign_seq_cache = ranged
-    # row count is a free by-product of the offsets collect — callers use it
-    # instead of a second count() job over the same rows
+    out._assign_seq_cache = cached
     out._assign_seq_total = acc - seq_offset
+    out._assign_seq_fresh = sum(r["n"] for r in counts)
     return out
 
 
@@ -319,17 +372,21 @@ def admit(
     n_buckets: int,
     seq_offset: int,
     round_added: int,
+    bounds: list[int],
 ) -> tuple[DataFrame, DataFrame]:
     """Admission: candidate rows ``(url_canon, priority, first_occ_a,
     first_occ_b)`` → first-occurrence dedup → unseen filter against ``seen``
-    (skipped when ``seen`` is None) → robots → seq.
+    (skipped when ``seen`` is None) → robots verdict → seq.
 
-    Returns ``(fresh, new_entries)``. ``fresh`` is the deduped unseen set
-    before robots — the seen delta: a disallowed url is remembered so it is
-    never reconsidered, but never admitted. When filtered it is persisted,
-    and the caller releases it. ``new_entries`` are the admitted frontier
-    rows from :func:`_assign_seq` (seq from ``seq_offset`` in admission
-    order); the caller releases ``new_entries._assign_seq_cache``."""
+    Returns ``(fresh, new_entries)``. ``fresh`` is the round's one
+    admission cache: the deduped unseen urls with their robots verdict
+    (``allowed``), persisted once by :func:`_assign_seq`. It is the seen
+    delta — a disallowed url is remembered so it is never reconsidered,
+    but never admitted; the caller releases it. ``new_entries`` are the
+    admitted (allowed) frontier rows, read from that cache (seq from
+    ``seq_offset`` in admission order; ``bounds`` balance the seq ranges,
+    see :func:`_assign_seq`). ``new_entries._assign_seq_total`` and
+    ``._assign_seq_fresh`` count the admitted and the fresh urls."""
     fresh = _dedup_candidates(cands, n_buckets)
     if seen is not None:
         # Join on url_canon ALONE: string equality is exact by itself (no
@@ -339,17 +396,14 @@ def admit(
         # a url_canon-keyed sort-merge anti-join reuses that exchange: only
         # the seen side shuffles. A composite (url_hash, url_canon) key
         # would force a second full exchange of the candidates for zero
-        # extra exactness. The seen delta and the seq stage both read the
-        # filtered set: cache it so the anti-join runs once.
+        # extra exactness.
         fresh = fresh.join(seen.select("url_canon"), "url_canon", "left_anti")
-        fresh.persist()
-    try:
-        allowed = robots_allowed(fresh, robots) if robots is not None else fresh
-        new_entries = _assign_seq(allowed, seq_offset, round_added)
-    except BaseException:
-        fresh.unpersist()
-        raise
-    return fresh, new_entries
+    fresh = (
+        robots_allowed(fresh, robots) if robots is not None
+        else fresh.withColumn("allowed", F.lit(True))
+    )
+    new_entries = _assign_seq(fresh, bounds, seq_offset, round_added)
+    return new_entries._assign_seq_cache, new_entries
 
 
 def fetch_round(
@@ -452,15 +506,17 @@ def crawl(
         else:
             start_round = 0
             # within-batch first-occurrence dedup keeps the smallest seed seq
+            cands = seed_candidates(seeds)
             seeds_c, frontier = admit(
-                seed_candidates(seeds), None, robots, cfg.n_buckets, 0, 0
+                cands, None, robots, cfg.n_buckets, 0, 0, _collect_seq_bounds(cands)
             )
-            caches += [seeds_c, frontier._assign_seq_cache]
-            # free by-product of _assign_seq's offsets collect — no count()
+            caches.append(seeds_c)
+            # free by-products of _assign_seq's offsets collect — no count()
             # job; every admitted seed is a frontier row
             seq_offset = frontier_size = frontier._assign_seq_total
             frontier, seen, seen_paths = _checkpoint(
-                spark, cfg, -1, frontier, frontier_size, seeds_c, seq_offset, [], seq_offset
+                spark, cfg, -1, frontier, frontier_size, seeds_c,
+                frontier._assign_seq_fresh, [], seq_offset,
             )
             _release(caches)
 
@@ -478,11 +534,19 @@ def crawl(
             if frontier_size <= 0:
                 break
 
+            # a frontier that fits one part runs the politeness window as one
+            # partition, with no host exchange
+            if _fits_one_part(frontier_size):
+                frontier = frontier.coalesce(1)
             fetched, deferred = fetch_round(
                 frontier, corpus, politeness, cap, cfg.default_budget
             )
             caches += fetched._fetch_round_caches
 
+            # child admission key: (parent rank in schedule, in-page position).
+            # The schedule orders by (priority, seq); seq is globally unique,
+            # so priority·2^40 + seq encodes that order in one sortable long.
+            occ_a = F.col("priority").cast("long") * F.lit(1 << 40) + F.col("seq")
             schedule_log = fetched.select(
                 F.lit(rnd).alias("round"),
                 F.col("url_canon").alias("url"),
@@ -491,46 +555,21 @@ def crawl(
                 "seq",
                 "fetched",
             )
-            _write_state(schedule_log, _ckpt(cfg, rnd, "schedule"))
+            # the seq bounds of the children are quantiles of their parents'
+            # keys, observed on the schedule write (no extra job)
+            sched_obs = Observation(f"round_{rnd}_schedule")
+            bounds_agg = _seq_bounds(spark, F.when(F.col("fetched"), occ_a))
+            _write_state(schedule_log.observe(sched_obs, bounds_agg), _ckpt(cfg, rnd, "schedule"))
 
-            # child admission key: (parent rank in schedule, in-page position).
-            # The schedule orders by (priority, seq); seq is globally unique,
-            # so priority·2^40 + seq encodes that order in one sortable long.
-            cands = expand(
-                fetched, F.col("priority").cast("long") * F.lit(1 << 40) + F.col("seq")
-            )
             fresh, new_entries = admit(
-                cands, seen, robots, cfg.n_buckets, seq_offset, rnd + 1
+                expand(fetched, occ_a), seen, robots, cfg.n_buckets, seq_offset, rnd + 1,
+                sched_obs.get["seq_bounds"] or [],
             )
-            caches += [fresh, new_entries._assign_seq_cache]
+            caches.append(fresh)
             n_admitted = new_entries._assign_seq_total  # from the offsets collect
 
-            # --- metrics (per-partition lineage counters) -----------------------
-            # one aggregation over scheduled rows ∪ admitted rows: each counter
-            # counts its arm's non-null marker (count, never null, keeps the
-            # columns non-nullable). url_sketch: per-bucket HLL of admitted URLs
-            # — mergeable lineage (hll_union_agg across any rounds/buckets →
-            # distinct-URL estimate with no rescan of any round's frontier; see
-            # frontier/seen.py); null in a bucket that admitted nothing
-            metrics = (
-                fetched.select(
-                    "bucket", F.lit(1).alias("scheduled"),
-                    F.when(F.col("fetched"), 1).alias("fetch_ok"),
-                )
-                .unionByName(
-                    new_entries.select("bucket", F.lit(1).alias("admitted"), "url_canon"),
-                    allowMissingColumns=True,
-                )
-                .groupBy("bucket")
-                .agg(
-                    *[F.count(c).alias(c) for c in ("scheduled", "fetch_ok", "admitted")],
-                    F.hll_sketch_agg("url_canon", F.lit(12)).alias("url_sketch"),
-                )
-                .select(
-                    F.lit(rnd).alias("round"), "bucket", "scheduled", "fetch_ok", "admitted",
-                    F.when(F.col("admitted") > 0, F.col("url_sketch")).alias("url_sketch"),
-                )
-            )
+            # fetched rows ≤ frontier_size, new rows = n_admitted
+            metrics = _round_metrics(fetched, new_entries, rnd, frontier_size + n_admitted)
             # per-round scheduled total rides the metrics WRITE job as an
             # observation (CollectMetrics) — feeds the driver-side frontier-size
             # arithmetic that replaced the per-round limit(1).count() emptiness
@@ -548,8 +587,8 @@ def crawl(
             )
             seq_offset += n_admitted
             frontier, seen, seen_paths = _checkpoint(
-                spark, cfg, rnd, frontier_next, frontier_size, fresh, n_admitted,
-                seen_paths, seq_offset,
+                spark, cfg, rnd, frontier_next, frontier_size, fresh,
+                new_entries._assign_seq_fresh, seen_paths, seq_offset,
             )
             _release(caches)
             rnd += 1
@@ -566,6 +605,37 @@ def crawl(
         seen=seen,
         metrics=read_rounds("metrics", METRICS_DDL),
         rounds=rnd,
+    )
+
+
+def _round_metrics(fetched: DataFrame, new_entries: DataFrame, rnd: int, rows: int) -> DataFrame:
+    """Round ``rnd``'s per-bucket lineage counters: one aggregation over
+    the scheduled rows (``fetched``) ∪ the admitted rows (``new_entries``),
+    at most ``rows`` in all — one partition when they fit one part
+    (:func:`_fits_one_part`). Each counter counts its arm's non-null
+    marker (count, never null, keeps the columns non-nullable).
+    ``url_sketch``: per-bucket HLL of admitted URLs — mergeable lineage
+    (hll_union_agg across any rounds/buckets → distinct-URL estimate with
+    no rescan of any round's frontier; see frontier/seen.py); null in a
+    bucket that admitted nothing."""
+    marked = fetched.select(
+        "bucket", F.lit(1).alias("scheduled"), F.when(F.col("fetched"), 1).alias("fetch_ok"),
+    ).unionByName(
+        new_entries.select("bucket", F.lit(1).alias("admitted"), "url_canon"),
+        allowMissingColumns=True,
+    )
+    if _fits_one_part(rows):
+        marked = marked.coalesce(1)
+    return (
+        marked.groupBy("bucket")
+        .agg(
+            *[F.count(c).alias(c) for c in ("scheduled", "fetch_ok", "admitted")],
+            F.hll_sketch_agg("url_canon", F.lit(12)).alias("url_sketch"),
+        )
+        .select(
+            F.lit(rnd).alias("round"), "bucket", "scheduled", "fetch_ok", "admitted",
+            F.when(F.col("admitted") > 0, F.col("url_sketch")).alias("url_sketch"),
+        )
     )
 
 
@@ -591,8 +661,8 @@ def _checkpoint(
     is a multi-path read. A full-table rewrite per round would be
     O(|seen-so-far|) — the dominant write at 10^10 URLs — where the delta is
     O(|new this round|); with Iceberg the delta write is
-    ``writeTo(seen).append()``. It is sized by ``n_fresh``, the admitted
-    count, which undercounts by at most the robots-blocked urls.
+    ``writeTo(seen).append()``. It is sized by ``n_fresh``, the exact count
+    of ``fresh`` from admission's offsets collect.
 
     Returns ``(frontier, seen, seen_paths)`` read back from the checkpoint."""
     frontier = _snapshot(
@@ -643,15 +713,25 @@ def _snapshot(
     bucket addressable (the salt is a function of columns already in the
     row, so any reader can re-derive the layout).
 
-    ``rows``, when the driver knows the snapshot's row count (or a close
-    lower bound), sizes the write: ``min(nparts, ceil(rows /
-    SNAPSHOT_ROWS_PER_PART))`` partitions, so a small round writes one part
-    file instead of ``nparts`` near-empty ones. The (bucket, salt) layout is
-    kept at any count — a slot never spans part files. ``df`` carries both
-    ``bucket`` and ``url_hash``."""
-    if rows is not None:
-        nparts = max(1, min(nparts, -(-rows // SNAPSHOT_ROWS_PER_PART)))
-    if nparts > 1 or rows is not None:
-        df = df.repartition(nparts, "bucket", F.pmod("url_hash", F.lit(16)))
+    ``rows`` sizes the write when the driver knows it
+    (:func:`_state_layout`)."""
+    df = _state_layout(df, nparts, rows)
     df.write.mode("overwrite").parquet(path)
     return spark.read.schema(df.schema).parquet(path)
+
+
+def _state_layout(df: DataFrame, nparts: int, rows: int | None) -> DataFrame:
+    """``df`` laid out as a state snapshot is written: ``nparts``
+    partitions by (bucket, url_hash salt), or, when the driver knows the
+    row count ``rows``, ``min(nparts, ceil(rows / SNAPSHOT_ROWS_PER_PART))``
+    of them — and a snapshot that fits one part (:func:`_fits_one_part`)
+    is ``coalesce(1)``'d: one part file and no exchange. The (bucket,
+    salt) layout is kept at any count — a slot never spans part files.
+    ``df`` carries both ``bucket`` and ``url_hash``."""
+    if _fits_one_part(rows):
+        return df.coalesce(1)
+    if rows is not None:
+        nparts = min(nparts, -(-rows // SNAPSHOT_ROWS_PER_PART))
+    elif nparts <= 1:
+        return df
+    return df.repartition(nparts, "bucket", F.pmod("url_hash", F.lit(16)))

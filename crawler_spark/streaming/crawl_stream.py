@@ -63,7 +63,9 @@ from crawler_spark.scheduler import (
     FRONTIER_SCHEMA,
     SEEN_SCHEMA,
     _canonical_corpus,
+    _collect_seq_bounds,
     _release,
+    _seq_bounds,
     admit,
     expand,
     fetch_round,
@@ -157,11 +159,14 @@ def _round_fn(
         try:
             fetched, deferred = fetch_round(batch, corpus, politeness, cap, cfg.default_budget)
             caches += fetched._fetch_round_caches
+            # the children's seq bounds: quantiles of their parents' seq,
+            # observed on the schedule write
+            sched_obs = Observation()
             scheduler._write_state(
                 fetched.select(
                     F.col("url_canon").alias("url"), "host", "priority", "seq", "fetched",
                     F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                ),
+                ).observe(sched_obs, _seq_bounds(spark, F.when(F.col("fetched"), F.col("seq")))),
                 os.path.join(cfg.schedule_dir, f"batch={batch_id}"),
             )
 
@@ -177,13 +182,13 @@ def _round_fn(
             seen = spark.read.schema(SEEN_SCHEMA).parquet(*seen_deltas) if seen_deltas else None
             fresh, admitted = admit(
                 expand(fetched, F.col("seq")), seen, robots, cfg.n_buckets,
-                ((batch_id + 1) << 32) + 1, batch_id + 1,
+                ((batch_id + 1) << 32) + 1, batch_id + 1, sched_obs.get["seq_bounds"] or [],
             )
-            caches += [fresh, admitted._assign_seq_cache]
+            caches.append(fresh)
             scheduler._snapshot(
                 spark, fresh.select("url_hash", "bucket", "url_canon"),
                 os.path.join(cfg.seen_dir, f"batch={batch_id}"), cfg.n_buckets,
-                rows=admitted._assign_seq_total,
+                rows=admitted._assign_seq_fresh,
             )
 
             # feed the stream the next batch's frontier; empty-frontier
@@ -245,15 +250,18 @@ def stream_crawl(
         # the seeds are admitted once, here, as batch 0's frontier; their seen
         # delta is written before the frontier file can be consumed and before
         # the first pass creates the checkpoint (the admit-first check above)
-        seeds_fresh, frontier = admit(seed_candidates(seeds), None, robots, cfg.n_buckets, 1, 0)
+        cands = seed_candidates(seeds)
+        seeds_fresh, frontier = admit(
+            cands, None, robots, cfg.n_buckets, 1, 0, _collect_seq_bounds(cands)
+        )
         try:
             scheduler._snapshot(
                 spark, seeds_fresh.select("url_hash", "bucket", "url_canon"), seeds_seen,
-                cfg.n_buckets, rows=frontier._assign_seq_total,
+                cfg.n_buckets, rows=frontier._assign_seq_fresh,
             )
             _publish(frontier, os.path.join(cfg.stage_dir, "seeds"), cfg.frontier_in, "seeds")
         finally:
-            _release([seeds_fresh, frontier._assign_seq_cache])
+            seeds_fresh.unpersist()
 
         round_fn = _round_fn(spark, corpus, robots, politeness, cfg)
         passes = 0

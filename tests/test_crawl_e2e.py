@@ -347,30 +347,44 @@ def test_failed_round_releases_caches(spark, corpus, tmp_path_factory, monkeypat
 
 # Spark jobs of one steady round on this corpus (local[8], 8 shuffle
 # partitions): the budget this round shape was measured at.
-STEADY_ROUND_JOBS = 27
+# jobs of a steady round (politeness window → schedule write, admission,
+# metrics, frontier and seen checkpoints) and of the seed path (corpus cache,
+# seed admission, seed checkpoint, politeness cap)
+STEADY_ROUND_JOBS = 19
+SETUP_JOBS = 15
+
+
+def _crawl_jobs(spark, corpus, tmp_path_factory, rounds):
+    """Spark jobs of a ``rounds``-round crawl of the test corpus."""
+    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
+    sc = spark.sparkContext
+    group = f"crawl-job-budget-{rounds}"
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path_factory.mktemp(f"ckpt_jobs{rounds}")),
+        max_rounds=rounds, default_budget=16, n_buckets=8,
+    )
+    sc.setJobGroup(group, "crawl job budget")
+    try:
+        assert crawl(spark, pages, seeds, robots, politeness, cfg).rounds == rounds
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_steady_round_job_budget(spark, corpus, tmp_path_factory):
     """A steady round's job count, as the job-group difference between a
     3-round and a 2-round crawl, stays within the pinned budget."""
-    pages, seeds, robots, politeness = _spark_inputs(spark, corpus)
-    sc = spark.sparkContext
-
-    def jobs(rounds):
-        group = f"steady-round-budget-{rounds}"
-        cfg = CrawlConfig(
-            checkpoint_dir=str(tmp_path_factory.mktemp(f"ckpt_jobs{rounds}")),
-            max_rounds=rounds, default_budget=16, n_buckets=8,
-        )
-        sc.setJobGroup(group, "steady-round job budget")
-        try:
-            assert crawl(spark, pages, seeds, robots, politeness, cfg).rounds == rounds
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    steady = jobs(3) - jobs(2)
+    steady = _crawl_jobs(spark, corpus, tmp_path_factory, 3) - _crawl_jobs(
+        spark, corpus, tmp_path_factory, 2
+    )
     assert 0 < steady <= STEADY_ROUND_JOBS, steady
+
+
+def test_setup_job_budget(spark, corpus, tmp_path_factory):
+    """The seed path's job count — a crawl of zero rounds: it writes the
+    seed state and stops — stays within the pinned budget."""
+    setup = _crawl_jobs(spark, corpus, tmp_path_factory, 0)
+    assert 0 < setup <= SETUP_JOBS, setup
 
 
 def _plan_nodes(plan):

@@ -152,7 +152,9 @@ def test_robots_allowed(spark):
         [("a.example", ["/p/9"]), ("b.example", [])],
         "host string, disallow_prefixes array<string>",
     )
-    got = {r["url_canon"] for r in robots_allowed(frontier, robots).collect()}
+    verdict = robots_allowed(frontier, robots)
+    assert verdict.count() == 4  # a verdict column, not a filter
+    got = {r["url_canon"] for r in verdict.filter("allowed").collect()}
     assert got == {
         "https://a.example/ok",
         "https://b.example/p/9",
@@ -178,7 +180,7 @@ def test_robots_matches_path_plus_query(spark):
         [("q.example", ["/search?q="]), ("root.example", ["/"])],
         "host string, disallow_prefixes array<string>",
     )
-    got = {r["url_canon"] for r in robots_allowed(frontier, robots).collect()}
+    got = {r["url_canon"] for r in robots_allowed(frontier, robots).filter("allowed").collect()}
     assert got == {
         "https://q.example/search?lang=en",
         "https://q.example/search",

@@ -1323,6 +1323,23 @@ def test_inverted_postings_hand_case(spark):
     assert out1 == {"a": (2, "1:2"), "b": (1, "1:1"), "c": (2, "3:3")}
 
 
+def test_tfidf_and_postings_pin_no_cache(spark):
+    """Both return lazy frames, so a cache they persisted could never be
+    released: each call leaves the persisted-RDD count as it found it."""
+    docs = spark.createDataFrame(
+        [(1, "a a b"), (2, "a c"), (3, "c c c")],
+        "doc_id long, text string",
+    )
+    jsc = spark.sparkContext._jsc
+    for build in (
+        lambda: ts.tfidf_top_terms(docs, "doc_id", "text", k=2),
+        lambda: ts.inverted_postings(docs, "doc_id", "text", k=2),
+    ):
+        before = jsc.getPersistentRDDs().size()
+        assert build().count() > 0
+        assert jsc.getPersistentRDDs().size() == before
+
+
 def test_pii_redact_hand_case(spark):
     docs = spark.createDataFrame(
         [

@@ -64,10 +64,10 @@ def _frontier_df(spark, n=200, hosts=5):
 
 
 def test_assign_seq_has_no_single_partition_exchange(spark):
-    """The global admission-order rank is two-phase (range partition +
-    per-partition row_number + offsets) — a plain global window would show
-    up here as `Exchange SinglePartition`, the one-task bottleneck that
-    kills a 10^8-URL round."""
+    """The global admission-order rank is per key range (range partition
+    from explicit bounds + per-range row_number + offsets) — a plain global
+    window would show up here as `Exchange SinglePartition`, the one-task
+    bottleneck that kills a 10^8-URL round."""
     cands = _frontier_df(spark).select(
         "url_canon",
         "host",
@@ -76,16 +76,17 @@ def test_assign_seq_has_no_single_partition_exchange(spark):
         "priority",
         F.col("seq").alias("first_occ_a"),
         F.lit(0).cast("long").alias("first_occ_b"),
+        F.lit(True).alias("allowed"),
     )
-    out = _assign_seq(cands, 0, 0)
-    plan = _plan(out)
-    assert "SinglePartition" not in plan, plan
-    # sanity: it still produces a dense 0..n-1 seq
-    seqs = sorted(r["seq"] for r in out.select("seq").collect())
-    assert seqs == list(range(200))
-    cache = getattr(out, "_assign_seq_cache", None)
-    if cache is not None:
-        cache.unpersist()
+    out = _assign_seq(cands, [50, 100, 150], 0, 0)
+    try:
+        plan = _plan(out)
+        assert "SinglePartition" not in plan, plan
+        # sanity: it still produces a dense 0..n-1 seq
+        seqs = sorted(r["seq"] for r in out.select("seq").collect())
+        assert seqs == list(range(200))
+    finally:
+        out._assign_seq_cache.unpersist()
 
 
 def test_politeness_window_has_no_single_partition_exchange(spark):
@@ -139,6 +140,45 @@ def test_small_state_snapshot_writes_one_part_file(spark, tmp_path):
     snap = _snapshot(spark, _frontier_df(spark), path, 8, rows=200)
     assert len(glob.glob(f"{path}/part-*.parquet")) == 1
     assert snap.count() == 200
+
+
+def _shuffles(df) -> list[str]:
+    """The shuffle exchanges of ``df``'s plan (a broadcast is not one)."""
+    plan = _plan(df, "simple")
+    return [ln for ln in plan.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
+
+
+def test_small_steps_plan_no_exchange_large_ones_keep_theirs(spark):
+    """The one-partition rule: a step whose row count the driver knows to
+    fit one part file runs as one partition, so the politeness window,
+    the metrics aggregate and the state snapshot plan no shuffle at all;
+    above the bound each keeps its exchange."""
+    from crawler_spark import scheduler as sch
+
+    politeness = spark.createDataFrame([], "host string, max_fetches_per_round int")
+    frontier = _frontier_df(spark)
+    fetched = frontier.withColumn("fetched", F.lit(True))
+    small, large = sch.SNAPSHOT_ROWS_PER_PART, sch.SNAPSHOT_ROWS_PER_PART + 1
+    assert sch._fits_one_part(small) and not sch._fits_one_part(large)
+    assert not sch._fits_one_part(None)
+
+    # crawl() coalesces the frontier whose size it knows before the window
+    scheduled, _ = apply_politeness_budget(frontier.coalesce(1), politeness, 4, cap=4)
+    assert not _shuffles(scheduled)
+    assert not _shuffles(sch._round_metrics(fetched, frontier, 0, small))
+    assert not _shuffles(sch._state_layout(frontier, 8, small))
+
+    scheduled, _ = apply_politeness_budget(frontier, politeness, 4, cap=4)
+    assert any("hashpartitioning(host" in ln for ln in _shuffles(scheduled))
+    assert any(
+        "hashpartitioning(bucket" in ln
+        for ln in _shuffles(sch._round_metrics(fetched, frontier, 0, large))
+    )
+    for rows in (large, None):
+        assert any(
+            "hashpartitioning(bucket" in ln and "pmod(url_hash" in ln
+            for ln in _shuffles(sch._state_layout(frontier, 8, rows))
+        )
 
 
 def test_jd_extraction_plan_is_fused(spark):

@@ -96,3 +96,60 @@ def test_frontier_round_kernel_smoke(spark):
     ):
         assert key in r, key
     assert _persisted(spark) == before
+
+
+def test_assign_seq_dense_in_admission_order_for_any_bounds(spark):
+    """``_assign_seq`` ranks the allowed rows densely from ``seq_offset`` in
+    (first_occ_a, first_occ_b) order whatever the bounds — empty,
+    duplicated, all below or above the keys, one per key — and blocked
+    rows get no seq."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from crawler_spark.scheduler import _assign_seq
+
+    def bounds_for(kind, keys, extra):
+        if kind == "empty":
+            return []
+        if kind == "duplicated":
+            return sorted(extra + extra)
+        if kind == "below":
+            return [min(keys, default=0) - 1 - x for x in extra]
+        if kind == "above":
+            return [max(keys, default=0) + 1 + x for x in extra]
+        if kind == "per_key":
+            return sorted(set(keys))
+        return extra
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        rows=st.dictionaries(
+            st.tuples(st.integers(0, 30), st.integers(0, 4)), st.booleans(), max_size=40
+        ),
+        kind=st.sampled_from(["empty", "duplicated", "below", "above", "per_key", "random"]),
+        extra=st.lists(st.integers(-5, 35), max_size=6),
+        seq_offset=st.integers(0, 1 << 40),
+    )
+    def check(rows, kind, extra, seq_offset):
+        cands = spark.createDataFrame(
+            [
+                (f"https://h.example/{a}/{b}", "h.example", 0, a * 10 + b, 0, a, b, ok)
+                for (a, b), ok in rows.items()
+            ],
+            "url_canon string, host string, bucket int, url_hash long, priority int, "
+            "first_occ_a long, first_occ_b long, allowed boolean",
+        )
+        out = _assign_seq(cands, bounds_for(kind, [a for a, _ in rows], extra), seq_offset, 3)
+        try:
+            got = {r["url_canon"]: r["seq"] for r in out.collect()}
+        finally:
+            out._assign_seq_cache.unpersist()
+        allowed = sorted(k for k, ok in rows.items() if ok)
+        want = {f"https://h.example/{a}/{b}": seq_offset + i for i, (a, b) in enumerate(allowed)}
+        assert got == want
+        assert out._assign_seq_total == len(allowed)
+        assert out._assign_seq_fresh == len(rows)
+
+    before = _persisted(spark)
+    check()
+    assert _persisted(spark) == before
