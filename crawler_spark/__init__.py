@@ -19,4 +19,6 @@ From-scratch reimplementation of the capabilities of songshine/crawler
                   similarity search, text analysis, multimodal plumbing).
 """
 
+from crawler_spark import _zipcache  # noqa: F401  (first: patches zipimport)
+
 __version__ = "0.1.0"

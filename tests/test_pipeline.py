@@ -1335,9 +1335,9 @@ def test_tfidf_and_postings_pin_no_cache(spark):
         lambda: ts.tfidf_top_terms(docs, "doc_id", "text", k=2),
         lambda: ts.inverted_postings(docs, "doc_id", "text", k=2),
     ):
-        before = jsc.getPersistentRDDs().size()
+        before = set(jsc.getPersistentRDDs().keySet())
         assert build().count() > 0
-        assert jsc.getPersistentRDDs().size() == before
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 
 def test_pii_redact_hand_case(spark):
@@ -1431,13 +1431,13 @@ def test_corpus_familiarity_matches_python(docs_df):
     cnt = Counter(t for _, text in DOCS for t in text.lower().split())
     n_corpus = sum(cnt.values())
     jsc = docs_df.sparkSession.sparkContext._jsc
-    n_persisted = jsc.getPersistentRDDs().size()
+    persisted = set(jsc.getPersistentRDDs().keySet())
     got = {
         r["doc_id"]: (r["n_tokens"], r["sum_cnt"], r["familiarity"])
         for r in ts.corpus_familiarity(docs_df, "doc_id", "text").collect()
     }
     # the returned frame is lazy, so nothing can release a cache it pins
-    assert jsc.getPersistentRDDs().size() == n_persisted
+    assert set(jsc.getPersistentRDDs().keySet()) - persisted == set()
     assert set(got) == {d for d, _ in DOCS}
     for doc_id, text in DOCS:
         toks = text.lower().split()
